@@ -7,7 +7,7 @@ whole-stage codegen; no Python UDFs in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -130,3 +130,33 @@ def tile_id(lon: Column, lat: Column) -> Column:
     h = F.floor((x - F.lit(_X_MIN)) / F.lit(_TILE_SIZE)).cast("int")
     v = F.floor((F.lit(_Y_MAX) - y) / F.lit(_TILE_SIZE)).cast("int")
     return F.format_string("h%02dv%02d", h, v)
+
+
+def order_struct(order, payload=()) -> Column:
+    """The one best-row-per-key ordering: ``struct(o1 IS NULL, o1,
+    o2 IS NULL, o2, …, payload…)``. Comparing these structs orders rows
+    by the ``order`` columns ascending with NULLs LAST in every column
+    (the flag ranks a NULL after any value; a bare struct compare would
+    put it first), then by payload. The caller makes ``order`` a total
+    order — its last column breaks ties — so the payload rides along and
+    never decides. Descending columns are passed negated. Items are
+    column names or aliased Columns; the alias names the field."""
+    fields = []
+    for i, c in enumerate(order):
+        col = F.col(c) if isinstance(c, str) else c
+        fields += [col.isNull().alias(f"_null{i}"), c]
+    return F.struct(*fields, *payload)
+
+
+def top1(df: DataFrame, keys, order, payload=(), aggs=()) -> DataFrame:
+    """First row per ``keys`` under ``order`` (see `order_struct`): one
+    ``groupBy(keys).agg(min(order_struct))`` — partial-aggregable, so
+    each task ships one candidate per key instead of shuffling every
+    row into a window. Returns the keys, then the order and payload
+    columns of the winning row, then any extra ``aggs`` computed in the
+    same groupBy."""
+    best = df.groupBy(*keys).agg(
+        F.min(order_struct(order, payload)).alias("_top1"), *aggs
+    )
+    flags = [f"_null{i}" for i in range(len(order))]
+    return best.select(*keys, "_top1.*", *best.columns[len(keys) + 1 :]).drop(*flags)

@@ -11,9 +11,10 @@ side: the J1 join never shuffles the big current-period side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalars import top1
 from ..model import NODATA_SENTINEL
 
 
@@ -110,19 +111,20 @@ def mosaic_coalesce(tiles: DataFrame) -> DataFrame:
     file_order wins (reference `Numeric.choose(nodata_test, (src, dst))`,
     convertmodis.py:102-103 — later tiles fill only nodata cells).
 
-    Implemented as min_by over non-null candidates per cell — an explicit
-    deterministic tiebreaker, NOT groupBy().first() (partition-order
-    nondeterminism, SURVEY §7.4). One shuffle on the cell key.
+    Implemented as `top1` over non-null candidates per cell, ordered by
+    (file_order, tile_id) — an explicit deterministic tiebreaker, NOT
+    groupBy().first() (partition-order nondeterminism, SURVEY §7.4) —
+    so value and source_tile always come from the same tile. One
+    shuffle on the cell key.
     """
     nn = tiles.filter(F.col("value").isNotNull())
-    return (
-        nn.groupBy("y", "x")
-        .agg(
-            F.expr("min_by(value, file_order)").alias("value"),
-            F.expr("min_by(tile_id, file_order)").alias("source_tile"),
-            F.count("*").alias("n_candidates"),
-        )
-    )
+    return top1(
+        nn,
+        ["y", "x"],
+        ["file_order", F.col("tile_id").alias("source_tile")],
+        ["value"],
+        aggs=[F.count("*").alias("n_candidates")],
+    ).select("y", "x", "value", "source_tile", "n_candidates")
 
 
 def extent_union(tiles: DataFrame) -> DataFrame:
@@ -142,11 +144,6 @@ def latest_available(catalog: DataFrame) -> DataFrame:
     return catalog.filter(F.col("available")).agg(F.max("date").alias("latest"))
 
 
-def first_feature(df: DataFrame, order_col: str) -> DataFrame:
-    """O3: deterministic limit(1) (reference shp[0], catalog head)."""
-    return df.orderBy(order_col).limit(1)
-
-
 def time_partition_paths(grid: DataFrame, namespace_col: str = "namespace") -> DataFrame:
     """K1 naming convention: {namespace}/{namespace}_{ISO}.000Z.tif
     (ecmwf_opendata/__init__.py:306-314) — the timestamp-in-filename IS the
@@ -156,17 +153,3 @@ def time_partition_paths(grid: DataFrame, namespace_col: str = "namespace") -> D
         "path",
         F.format_string("%s/%s_%s.tif", F.col(namespace_col), F.col(namespace_col), iso),
     )
-
-
-def window_rank_latest(grid: DataFrame) -> DataFrame:
-    """Latest value per cell via row_number over time desc — the engine's
-    'current state of the grid' view. Partitions additionally by
-    ``namespace``/``level`` when the frame carries them (review r11:
-    otherwise one arbitrary namespace's row silently wins per cell), and
-    breaks exact-time ties deterministically on ``value`` so repeated
-    runs return the same 'current state'."""
-    extra = [c for c in ("namespace", "level") if c in grid.columns]
-    w = Window.partitionBy("variable", "y", "x", *extra).orderBy(
-        F.desc("time"), F.asc_nulls_last("value")
-    )
-    return grid.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")

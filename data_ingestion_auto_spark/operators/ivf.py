@@ -9,10 +9,11 @@ Spark-first shape:
   cosine queries) so every distance/centroid computation is exact bigint
   arithmetic — k-means on floats is reduce-order nondeterministic across
   runs/engines, k-means on ints is bit-stable anywhere;
-- each Lloyd iteration is: one broadcast of k centroids, one map-side
-  nearest-centroid assignment (zip_with/aggregate — codegen, no UDF), one
-  (cluster, dim) aggregation; centroids (k×dim ints — index METADATA, not
-  data) come back to the driver exactly like any ML model state;
+- each Lloyd iteration is: one map-side nearest-centroid projection
+  against the k centroids inlined as literals (zip_with/aggregate —
+  codegen, no UDF, no join), one wide per-cluster aggregation;
+  centroids (k×dim ints — index METADATA, not data) come back to the
+  driver exactly like any ML model state;
 - probing: a query searches only its ``nprobe`` nearest clusters — the
   candidate join is an equi-join on cluster id, linear in corpus size.
 
@@ -25,14 +26,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
 from ..checkpoints import ckpt, ckpt_local
+from ..functions.scalars import order_struct, top1
 
 # TRY_CAST, not CAST (review r11): Spark 4 runs ANSI mode by default, so
 # a single NaN/Infinity component in one upstream embedding would
 # otherwise throw CAST_INVALID_INPUT and kill the whole build/ingest job.
 # A non-finite component quantizes to NULL; NULL poisons that vector's
-# dist²/norm, which ranks it LAST (asc_nulls_last argmin, NULL-guarded
-# cosine below) instead of crashing the pipeline.
+# dist²/norm, which ranks it LAST (the `order_struct` NULL flag in the
+# argmins, the NULL-guarded cosine below) instead of crashing the
+# pipeline.
 _QUANT = "transform({col}, x -> TRY_CAST(round(CAST(x AS DOUBLE) * 10000.0) AS BIGINT))"
 _DIST2 = "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)"
 _DOT = "aggregate(zip_with(qq, qvec, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
@@ -41,6 +45,27 @@ _NRM = "aggregate({v}, 0L, (acc, x) -> acc + x * x)"
 
 def quantize(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     return emb.select(F.col(id_col), F.expr(_QUANT.format(col=vec_col)).alias("qvec"))
+
+
+def _lit_vec(vec) -> str:
+    """A driver-held vector as a BIGINT array literal. A NULL component
+    (a non-finite input that TRY_CAST quantized to NULL) or a NULL
+    vector stays NULL, so every dist² against it is NULL and the
+    `order_struct` flag ranks it last instead of crashing on int(None)."""
+    if vec is None:
+        return "CAST(NULL AS array<bigint>)"
+    elems = ",".join("CAST(NULL AS BIGINT)" if v is None else f"{int(v)}L" for v in vec)
+    return f"CAST(array({elems}) AS array<bigint>)"
+
+
+def _cent_rows(centroids: DataFrame) -> list:
+    """A stored (cluster_id, cvec) table → driver-held centroid rows,
+    sorted by cluster id. k×dim ints is bounded model state."""
+    return sorted(
+        ((r["cluster_id"], None if r["cvec"] is None else list(r["cvec"]))
+         for r in centroids.select("cluster_id", "cvec").collect()),
+        key=lambda t: t[0],
+    )
 
 
 def cent_df(spark, cent_rows) -> DataFrame:
@@ -55,69 +80,37 @@ def cent_df(spark, cent_rows) -> DataFrame:
     if not cent_rows:
         return spark.createDataFrame([], "cluster_id int, cvec array<bigint>")
     vals = ", ".join(
-        f"(CAST({int(cid)} AS INT), CAST(array({','.join(str(int(v)) for v in vec)}) AS array<bigint>))"
-        for cid, vec in cent_rows
+        f"(CAST({int(cid)} AS INT), {_lit_vec(vec)})" for cid, vec in cent_rows
     )
     return spark.sql(f"SELECT cluster_id, cvec FROM (VALUES {vals}) AS t(cluster_id, cvec)")
 
 
-def _assign(vectors: DataFrame, centroids: DataFrame, id_col: str) -> DataFrame:
-    """Nearest centroid per vector: broadcast k centroids, map-side dist²,
-    deterministic argmin (ties → smallest cluster id; NULL dist² — a
-    non-finite vector — ranks last, never winning the argmin).
-
-    This is the DataFrame-centroid form (stored centroid tables, frozen
-    models read from parquet). When the centroids are already
-    driver-held rows, `_assign_lit` below produces the identical output
-    with NO join and NO exchange."""
-    d = vectors.crossJoin(F.broadcast(centroids)).withColumn(
-        "dist2", F.expr(_DIST2.format(a="qvec", b="cvec"))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.asc_nulls_last("dist2"), "cluster_id")
-    return (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, "qvec", "cluster_id", "dist2")
-    )
-
-
-def _assign_lit(vectors: DataFrame, cent_rows, id_col: str) -> DataFrame:
-    """`_assign` for DRIVER-HELD centroids (optimization r14, guide
-    §2.4 — remove shuffles outright): the k×dim model is inlined as
-    literal arrays, so nearest-centroid is one PROJECTION — k dist²
-    expressions folded by least() over (dist2, cluster_id) structs —
-    with no crossJoin, no window, and no exchange on ``id_col``. Every
-    Lloyd iteration and every model-memo write previously paid a
-    row_number window over n×k joined rows to pick each vector's
-    argmin; the projection computes the same argmin map-side.
-
-    Bit-equivalence with `_assign` (pinned by tests/test_opt_r14.py):
-    same _DIST2 integer arithmetic against the same centroid values;
-    struct ordering (dist2 ASC, cluster_id ASC) replays the window's
-    (asc_nulls_last(dist2), cluster_id) because dist² is NULL only when
-    the VECTOR is null-poisoned — the literal cvecs are complete ints —
-    so per row the k dist² values are all-NULL or all-non-NULL: ties
-    and the all-NULL case both resolve to the smallest cluster_id under
-    either ordering."""
+def _assign(vectors: DataFrame, cent_rows, id_col: str) -> DataFrame:
+    """Nearest centroid per vector, for DRIVER-HELD centroid rows (a
+    stored centroid table is collected with `_cent_rows` first): the
+    k×dim model is inlined as literal arrays, so the argmin is one
+    PROJECTION — the ``least`` of k `order_struct`s over (dist2,
+    cluster_id) — with no join, no window and no exchange. Ties go to
+    the smallest cluster id. A NULL dist² ranks last: it arises from a
+    non-finite component in the vector or the centroid, or from a
+    length mismatch (zip_with pads the shorter side with NULL)."""
     if not cent_rows:
-        return _assign(
-            vectors, cent_df(vectors.sparkSession, cent_rows), id_col
-        )
-    structs = []
-    for cid, vec in cent_rows:
-        arr = f"array({','.join(str(int(v)) + 'L' for v in vec)})"
-        structs.append(
-            f"named_struct('dist2', {_DIST2.format(a='qvec', b=arr)}, "
-            f"'cluster_id', CAST({int(cid)} AS INT))"
-        )
-    best = f"least({', '.join(structs)})" if len(structs) > 1 else structs[0]
-    return vectors.select(
-        F.col(id_col), "qvec", F.expr(best).alias("_best")
-    ).select(
-        id_col,
-        "qvec",
-        F.col("_best.cluster_id").alias("cluster_id"),
-        F.col("_best.dist2").alias("dist2"),
+        return vectors.select(
+            id_col,
+            "qvec",
+            F.lit(None).cast("int").alias("cluster_id"),
+            F.lit(None).cast("bigint").alias("dist2"),
+        ).where(F.lit(False))
+    cands = [
+        order_struct([
+            F.expr(_DIST2.format(a="qvec", b=_lit_vec(vec))).alias("dist2"),
+            F.lit(int(cid)).cast("int").alias("cluster_id"),
+        ])
+        for cid, vec in cent_rows
+    ]
+    best = F.least(*cands) if len(cands) > 1 else cands[0]
+    return vectors.select(id_col, "qvec", best.alias("_best")).select(
+        id_col, "qvec", "_best.cluster_id", "_best.dist2"
     )
 
 
@@ -174,56 +167,44 @@ def _route_probe_rank(
     )
 
 
-def _update(assigned: DataFrame, dim: int | None = None) -> DataFrame:
-    """New centroid = per-dimension integer mean of the cluster's member
-    vectors. ``sum(v) div count(v)`` stays in BIGINT end-to-end — a DOUBLE
-    division then truncation would lose exactness once a cluster's
-    per-dimension sum exceeds 2^53, breaking the bit-determinism claim
-    (round-2 advice).
+def _update(vectors: DataFrame, keys: list[str]):
+    """The Lloyd update step of one training call over ``vectors``:
+    returns ``step(assigned) -> (keys…, cvec)``, the per-dimension
+    integer mean of each cluster's member vectors. ``sum(v) div
+    count(v)`` stays in BIGINT end-to-end — a DOUBLE division then
+    truncation would lose exactness once a cluster's per-dimension sum
+    exceeds 2^53, breaking the bit-determinism claim (round-2 advice).
 
-    With ``dim`` known (the training loops learn it from the collected
-    init rows), the per-dimension means run as ``dim`` WIDE aggregates
-    in ONE groupBy(cluster_id) — map-side partial agg, a single exchange
-    of k×dim partial states — instead of posexplode → n×dim rows →
-    (cluster, pos) exchange → second (cluster) exchange (optimization
-    r14, guide §2.3 "aggregate before you shuffle"). Exact equivalence
-    with the explode path, including degenerate corpora
-    (tests/test_opt_r14.py): try_element_at is NULL exactly where the
-    explode emitted nothing (short vector) or a NULL element, and
-    sum/count skip NULLs, so each mean is identical (an all-NULL
-    dimension yields NULL div 0 = NULL, the same NULL the explode path
-    collects); positions are array prefixes, so the explode path's
-    "skip positions no member reaches" is slice(..., max(size(qvec)));
-    a cluster whose members are ALL null-vectors produced no explode
-    rows at all, hence the isNotNull filter on that max."""
-    if dim is not None:
-        aggs = [
-            F.expr(
-                f"sum(try_element_at(qvec, {i + 1})) "
-                f"div count(try_element_at(qvec, {i + 1}))"
-            ).alias(f"_c{i}")
-            for i in range(dim)
-        ]
-        wide = assigned.groupBy("cluster_id").agg(
-            F.expr("max(size(qvec))").alias("_msz"), *aggs
-        )
-        arr = ",".join(f"_c{i}" for i in range(dim))
+    The width is learned ONCE here, from the corpus's longest vector —
+    not from the init rows, which may all be shorter than some member.
+    Each step then runs the per-dimension means as that many WIDE
+    aggregates in ONE groupBy(keys): map-side partial aggregation, a
+    single exchange of k×dim partial states. try_element_at is NULL past
+    a short vector's end and sum/count skip NULLs, so a cluster's
+    centroid is as long as its longest member (``slice`` to its max
+    size) and a dimension with only NULL members is NULL. A cluster
+    whose members are all NULL vectors has a NULL max size and drops out,
+    as does an empty cluster (tests/test_opt_r14.py pins this against
+    the posexplode reference)."""
+    width = vectors.select(F.max(F.size("qvec"))).first()[0]
+    dim = max(width or 0, 1)
+    means = [
+        F.expr(
+            f"sum(try_element_at(qvec, {i + 1})) div count(try_element_at(qvec, {i + 1}))"
+        ).alias(f"_c{i}")
+        for i in range(dim)
+    ]
+    arr = ",".join(f"_c{i}" for i in range(dim))
+
+    def step(assigned: DataFrame) -> DataFrame:
         return (
-            wide.filter(F.col("_msz").isNotNull())
-            .select(
-                "cluster_id",
-                F.expr(
-                    f"slice(array({arr}), 1, least(_msz, {dim}))"
-                ).alias("cvec"),
-            )
+            assigned.groupBy(*keys)
+            .agg(F.expr("max(size(qvec))").alias("_msz"), *means)
+            .filter(F.col("_msz").isNotNull())
+            .select(*keys, F.expr(f"slice(array({arr}), 1, least(_msz, {dim}))").alias("cvec"))
         )
-    dims = assigned.select("cluster_id", F.posexplode("qvec").alias("pos", "v"))
-    per_dim = dims.groupBy("cluster_id", "pos").agg(
-        F.expr("sum(v) div count(v)").alias("cv")
-    )
-    return per_dim.groupBy("cluster_id").agg(
-        F.expr("transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)").alias("cvec")
-    )
+
+    return step
 
 
 def kmeans_lite(
@@ -236,7 +217,7 @@ def kmeans_lite(
     """Deterministic Lloyd iterations over quantized vectors. Init:
     centroids = the k smallest ids (deterministic, engine-independent).
     Returns (assignments DataFrame, centroid rows list). Centroids are
-    collected per iteration (k×dim ints) and re-broadcast — bounded model
+    collected per iteration (k×dim ints) and re-inlined — bounded model
     state, the same pattern as MLlib's driver-held coefficients."""
     spark = emb.sparkSession
     # Materialize the quantized vectors ONCE: the init collect, every
@@ -251,36 +232,28 @@ def kmeans_lite(
     # (optimization r14): three model variants train on the identical
     # embeddings frame, and each paid its own quantize+checkpoint job —
     # same-invocation amortization only (the cache dies with the
-    # session object; nothing persists across runs), keyed by the
-    # frame's semantic hash so a different corpus/projection misses.
+    # session object; nothing persists across runs). The key's 32-bit
+    # semantic hash can collide, so a hit is reused only when its stored
+    # source frame has the same semantics as ``emb``.
     cache = getattr(spark, "_graft_quant_cache", None)
     if cache is None:
         cache = {}
         spark._graft_quant_cache = cache
     key = (id_col, vec_col, emb.semanticHash())
-    vectors = cache.get(key)
-    if vectors is None:
+    hit = cache.get(key)
+    if hit is not None and hit[0].sameSemantics(emb):
+        vectors = hit[1]
+    else:
         vectors = ckpt(quantize(emb, id_col, vec_col))
-        cache[key] = vectors
-    init = (
-        vectors.orderBy(id_col)
-        .limit(k)
-        .collect()
-    )
-    cent_rows = [(i, list(r["qvec"])) for i, r in enumerate(init)]
-    # dim is model state the init collect already holds; it buys the
-    # wide-aggregate _update (one exchange per iteration instead of
-    # explode + two) and the literal-centroid map-side _assign (no
-    # window exchange at all) — optimization r14, same outputs.
-    dim = max((len(v) for _, v in cent_rows if v is not None), default=None)
+        cache[key] = (emb, vectors)
+    init = vectors.orderBy(id_col).limit(k).collect()
+    cent_rows = [
+        (i, None if r["qvec"] is None else list(r["qvec"])) for i, r in enumerate(init)
+    ]
+    update = _update(vectors, ["cluster_id"])
     for _ in range(iters):
-        assigned = _assign_lit(vectors, cent_rows, id_col)
-        cent_rows = [
-            (r["cluster_id"], list(r["cvec"]))
-            for r in _update(assigned, dim=dim).collect()
-        ]
-        cent_rows.sort()
-    return _assign_lit(vectors, cent_rows, id_col), cent_rows
+        cent_rows = _cent_rows(update(_assign(vectors, cent_rows, id_col)))
+    return _assign(vectors, cent_rows, id_col), cent_rows
 
 
 def ivf_topk(
@@ -415,9 +388,9 @@ def append_to_ivf_index(
     is first restricted to the batch's routed cluster_ids (a broadcast
     semi-filter over the bucketed scan), making the anti-join
     probed-list-sized, corpus-size-independent."""
-    centroids = spark.table(f"{table}_centroids")
+    cent_rows = _cent_rows(spark.table(f"{table}_centroids"))
     routed = ckpt_local(  # read twice: cluster set + admission/append
-        _assign(quantize(batch_emb, id_col, vec_col), centroids, id_col).select(
+        _assign(quantize(batch_emb, id_col, vec_col), cent_rows, id_col).select(
             id_col, "qvec", "cluster_id"
         )
     )
@@ -484,43 +457,20 @@ def retire_from_ivf_index(
 def _assign_grouped(vectors: DataFrame, centroids: DataFrame, id_col: str) -> DataFrame:
     """Nearest FINE centroid within each vector's own coarse group: an
     equi-join on group_id (per-key candidate set = that group's fine
-    centroids), map-side dist², deterministic argmin. Unlike ``_assign``
-    the centroid table is a DataFrame joined by key — nothing is
-    collected to the driver, so the total centroid count may scale with
-    the corpus.
-
-    The argmin is a partial-aggregable min over
-    struct(dist2 IS NULL, dist2, fine_id, …) — the leading NULL flag
-    replays the old row_number window's asc_nulls_last exactly (a NULL
-    dist² can be per-centroid here when a degenerate fine centroid
-    carries a NULL dimension, so the all-or-none argument of
-    `_assign_lit` does not apply and the flag is load-bearing), and
-    (dist2, fine_id) is unique within a vector's group so trailing
-    payload fields never participate in the ordering. Map-side partial
-    aggregation ships one candidate per vector per task instead of
-    shuffling all n×k joined rows into a window (optimization r14,
-    guide §2.3)."""
-    d = (
-        vectors.join(centroids, "group_id")
-        .withColumn("_d2", F.expr(_DIST2.format(a="qvec", b="cvec")))
-        .select(
-            F.col(id_col),
-            F.struct(
-                F.col("_d2").isNull().alias("isnul"),
-                F.col("_d2").alias("dist2"),
-                F.col("fine_id").alias("fine_id"),
-                F.col("group_id").alias("group_id"),
-                F.col("qvec").alias("qvec"),
-            ).alias("cand"),
-        )
-    )
-    best = d.groupBy(id_col).agg(F.min("cand").alias("b"))
-    return best.select(
+    centroids), map-side dist², then `top1` over (dist2, fine_id) — ties
+    to the smallest fine_id, a NULL dist² (a fine centroid with a NULL
+    dimension) last. Unlike ``_assign`` the centroid table is a
+    DataFrame joined by key — nothing is collected to the driver, so the
+    total centroid count may scale with the corpus."""
+    d = vectors.join(centroids, "group_id").select(
         id_col,
-        F.col("b.group_id").alias("group_id"),
-        F.col("b.qvec").alias("qvec"),
-        F.col("b.fine_id").alias("fine_id"),
-        F.col("b.dist2").alias("dist2"),
+        "group_id",
+        "qvec",
+        "fine_id",
+        F.expr(_DIST2.format(a="qvec", b="cvec")).alias("dist2"),
+    )
+    return top1(d, [id_col], ["dist2", "fine_id"], ["group_id", "qvec"]).select(
+        id_col, "group_id", "qvec", "fine_id", "dist2"
     )
 
 
@@ -529,7 +479,6 @@ def kmeans_grouped(
     k_per_group: int,
     iters: int = 2,
     id_col: str = "vec_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Data-parallel k-means WITHIN each group of pre-grouped quantized
     vectors (``group_id``, ``qvec`` columns): the second level of the
@@ -541,11 +490,10 @@ def kmeans_grouped(
 
     Same determinism contract as ``kmeans_lite``: init = each group's
     ``k_per_group`` smallest ids, exact BIGINT dist² and integer-mean
-    updates, ties → smallest fine_id. Empty fine clusters drop out of
-    the update (same behavior as kmeans_lite's collected update).
-    Returns ((id, group_id, qvec, fine_id, dist2) assignments, the
-    final (group_id, fine_id, cvec) centroid DataFrame they were
-    assigned against)."""
+    updates (the same `_update`), ties → smallest fine_id. Empty fine
+    clusters drop out of the update. Returns ((id, group_id, qvec,
+    fine_id, dist2) assignments, the final (group_id, fine_id, cvec)
+    centroid DataFrame they were assigned against)."""
     wi = Window.partitionBy("group_id").orderBy(id_col)
     centroids = (
         vectors.withColumn("rn", F.row_number().over(wi))
@@ -556,48 +504,9 @@ def kmeans_grouped(
         )
         .transform(ckpt)
     )
+    update = _update(vectors, ["group_id", "fine_id"])
     for _ in range(iters):
-        assigned = _assign_grouped(vectors, centroids, id_col)
-        if dim is not None:
-            # wide per-dimension means, one exchange (optimization r14 —
-            # same equivalence argument as `_update(dim=...)` above)
-            aggs = [
-                F.expr(
-                    f"sum(try_element_at(qvec, {i + 1})) "
-                    f"div count(try_element_at(qvec, {i + 1}))"
-                ).alias(f"_c{i}")
-                for i in range(dim)
-            ]
-            arr = ",".join(f"_c{i}" for i in range(dim))
-            centroids = (
-                assigned.groupBy("group_id", "fine_id")
-                .agg(F.expr("max(size(qvec))").alias("_msz"), *aggs)
-                .filter(F.col("_msz").isNotNull())
-                .select(
-                    "group_id",
-                    "fine_id",
-                    F.expr(
-                        f"slice(array({arr}), 1, least(_msz, {dim}))"
-                    ).alias("cvec"),
-                )
-                .transform(ckpt)
-            )
-        else:
-            dims = assigned.select(
-                "group_id", "fine_id", F.posexplode("qvec").alias("pos", "v")
-            )
-            per_dim = dims.groupBy("group_id", "fine_id", "pos").agg(
-                F.expr("sum(v) div count(v)").alias("cv")
-            )
-            centroids = (
-                per_dim.groupBy("group_id", "fine_id")
-                .agg(
-                    F.expr(
-                        "transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)"
-                    ).alias("cvec")
-                )
-                .transform(ckpt)
-            )
+        centroids = ckpt(update(_assign_grouped(vectors, centroids, id_col)))
     return _assign_grouped(vectors, centroids, id_col), centroids
 
 
@@ -652,10 +561,7 @@ def kmeans_hierarchical_model(
     grouped = ckpt(coarse.select(
         id_col, F.col("cluster_id").alias("group_id"), "qvec"
     ))
-    dim = max((len(v) for _, v in coarse_cents if v is not None), default=None)
-    fine, fine_cents = kmeans_grouped(
-        grouped, k_per_group=k2, iters=iters, id_col=id_col, dim=dim
-    )
+    fine, fine_cents = kmeans_grouped(grouped, k_per_group=k2, iters=iters, id_col=id_col)
     assign = fine.select(
         id_col,
         "qvec",
@@ -671,14 +577,14 @@ def assign_hierarchical_frozen(
     k: int,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Assign (id, qvec) rows under a FROZEN two-level model: broadcast
-    coarse `_assign` routes each vector to its group, grouped
-    `_assign_grouped` picks the fine cluster within that group, and the
-    composite id uses the model's own k2 — bit-compatible with
-    `kmeans_hierarchical_model`'s final assignment pass over the same
-    rows."""
+    """Assign (id, qvec) rows under a FROZEN two-level model: the
+    collected coarse centroids route each vector to its group through
+    `_assign`, grouped `_assign_grouped` picks the fine cluster within
+    that group, and the composite id uses the model's own k2 —
+    bit-compatible with `kmeans_hierarchical_model`'s final assignment
+    pass over the same rows."""
     _, k2 = hier_split(k)
-    routed = _assign(vectors, coarse_cents, id_col).select(
+    routed = _assign(vectors, _cent_rows(coarse_cents), id_col).select(
         id_col, "qvec", F.col("cluster_id").alias("group_id")
     )
     fine = _assign_grouped(routed, fine_cents, id_col)

@@ -97,12 +97,13 @@ def kml_model(spark, sf_dir, variant: str, emb_builder, k: int, iters: int = 2):
     Append path (round-13): if the corpus is an APPEND of a prior
     version with published model memos, the centroids are FROZEN (copied
     from the prior memo) and only the new rows — those absent from the
-    prior assignment table — are assigned via broadcast `_assign`. Old
-    rows keep their exact prior assignments; a full retrain happens only
-    on in-place regeneration or an algorithm/version change (SCALE.md
-    round-13). Same contract as `append_to_ivf_index`
-    (operators/ivf.py:277)."""
-    from ..operators.ivf import _assign, cent_df, kmeans_lite, quantize
+    prior assignment table — are assigned by `_assign` against the
+    collected prior centroids, the same literal argmin training uses.
+    Old rows keep their exact prior assignments; a full retrain happens
+    only on in-place regeneration or an algorithm/version change
+    (SCALE.md round-13). Same contract as
+    `operators/ivf.py::append_to_ivf_index`."""
+    from ..operators.ivf import _assign, _cent_rows, cent_df, kmeans_lite, quantize
 
     shared = {}
     tag = f"{variant}_k{k}i{iters}"
@@ -122,7 +123,7 @@ def kml_model(spark, sf_dir, variant: str, emb_builder, k: int, iters: int = 2):
         pr = _prior()
         if pr:
             old = spark.read.parquet(pr[0]).select("vec_id", "qvec", "cluster_id")
-            cents = spark.read.parquet(pr[1])
+            cents = _cent_rows(spark.read.parquet(pr[1]))
             fresh = quantize(emb_builder())
             new = fresh.join(old.select("vec_id"), "vec_id", "left_anti")
             return old.unionByName(

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.scalars import top1
 from .dedup import _SQL_CC_LABELS, _SQL_SHINGLES
 from .helpers import T
 from .registry import query
@@ -67,7 +68,7 @@ def top_ngram_char_fraction(spark, sf_dir):
     fraction in ``repetition_ngram_gate``). Ties break on the
     lexicographically smallest bigram so both engines pick the same one.
 
-    Scale: bigram explode is linear; the count and the top-1 window are
+    Scale: bigram explode is linear; the count and the `top1` are
     both keyed on doc_id (bounded per-doc partitions, no global sort
     except the presentation ORDER BY). Docs with <2 words keep=true with
     NULL diagnostics."""
@@ -91,24 +92,14 @@ def top_ngram_char_fraction(spark, sf_dir):
         )
     )
     counts = bg.groupBy("doc_id", "n_chars", "bigram").agg(F.count("*").alias("c"))
-    # top-1 as a partial-aggregable argmin (optimization r14, guide
-    # §2.3): min over struct(-c, bigram, c) replays the old row_number
-    # window's (c DESC, bigram ASC) order exactly, but map-side partial
-    # aggregation ships one candidate per doc per task instead of
-    # shuffling every (doc, bigram) count row into a window.
-    top1 = (
-        counts.groupBy("doc_id")
-        .agg(F.min(F.struct((-F.col("c")).alias("negc"), "bigram", "c")).alias("t"))
-        .select(
-            "doc_id",
-            F.col("t.bigram").alias("top_bigram"),
-            F.col("t.c").alias("top_count"),
-        )
+    # (c DESC, bigram ASC): DESC via negation
+    best = top1(counts, ["doc_id"], [(-F.col("c")).alias("negc"), "bigram"], ["c"]).select(
+        "doc_id", F.col("bigram").alias("top_bigram"), F.col("c").alias("top_count")
     )
     frac = (F.col("top_count") * F.length("top_bigram")).cast("double") / F.col("n_chars")
     return (
         toks.select("doc_id", "n_chars")
-        .join(top1, "doc_id", "left")
+        .join(best, "doc_id", "left")
         .select(
             "doc_id",
             F.col("n_chars").cast("bigint").alias("n_chars"),

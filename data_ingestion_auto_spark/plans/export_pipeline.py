@@ -12,10 +12,11 @@ output is the export manifest: per (lang, shard, bin) document count,
 token fill, and first document id.
 
 Scale shape (the sum of its verified parts): one pruned corpus scan
-computes tokens/digest/quality; the dedup window shuffles (is_keep,
-digest) — never text; decontamination re-derives n-grams from a second
-pruned scan semi-joined to the canonical id set, with the eval side
-DISTINCT-ed and broadcast; packing windows are per (lang, shard) —
+computes tokens/digest/quality; the keep-first dedup (`top1` per
+digest) shuffles (digest, doc_id, lang, tokens) — never text;
+decontamination re-derives n-grams from a second pruned scan
+semi-joined to the canonical id set, with the eval side DISTINCT-ed and
+broadcast; packing windows are per (lang, shard) —
 bounded partitions, no global sort. Three shuffles + one broadcast
 regardless of corpus size.
 """
@@ -27,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .helpers import T
 from ..checkpoints import ckpt
+from ..functions.scalars import top1
 from .registry import query
 from .training_export import _BENCH_MOD, _BIN_TOKENS, _N_SHARDS, _NGRAM
 
@@ -95,11 +97,9 @@ def training_export_pipeline(spark, sf_dir):
         F.md5("text").alias("digest"),
         ((n_tokens >= 20) & (clean_ratio > 0.8)).alias("is_keep"),
     )
-    rn = F.row_number().over(W.partitionBy("digest").orderBy("doc_id"))
     canon = (
-        scored.filter("is_keep")
-        .withColumn("rn", rn)
-        .filter((F.col("rn") == 1) & (F.col("doc_id") % _BENCH_MOD != 0))
+        top1(scored.filter("is_keep"), ["digest"], ["doc_id"], ["lang", "tokens"])
+        .filter(F.col("doc_id") % _BENCH_MOD != 0)
         .select("doc_id", "lang", "tokens")
         # id/lang/tokens only — referenced by the n-gram semi-join and
         # the packing stage; the corpus text never shuffles.

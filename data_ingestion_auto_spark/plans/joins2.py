@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.scalars import top1
 from .helpers import REVENUE, T, dec_sum, sql_dec_sum
 from .registry import query
 
@@ -158,7 +159,7 @@ ORDER BY c.y, c.x
 def mosaic_overlay(spark, sf_dir):
     """Mosaic overlay precedence as an oracle-checked query (J4,
     convertmodis.py:102-103): per cell, the first NON-NULL value in
-    file_order wins — row_number over an explicit total order
+    file_order wins — `top1` over an explicit total order
     (ord_key, value), NOT groupBy().first()/dropDuplicates (whose survivor
     is partition-order-dependent) and NOT bare min_by (the synthetic
     lineitem has duplicate (orderkey, linenumber) rows, so ord_key alone
@@ -177,32 +178,24 @@ def mosaic_overlay(spark, sf_dir):
         .otherwise(F.col("l_quantity"))
         .alias("value"),
     )
-    # ONE (y, x) exchange for winner AND candidate count (optimization
-    # r14, guide §2.4): the old nn-window + counts-groupBy + join-back
-    # re-planned the tile projection under both branches (3 exchanges,
-    # 2 scans). Ordering non-null values first ((value IS NULL) ASC,
-    # then the original (ord_key, value)) keeps the winner identical;
-    # a cell whose rn=1 row is NULL-valued has no non-null candidate —
-    # exactly the old left-join miss, so it emits NULL value/source.
-    w = W.partitionBy("y", "x").orderBy(
-        F.col("value").isNull(), "ord_key", "value"
+    # ONE (y, x) groupBy for winner AND candidate count. A NULL-valued
+    # tile's ord_key is masked to NULL, which `top1` ranks last, so a
+    # non-null value always wins; a cell whose winner is NULL-valued has
+    # no non-null candidate and emits NULL value/source.
+    best = top1(
+        tiles,
+        ["y", "x"],
+        [F.when(F.col("value").isNotNull(), F.col("ord_key")).alias("nn_key"), "value"],
+        ["file_order"],
+        aggs=[F.count("*").alias("n_candidates")],
     )
-    wc = W.partitionBy("y", "x")
-    return (
-        tiles.withColumn("rn", F.row_number().over(w))
-        .withColumn("n_candidates", F.count("*").over(wc))
-        .filter(F.col("rn") == 1)
-        .select(
-            "y",
-            "x",
-            F.when(F.col("value").isNotNull(), F.col("value")).alias("value"),
-            F.when(F.col("value").isNotNull(), F.col("file_order")).alias(
-                "source_order"
-            ),
-            "n_candidates",
-        )
-        .orderBy("y", "x")
-    )
+    return best.select(
+        "y",
+        "x",
+        "value",
+        F.when(F.col("value").isNotNull(), F.col("file_order")).alias("source_order"),
+        "n_candidates",
+    ).orderBy("y", "x")
 
 
 @query(

@@ -26,6 +26,11 @@ from __future__ import annotations
 
 import time
 from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import wait as _wait
+
+# Past the deadline, prebuild re-cancels the unfinished chains' job
+# groups every 5 s for at most this many sweeps, then returns anyway.
+_DRAIN_SWEEPS = 4
 
 
 def prebuild_chains(spark, sf_dir: str):
@@ -92,7 +97,13 @@ def prebuild(
     cancelled and their memos fall back to lazy first-touch builds
     (inside the per-query watchdog) instead of failing the run — a
     timeout is a host condition, not a build failure, so only REAL
-    build errors still raise."""
+    build errors still raise. At the deadline, chains that have not
+    started are cancelled outright; running ones get at most
+    ``_DRAIN_SWEEPS`` 5 s cancel sweeps, and then prebuild returns
+    without waiting for them (a thread wedged outside Spark keeps
+    running in the background), so it returns within
+    ``timeout_sec + 5 * _DRAIN_SWEEPS`` seconds plus the last sweep's
+    cancel calls."""
     import os
 
     if timeout_sec is None:
@@ -122,33 +133,35 @@ def prebuild(
             sc.setLocalProperty("spark.job.interruptOnCancel", None)
         walls[name] = round(time.perf_counter() - t0, 3)
 
-    from concurrent.futures import wait as _wait
-
     deadline = time.monotonic() + timeout_sec
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+    pool = ThreadPoolExecutor(max_workers=max_workers)
+    try:
         futs = {pool.submit(run, n, ts): n for n, ts in chains}
         not_done = set(futs)
         while not_done and time.monotonic() < deadline:
             done, not_done = _wait(
                 not_done, timeout=min(5.0, max(0.1, deadline - time.monotonic()))
             )
-        if not_done:
+        for f in not_done:
+            cancelled.add(futs[f])
+        # a chain that has not started never will; a running one is
+        # cancelled by job group, re-cancelled each sweep because an
+        # iterative build keeps submitting jobs (same pattern as
+        # bench.py's watchdog)
+        not_done = {f for f in not_done if not f.cancel()}
+        for _ in range(_DRAIN_SWEEPS):
+            if not not_done:
+                break
             for f in not_done:
-                cancelled.add(futs[f])
-            # cancel the wedged groups until their threads give up; an
-            # iterative build keeps submitting jobs, so re-cancel in the
-            # drain loop below (same pattern as bench.py's watchdog)
-            while not_done:
-                for f in not_done:
-                    try:
-                        spark.sparkContext.cancelJobGroup(
-                            f"memo-prebuild:{futs[f]}"
-                        )
-                    except Exception:  # noqa: BLE001
-                        pass
-                done, not_done = _wait(not_done, timeout=5.0)
+                try:
+                    spark.sparkContext.cancelJobGroup(f"memo-prebuild:{futs[f]}")
+                except Exception:  # noqa: BLE001
+                    pass
+            done, not_done = _wait(not_done, timeout=5.0)
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
     for f, name in futs.items():
-        e = f.exception()
-        if e is not None and name not in cancelled:
-            raise e
-    return walls
+        # a cancelled chain may still be running: never wait on it here
+        if name not in cancelled and f.exception() is not None:
+            raise f.exception()
+    return dict(walls)  # a chain still draining must not edit the result

@@ -9,9 +9,9 @@ compared key, partial-aggregated map-side first.
 
 from __future__ import annotations
 
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.scalars import top1
 from .helpers import T
 from .registry import query
 
@@ -50,15 +50,13 @@ ORDER BY o_custkey
     tags=("setops", "dedup", "window"),
 )
 def dedup_keep_first(spark, sf_dir):
-    """Deterministic keep-first dedup: row_number over an explicit total
+    """Deterministic keep-first dedup: `top1` over an explicit total
     order, NOT dropDuplicates (whose survivor is partition-order-dependent —
     the same trap as SURVEY §7.4's mosaic-first note).
     """
     od = T(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
-        od.select("o_custkey", "o_orderkey", "o_orderdate", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") == 1)
+        top1(od, ["o_custkey"], ["o_orderdate", "o_orderkey"])
         .select(
             "o_custkey",
             F.col("o_orderkey").alias("first_orderkey"),

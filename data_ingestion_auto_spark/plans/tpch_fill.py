@@ -16,9 +16,9 @@ second pass.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import top1
 from .helpers import T
 from .registry import query
 
@@ -54,12 +54,12 @@ def q2_min_cost_supplier(spark, sf_dir):
     so the part↔supplier catalog derives from lineitem: unit_cost =
     min observed l_extendedprice/l_quantity per pair). For each small
     STANDARD part, the EUROPE supplier achieving the minimum unit cost —
-    the classic correlated-min, expressed as a row_number window with a
-    deterministic (cost, suppkey) tie-break instead of a re-aggregating
-    self-join: one window over the already-shuffled catalog, no second
-    scan. nation/region keep broadcast hints (constant cardinality);
-    the supplier slice and filtered part are SF-proportional — AQE
-    decides broadcast-vs-shuffle for them.
+    the classic correlated-min, expressed as `top1` with a deterministic
+    (cost, suppkey) tie-break instead of a re-aggregating self-join: one
+    partial-aggregable min over the joined catalog, no second scan.
+    nation/region keep broadcast hints (constant cardinality); the
+    supplier slice and filtered part are SF-proportional — AQE decides
+    broadcast-vs-shuffle for them.
 
     The displayed unit_cost TRUNCATES to 4 decimals (floor of an
     identical double is engine-portable) rather than rounding: an sf0.1
@@ -112,14 +112,18 @@ def q2_min_cost_supplier(spark, sf_dir):
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost"))
     )
-    w = Window.partitionBy("p_partkey").orderBy("unit_cost", "l_suppkey")
+    # eu (region-restricted supplier slice) and parts (filtered part
+    # slice) are SF-proportional — no hints, AQE decides.
+    joined = cat.join(eu, cat.l_suppkey == eu.s_suppkey).join(
+        parts, cat.l_partkey == parts.p_partkey
+    )
     return (
-        # eu (region-restricted supplier slice) and parts (filtered
-        # part slice) are SF-proportional — no hints, AQE decides.
-        cat.join(eu, cat.l_suppkey == eu.s_suppkey)
-        .join(parts, cat.l_partkey == parts.p_partkey)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        top1(
+            joined,
+            ["p_partkey"],
+            ["unit_cost", "l_suppkey"],
+            ["p_name", "s_name", "n_name", "s_acctbal"],
+        )
         .select(
             "p_partkey",
             "p_name",

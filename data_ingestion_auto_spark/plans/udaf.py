@@ -13,21 +13,9 @@ average-of-middle-two interpolation, so results are bit-comparable.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from .helpers import T
 from .registry import query
-
-
-def _mad_udf():
-    # created lazily: pandas_udf registration needs an active SparkSession,
-    # and this module imports before any session exists
-    @F.pandas_udf("double")
-    def _mad(v: pd.Series) -> float:
-        med = v.median()
-        return round(float((v - med).abs().median()), 6)
-
-    return _mad
 
 
 @query(

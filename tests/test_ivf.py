@@ -89,3 +89,80 @@ def test_hierarchical_kmeans_partitions_and_fine_argmin(spark, sf_dir):
         assert (best[1], best[0]) == (r.fine_id, r.dist2), r.vec_id
         n_checked += 1
     assert n_checked == emb.count()
+
+
+def _dist2(q, c):
+    """The engine's exact dist²: zip_with pads the shorter array with
+    NULL, and any NULL element makes the sum NULL."""
+    if q is None or c is None or len(q) != len(c) or None in q or None in c:
+        return None
+    return sum((a - b) ** 2 for a, b in zip(q, c))
+
+
+def _check_brute_force_argmin(assigned, cents):
+    """Every vector sits at its nearest centroid: smallest dist², NULL
+    last, ties to the smallest cluster id."""
+    rows = assigned.collect()
+    for r in rows:
+        d, cid = min(
+            ((_dist2(r.qvec, cv), cid) for cid, cv in cents),
+            key=lambda t: (t[0] is None, t[0] or 0, t[1]),
+        )
+        assert (r.cluster_id, r.dist2) == (cid, d), r.vec_id
+    return {r.vec_id: r for r in rows}
+
+
+def test_kmeans_lite_mixed_length_corpus(spark):
+    """2-dim vectors (ids 0, 4) beside 3-dim ones (ids 1-3): a dist²
+    against a centroid of the other length is NULL and must rank last,
+    so each length family keeps its own cluster and every vector gets a
+    real distance."""
+    rows = [
+        (0, [1.0, 1.0]),
+        (1, [5.0, 5.0, 5.0]),
+        (2, [5.0, 6.0, 5.0]),
+        (3, [6.0, 5.0, 5.0]),
+        (4, [1.0, 2.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    assigned, cents = kmeans_lite(emb, k=2, iters=2)
+    by_id = _check_brute_force_argmin(assigned, cents)
+    assert by_id[1].cluster_id == by_id[2].cluster_id == by_id[3].cluster_id
+    assert by_id[0].cluster_id == by_id[4].cluster_id != by_id[1].cluster_id
+    assert all(r.dist2 is not None for r in by_id.values())
+
+
+def test_kmeans_lite_nan_in_init_row(spark):
+    """A non-finite component quantizes to NULL; when it lands in an
+    init centroid that centroid ranks last for every vector instead of
+    crashing the literal assign."""
+    rows = [
+        (0, [float("nan"), 1.0, 1.0]),
+        (1, [1.0, 1.0, 1.0]),
+        (2, [2.0, 2.0, 2.0]),
+        (3, [9.0, 9.0, 9.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    assigned, cents = kmeans_lite(emb, k=2, iters=2)
+    by_id = _check_brute_force_argmin(assigned, cents)
+    assert by_id[1].cluster_id == by_id[2].cluster_id == by_id[3].cluster_id
+    assert by_id[0].dist2 is None
+
+
+def test_quantize_cache_hit_requires_same_semantics(spark):
+    """The quantize cut is cached under a 32-bit semantic hash; a cut
+    cached for ANOTHER frame under the probed key must not be reused."""
+    from data_ingestion_auto_spark.operators.ivf import quantize
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(6)], "vec_id long, embedding array<double>"
+    )
+    other = spark.createDataFrame(
+        [(100 + i, [0.0, float(i)]) for i in range(3)], "vec_id long, embedding array<double>"
+    )
+    if getattr(spark, "_graft_quant_cache", None) is None:
+        spark._graft_quant_cache = {}
+    key = ("vec_id", "embedding", emb.semanticHash())
+    spark._graft_quant_cache[key] = (other, quantize(other))
+    assigned, _ = kmeans_lite(emb, k=2, iters=1)
+    assert sorted(r.vec_id for r in assigned.collect()) == list(range(6))

@@ -152,7 +152,7 @@ def test_append_routes_with_frozen_centroids_and_is_idempotent(
         for r in spark.table("t_ivf_idx_a_centroids").collect()
     )
     assert cents_after == cents_before
-    centroids = spark.table("t_ivf_idx_a_centroids")
+    centroids = V._cent_rows(spark.table("t_ivf_idx_a_centroids"))
     routed = {
         r.vec_id: r.cluster_id
         for r in V._assign(V.quantize(batch), centroids, "vec_id").collect()

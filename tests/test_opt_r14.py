@@ -6,59 +6,122 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_assign_lit_matches_assign(spark):
-    """The literal-centroid map-side argmin must reproduce the
-    crossJoin+window `_assign` bit-for-bit, including the NULL-poisoned
-    vector (all dist² NULL -> smallest cluster id under both orderings)
-    and exact distance ties (same (dist2, cluster_id) tie-break)."""
-    from data_ingestion_auto_spark.operators.ivf import (
-        _assign,
-        _assign_lit,
-        cent_df,
-        quantize,
-    )
+# (rows as (k, a, b, tag, w), order as (column, direction), payload):
+# top1 must pick the row_number() == 1 row of the same order, NULLs last
+_TOP1_CASES = {
+    "nulls_in_each_order_column": (
+        [
+            (1, None, 1, "x", 0.0), (1, 5, None, "y", 0.0), (1, 5, 2, "z", 0.0),
+            (2, None, None, "n", 0.0), (2, None, 3, "m", 0.0),
+            (3, None, None, "q", 0.0),
+        ],
+        [("a", "asc"), ("b", "asc")],
+        ["tag"],
+    ),
+    "exact_ties_break_on_last_column": (
+        [
+            (1, 3, 9, "x", 0.0), (1, 3, 2, "y", 0.0), (1, 3, 5, "z", 0.0),
+            (2, 0, 1, "u", 0.0), (2, 0, 0, "v", 0.0),
+        ],
+        [("a", "asc"), ("b", "asc")],
+        ["tag"],
+    ),
+    "desc_via_negation": (
+        [
+            (1, 3, 2, "x", 0.0), (1, 3, 1, "y", 0.0), (1, 5, 9, "z", 0.0),
+            (1, None, 0, "n", 0.0),
+            (2, None, 4, "p", 0.0), (2, 1, 8, "q", 0.0),
+            (3, 2, 7, "r", 0.0), (3, 2, 6, "s", 0.0),
+        ],
+        [("a", "desc"), ("b", "asc")],
+        ["a", "tag"],
+    ),
+    "multi_column_payload": (
+        [(1, 10, 3, "x", 0.5), (1, 20, 1, "y", 1.5), (2, 7, None, "w", 2.5)],
+        [("b", "asc")],
+        ["tag", "w", "a"],
+    ),
+}
 
-    rows = [
-        (1, [1.0, 2.0, 3.0]),
-        (2, [float("nan"), 1.0, 1.0]),  # quantizes to [NULL, 10000, 10000]
-        (3, [0.0, 0.0, 0.0]),
-        (4, [1.0, 2.0, 3.0]),
-        (5, [100.0, -50.0, 7.25]),
+
+@pytest.mark.parametrize("case", sorted(_TOP1_CASES))
+def test_top1_matches_row_number(spark, case):
+    """`top1` is the engine's one best-row-per-key form; it must pick
+    the same row as row_number() over the same order with NULLs last in
+    every column — the window form it replaced at every port site."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from data_ingestion_auto_spark.functions.scalars import top1
+
+    rows, order, payload = _TOP1_CASES[case]
+    df = spark.createDataFrame(rows, "k long, a long, b long, tag string, w double")
+    by_top1 = [
+        F.col(c) if d == "asc" else (-F.col(c)).alias(f"neg_{c}") for c, d in order
     ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    v = quantize(emb)
-    # centroid 0 and the duplicate of vector 1/4 tie exactly for those
-    # vectors; centroid 1 is the zero vector; 2 matches vector 5 exactly
-    cent_rows = [(0, [10000, 20000, 30000]), (1, [0, 0, 0]), (2, [1000000, -500000, 72500])]
-    a_old = sorted(tuple(r) for r in _assign(v, cent_df(spark, cent_rows), "vec_id").collect())
-    a_new = sorted(tuple(r) for r in _assign_lit(v, cent_rows, "vec_id").collect())
-    assert a_old == a_new
+    by_window = [
+        F.asc_nulls_last(c) if d == "asc" else F.desc_nulls_last(c) for c, d in order
+    ]
+    cols = ["k", *dict.fromkeys([c for c, d in order if d == "asc"] + payload)]
+    got = sorted(tuple(r) for r in top1(df, ["k"], by_top1, payload).select(*cols).collect())
+    w = Window.partitionBy("k").orderBy(*by_window)
+    ref = sorted(
+        tuple(r)
+        for r in df.withColumn("rn", F.row_number().over(w))
+        .filter("rn = 1")
+        .select(*cols)
+        .collect()
+    )
+    assert got == ref
+    assert len(got) == len({r[0] for r in rows})
 
 
 def test_update_wide_matches_explode(spark):
-    """The wide per-dimension `_update(dim=...)` must match the explode
-    path, including an all-NULL-vector cluster (which the explode path
-    drops entirely) and NULL elements (excluded from sum and count)."""
-    from data_ingestion_auto_spark.operators.ivf import _assign_lit, _update, quantize
+    """The wide per-dimension `_update` must match the posexplode form
+    it replaced: a cluster mixing lengths, including a vector longer
+    than the init rows, averages every position some member reaches;
+    NULL elements are excluded from sum and count; a cluster of NULL
+    vectors drops out."""
+    from pyspark.sql import functions as F
 
-    rows = [(1, [1.0, 2.0]), (2, [3.0, 5.0]), (3, [float("nan")] * 2)]
+    from data_ingestion_auto_spark.operators.ivf import _update, quantize
+
+    rows = [
+        (1, [1.0, 2.0]),
+        (2, [3.0, 5.0]),
+        (3, [1.0, 2.0, 7.0]),  # longer than the 2-dim init rows 1 and 2
+        (4, [float("nan")] * 2),  # quantizes to [NULL, NULL]
+        (5, None),
+    ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     v = quantize(emb)
-    # cluster 1 is far away: only the NULL-poisoned vector lands there
-    # (all-NULL dist² -> cluster 0 actually; craft instead two clusters
-    # where vectors 1+2 share cluster 0 and nothing real joins cluster 1)
-    cent_rows = [(0, [20000, 35000]), (1, [99990000, 99990000])]
-    assigned = _assign_lit(v, cent_rows, "vec_id")
-    u_old = sorted((r["cluster_id"], tuple(r["cvec"])) for r in _update(assigned).collect())
-    u_new = sorted(
-        (r["cluster_id"], tuple(r["cvec"])) for r in _update(assigned, dim=2).collect()
+    assigned = v.select(
+        "vec_id",
+        "qvec",
+        F.expr("CAST(CASE WHEN vec_id <= 3 THEN 0 WHEN vec_id = 4 THEN 1 ELSE 2 END AS INT)")
+        .alias("cluster_id"),
     )
-    assert u_old == u_new
-    # integer-mean check: (10000+30000) div 2, (20000+50000) div 2
-    assert u_new == [(0, (20000, 35000))]
+    got = sorted(
+        (r["cluster_id"], tuple(r["cvec"]))
+        for r in _update(v, ["cluster_id"])(assigned).collect()
+    )
+    dims = assigned.select("cluster_id", F.posexplode("qvec").alias("pos", "v"))
+    ref = sorted(
+        (r["cluster_id"], tuple(r["cvec"]))
+        for r in dims.groupBy("cluster_id", "pos")
+        .agg(F.expr("sum(v) div count(v)").alias("cv"))
+        .groupBy("cluster_id")
+        .agg(F.expr("transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)").alias("cvec"))
+        .collect()
+    )
+    assert got == ref
+    # integer means: (1+3+1)e4 div 3, (2+5+2)e4 div 3, 7e4 div 1
+    assert got == [(0, (16666, 30000, 70000)), (1, (None, None))]
 
 
 def test_cc_frontier_shapes_identical(spark):
@@ -143,70 +206,33 @@ def test_sort_small_call_sites_are_pinned():
     assert set(files) <= allowed, f"unreviewed sort_small call sites: {files}"
 
 
-def test_assign_grouped_matches_window_argmin(spark):
-    """The grouped argmin's min over struct(dist2 IS NULL, dist2,
-    fine_id, ...) must replay the old row_number window's
-    (asc_nulls_last(dist2), fine_id) order — including a MIXED-null
-    group (one fine centroid with a NULL dimension poisons only its own
-    dist², so the leading null flag is load-bearing, unlike
-    _assign_lit's all-or-none case)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+def test_prebuild_deadline_is_bounded(spark, monkeypatch):
+    """Past its deadline prebuild cancels chains that have not started
+    and gives running ones a fixed number of cancel sweeps: two chains
+    blocked in pure Python (where a job-group cancel cannot reach) hold
+    both workers, yet prebuild returns within timeout + cap, and the
+    queued third chain never runs — not even once the workers free up."""
+    import threading
+    import time
 
-    from data_ingestion_auto_spark.operators.ivf import _DIST2, _assign_grouped
+    from data_ingestion_auto_spark.plans import memo_prebuild as MP
 
-    vectors = spark.createDataFrame(
-        [(1, 0, [1, 2]), (2, 0, [9, 9]), (3, 1, [5, 5])],
-        "vec_id long, group_id int, qvec array<bigint>",
-    )
-    # group 0: fine 0 has a NULL dimension (dist² NULL for every vector
-    # probing it), fine 1 is sane — the window ranks fine 1 first, and
-    # so must the min-struct; group 1: exact tie on dist² breaks to the
-    # smaller fine_id.
-    centroids = spark.createDataFrame(
-        [(0, 0, [None, 2]), (0, 1, [1, 2]), (1, 0, [5, 6]), (1, 1, [5, 4])],
-        "group_id int, fine_id int, cvec array<bigint>",
-    )
-    got = sorted(tuple(r) for r in _assign_grouped(vectors, centroids, "vec_id").collect())
-    d = vectors.join(centroids, "group_id").withColumn(
-        "dist2", F.expr(_DIST2.format(a="qvec", b="cvec"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.asc_nulls_last("dist2"), "fine_id")
-    ref = sorted(
-        tuple(r)
-        for r in d.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("vec_id", "group_id", "qvec", "fine_id", "dist2")
-        .collect()
-    )
-    assert got == ref
-    # and the NULL-dimension centroid never wins while a sane one exists
-    by_id = {r[0]: r for r in got}
-    assert by_id[1][3] == 1 and by_id[2][3] == 1  # group-0 vectors -> fine 1
-    assert by_id[3][3] == 0  # tie in group 1 -> smaller fine_id
-
-
-def test_min_struct_top1_matches_window(spark):
-    """top_ngram_char_fraction's argmin fold: min over
-    struct(-c, bigram) must equal row_number over (c DESC, bigram ASC)
-    including exact count ties."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    rows = [
-        (1, "aa", 3), (1, "ab", 3), (1, "zz", 5),
-        (2, "mm", 1), (2, "aa", 1),
+    release = threading.Event()
+    ran = []
+    chains = [
+        ("wedged_a", [lambda: release.wait(120)]),
+        ("wedged_b", [lambda: release.wait(120)]),
+        ("queued", [lambda: ran.append(1)]),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, bigram string, c long")
-    w = W.partitionBy("doc_id").orderBy(F.col("c").desc(), "bigram")
-    via_window = {
-        (r["doc_id"], r["bigram"], r["c"])
-        for r in df.withColumn("rn", F.row_number().over(w)).filter("rn = 1").collect()
-    }
-    via_min = {
-        (r["doc_id"], r["t"]["bigram"], r["t"]["c"])
-        for r in df.groupBy("doc_id")
-        .agg(F.min(F.struct((-F.col("c")).alias("negc"), "bigram", "c")).alias("t"))
-        .collect()
-    }
-    assert via_window == via_min == {(1, "zz", 5), (2, "aa", 1)}
+    monkeypatch.setattr(MP, "prebuild_chains", lambda spark, sf_dir: chains)
+    monkeypatch.setattr(MP, "_DRAIN_SWEEPS", 1)
+    t0 = time.monotonic()
+    try:
+        walls = MP.prebuild(spark, "unused", max_workers=2, timeout_sec=1.0)
+        elapsed = time.monotonic() - t0
+    finally:
+        release.set()
+    assert elapsed < 1.0 + 5.0 * MP._DRAIN_SWEEPS + 2.0, elapsed
+    assert walls == {}
+    time.sleep(0.5)  # the freed workers must not pick up the queued chain
+    assert ran == []

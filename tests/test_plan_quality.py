@@ -505,7 +505,7 @@ def test_priority_sample_and_pmi_scale_shapes(spark, sf_dir, registry):
 
 def test_export_pipeline_no_cartesian_text_stays_mapside(spark, sf_dir, registry):
     """training_export_pipeline: the canonical id set is checkpointed so
-    the dedup window's output — not text — feeds the later stages; the
+    the keep-first dedup's output — not text — feeds the later stages; the
     n-gram subtree re-derives from pruned (doc_id, text) scans (the
     decontamination_ngram_overlap shape); eval n-grams broadcast; no
     cartesian products anywhere."""
@@ -915,3 +915,33 @@ def test_sampling_tier_memoized_plans(spark, sf_dir, registry):
         bp = _plan(spark, builder())
         assert tag in bp
         assert "lineitem.parquet" not in bp
+
+
+# Exchange count of each query whose best-row site became `top1`,
+# measured on the row_number-window plans it replaced.
+_TOP1_PORT_EXCHANGES = {
+    "dedup_keep_first": 2,
+    "q2_min_cost_supplier": 4,
+    "mosaic_overlay": 2,
+    "top_ngram_char_fraction": 3,
+    "training_export_pipeline": 6,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TOP1_PORT_EXCHANGES))
+def test_top1_ports_leave_no_best_row_window(spark, sf_dir, registry, monkeypatch, name):
+    """The best-row site is a partial-aggregable `top1`, not a window,
+    and costs no more exchanges than the window did. The export
+    pipeline's dedup sits behind a checkpoint, which is bypassed here so
+    the plan shows it; its one remaining Window is the packing
+    running-sum."""
+    import re
+
+    from data_ingestion_auto_spark.plans import export_pipeline
+
+    monkeypatch.setattr(export_pipeline, "ckpt", lambda df: df)
+    p = _plan(spark, registry[name].spark(spark, sf_dir))
+    n_windows = len(re.findall(r"\(\d+\) Window\b", p))
+    assert n_windows == (1 if name == "training_export_pipeline" else 0), p
+    n_exch = len(re.findall(r"\(\d+\) Exchange\b", p))
+    assert n_exch <= _TOP1_PORT_EXCHANGES[name], p
