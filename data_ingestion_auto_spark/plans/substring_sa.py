@@ -18,24 +18,24 @@ SORTED DIRECTLY:
    that can start a ≥T repeat participate (i ≤ len−T), and no suffix
    crosses a document boundary, which is exactly the sentinel property
    the single-machine construction gets from unique separators;
-2. build the suffix array as a DISTRIBUTED sort: `repartitionByRange`
-   on the (suffix, doc_id, i) key, then per-partition rank/lag/lead
-   windows keyed on `spark_partition_id()` — every partition sorts in
-   parallel, NO single-partition global window. Because the range
-   partitioner totally orders partitions, global adjacency = local
-   adjacency plus one boundary pair per consecutive non-empty partition
-   (≤ P−1 rows, computed from each partition's first/last row and
-   broadcast back). Partition boundaries are sampled and therefore not
-   deterministic — the RESULT is: any split of a totally sorted
-   sequence into ordered chunks plus its boundary pairs reconstructs
-   the same adjacency relation;
+2. sort the suffixes inside their T-token prefix blocks: ONE window,
+   `lag`/`lead` of the suffix over PARTITION BY slice(suffix, 1, T)
+   ORDER BY (suffix, doc_id, i). Suffixes sharing their first T tokens
+   form one contiguous run of the global suffix array, and a neighbour
+   outside that run shares fewer than T tokens — so every suffix-array
+   adjacency with LCP ≥ T is an in-block adjacency, and the blocks need
+   neither a global order nor a seam between them. The window's hash
+   exchange on the block key is the construction's only shuffle;
 3. per suffix, the maximal repeat starting there is
    max(LCP(prev), LCP(next)) over suffix-array neighbors — the
    standard suffix-array property that the longest match of a suffix
-   against the whole corpus is achieved at an adjacent SA entry. LCP is
-   a first-mismatch scan over zipped token arrays, identical in both
-   engines (`zip_with`+`array_position` / `list_zip`+`list_position`,
-   null-padding making the shorter-is-prefix case fall out);
+   against the whole corpus is achieved at an adjacent SA entry. Inside
+   a block that maximum equals the global one whenever it is ≥ T, and
+   a suffix alone in its block (NULL neighbours, LCP 0) starts no
+   repeat. LCP is a first-mismatch scan over zipped token arrays,
+   identical in both engines (`zip_with`+`array_position` /
+   `list_zip`+`list_position`, null-padding making the
+   shorter-is-prefix case fall out);
 4. positions with repeat ≥ T merge into maximal per-document islands
    (the same gaps-and-islands machinery as the fixed-window variant),
    giving the tokens ExactSubstr-cut would remove.
@@ -57,10 +57,15 @@ column is an exact integer, so the parity hash is bit-stable.
 
 At 100 TB: the suffix explode is ~tokens × avg-suffix-length/2 bytes —
 bounded by the document-length cap (cap/2 × corpus bytes; the paper
-pays the same ×8-byte-per-token suffix array). One range exchange
-sorts it; windows are per-partition; the boundary fix-up is ≤ P rows;
+pays the same ×8-byte-per-token suffix array). One hash exchange on
+the T-token block key moves it; each block sorts inside one task;
 islands shuffle per-document. Nothing is driver-side and nothing is
-quadratic.
+quadratic. Skew is bounded by the corpus, not the plan: one block holds
+every occurrence of one T-token string, so a string repeated N times is
+an N-row sort in one task (Window buffers spill, so it stays correct,
+only slower). At sf0.1 the largest block has 4 rows; a corpus that
+repeats one T-token string millions of times is better served by the
+prefix-doubling variant, whose sorts are range-partitioned.
 
 Reference anchor: reference dedup is file-level state skips
 (ingest/__init__.py:118-135); substring dedup belongs to the
@@ -72,23 +77,22 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..checkpoints import ckpt
 from .helpers import T
 from .registry import query
 
 _T = 15  # min repeat length in tokens (paper: 50 BPE tokens at corpus scale)
-_P_SA = 32  # suffix-sort range partitions
+_P_SA = 32  # pre-explode doc_id partitions of `_reps_pd`'s ladder input
 
 # token-level longest-common-prefix of two array<string> columns; 0 when
 # the neighbor is NULL (sequence ends). zip_with pads the shorter array
 # with NULLs, so a proper prefix mismatches at min_len+1 and
-# array_position()-1 = min_len; position 0 (no mismatch) means the
-# arrays are identical → LCP = full size.
+# array_position()-1 = min_len; the appended sentinel 1 makes identical
+# arrays mismatch at size+1 → LCP = full size. One zip_with per pair
+# (`nullif` would not do: Spark rewrites it to an If that repeats its
+# argument).
 _LCP = (
-    "CASE WHEN {b} IS NULL THEN 0 ELSE CASE WHEN array_position("
-    "zip_with({a}, {b}, (x, y) -> CASE WHEN x <=> y THEN 0 ELSE 1 END), 1) = 0 "
-    "THEN size({a}) ELSE array_position("
-    "zip_with({a}, {b}, (x, y) -> CASE WHEN x <=> y THEN 0 ELSE 1 END), 1) - 1 END END"
+    "CASE WHEN {b} IS NULL THEN 0 ELSE array_position(concat("
+    "zip_with({a}, {b}, (x, y) -> CASE WHEN x <=> y THEN 0 ELSE 1 END), array(1)), 1) - 1 END"
 )
 
 _LCP_SQL = (
@@ -176,17 +180,18 @@ def _toks(spark, sf_dir):
 def _reps_direct(spark, sf_dir):
     """The direct-sort construction of the per-corpus repeat-span table
     (doc_id, i, rep_len, j) — every position starting a ≥T-token repeat.
-    Extracted so the registered query can MEMOIZE the artifact (round-12:
-    Lee et al. 2022 run ExactSubstr as a one-time preprocessing pass per
-    corpus — this IS that pass) while this construction's plan stays
-    directly pinnable (tests/test_plan_quality.py pins it on THIS
-    function, not on the memo-reading query)."""
+    Suffixes are sorted only inside their T-token prefix blocks: ONE
+    window, partitioned on the block key, gives each suffix its
+    suffix-array neighbours wherever their LCP can reach T (module
+    docstring, step 2). Extracted so the registered query can MEMOIZE
+    the artifact (Lee et al. 2022 run ExactSubstr as a one-time
+    preprocessing pass per corpus — this IS that pass) while this
+    construction's plan stays directly pinnable
+    (tests/test_plan_quality.py pins it on THIS function, not on the
+    memo-reading query)."""
     toks = _toks(spark, sf_dir)
     suf = (
         toks.filter(F.col("n_tokens") >= _T)
-        # explicit repartition before the explode: AQE coalesces the tiny
-        # pre-explode stage to 1 partition otherwise (NOTES_r1 gotcha)
-        .repartition(_P_SA, "doc_id")
         .select(
             "doc_id",
             F.explode(F.sequence(F.lit(0), F.col("n_tokens") - _T)).alias("i"),
@@ -194,64 +199,28 @@ def _reps_direct(spark, sf_dir):
         )
         .select("doc_id", "i", F.expr("slice(w, i + 1, size(w) - i)").alias("suf"))
     )
-    # ---- distributed suffix array: range-partitioned sort + per-partition
-    # windows on spark_partition_id (parallel), boundary pairs fix the seam.
-    s = suf.repartitionByRange(_P_SA, "suf", "doc_id", "i").withColumn(
-        "pid", F.spark_partition_id()
+    block = W.partitionBy(F.slice("suf", 1, _T)).orderBy("suf", "doc_id", "i")
+    adj = suf.select(
+        "doc_id",
+        "i",
+        "suf",
+        F.lag("suf").over(block).alias("prev_suf"),
+        F.lead("suf").over(block).alias("next_suf"),
     )
-    wo = W.partitionBy("pid").orderBy("suf", "doc_id", "i")
-    # lag/lead double as the partition-edge markers (NULL neighbor ⇔
-    # first/last row of the pid) — no row_number/count windows needed,
-    # so the one ordered window pass is the only window over the data.
-    s2 = ckpt(
-        s.select(
-            "doc_id",
-            "i",
-            "suf",
-            "pid",
-            F.lag("suf").over(wo).alias("prev_suf"),
-            F.lead("suf").over(wo).alias("next_suf"),
-        )
-    )  # data-sized (full suffix adjacency): durable cut — feeds the
-    # main scan AND the two boundary scans; bnd below stays
-    # localCheckpoint (≤ _P_SA seam rows, driver-scale)
-    firsts = s2.filter(F.col("prev_suf").isNull()).select(
-        "pid", F.col("suf").alias("fsuf")
-    )
-    lasts = s2.filter(F.col("next_suf").isNull()).select(
-        F.col("pid").alias("lpid"), F.col("suf").alias("lsuf")
-    )
-    wseq = W.orderBy("pid")  # ≤ _P_SA rows — driver-scale, not data-scale
-    f2 = firsts.withColumn("seq", F.row_number().over(wseq))
-    l2 = lasts.withColumn("seq", F.row_number().over(W.orderBy("lpid")))
-    bnd = (
-        f2.join(l2, f2.seq == l2.seq + 1)
-        .select("pid", "lpid", F.expr(_LCP.format(a="fsuf", b="lsuf")).alias("blcp"))
-        .localCheckpoint()
-    )
-    bnd_first = bnd.select("pid", F.col("blcp").alias("blcp_f"))
-    bnd_last = bnd.select(F.col("lpid").alias("pid"), F.col("blcp").alias("blcp_l"))
-    lcp_prev = F.expr(_LCP.format(a="suf", b="prev_suf"))
-    lcp_next = F.expr(_LCP.format(a="suf", b="next_suf"))
-    reps = (
-        s2.join(F.broadcast(bnd_first), "pid", "left")
-        .join(F.broadcast(bnd_last), "pid", "left")
+    # every in-block neighbour shares the block's T tokens, so
+    # rep_len ≥ T exactly when the block has a second row
+    return (
+        adj.filter(F.col("prev_suf").isNotNull() | F.col("next_suf").isNotNull())
         .select(
             "doc_id",
             "i",
             F.greatest(
-                F.when(
-                    F.col("prev_suf").isNull(), F.coalesce("blcp_f", F.lit(0))
-                ).otherwise(lcp_prev),
-                F.when(
-                    F.col("next_suf").isNull(), F.coalesce("blcp_l", F.lit(0))
-                ).otherwise(lcp_next),
+                F.expr(_LCP.format(a="suf", b="prev_suf")),
+                F.expr(_LCP.format(a="suf", b="next_suf")),
             ).alias("rep_len"),
         )
-        .filter(F.col("rep_len") >= _T)
         .withColumn("j", F.col("i") + F.col("rep_len") - 1)
     )
-    return reps.select("doc_id", "i", "rep_len", "j")
 
 
 @query(
@@ -265,9 +234,9 @@ def suffix_repeat_spans(spark, sf_dir):
     the corpus — n_rep_starts (positions starting such a repeat),
     n_rep_islands / n_rep_tokens (merged coverage — what
     ExactSubstr-cut removes), max_rep_len (the longest repeat). Built
-    on a distributed suffix sort with boundary-pair adjacency fix-up
-    (`_reps_direct`; see module docstring for the construction and the
-    scale argument). The repeat-span table is MEMOIZED per corpus
+    on a suffix sort inside {_T}-token prefix blocks, one window and one
+    shuffle (`_reps_direct`; see module docstring for the construction
+    and the scale argument). The repeat-span table is MEMOIZED per corpus
     version (round-12): ExactSubstr is a one-time preprocessing pass in
     the paper's own deployment, so production computes the spans at
     ingest and every consumer joins the artifact — bit-identical to the
@@ -392,8 +361,8 @@ def _reps_pd(spark, sf_dir):
 
     toks = _toks(spark, sf_dir)
     elig = toks.filter(F.col("n_tokens") >= _T)
-    # explicit repartition before the in-operator explode (same
-    # AQE-coalesce gotcha as the direct variant)
+    # explicit repartition before the in-operator explode: AQE coalesces
+    # the tiny pre-explode stage to 1 partition otherwise (NOTES_r1)
     docs = elig.repartition(_P_SA, "doc_id").select("doc_id", "w")
     # base_span 32 (optimization r14, A/B'd with identical output rows
     # at sf0.1, warm best 9.23 -> 8.77 s): each widening of the base

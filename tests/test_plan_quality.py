@@ -6,6 +6,8 @@ still returns correct rows; these tests are what catches it."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 
@@ -233,12 +235,12 @@ def test_suffix_repeat_spans_pruned_no_cartesian_no_global_window(
     """Round-12 memo split: the REGISTERED query reads the memoized
     repeat-span table (no suffix explode, no corpus re-sort — only the
     per-doc island windows remain), while the direct-sort CONSTRUCTION
-    (`_reps_direct`) keeps its original pins — scans pruned to
-    (doc_id, text), every join hash/broadcast, suffix-sort windows
-    partitioned on spark_partition_id (the ≤ _P_SA-row boundary-seam
-    rankings are the only single-partition windows), checkpointed
-    adjacency (ExistingRDD)."""
-    from data_ingestion_auto_spark.plans.substring_sa import _reps_direct
+    (`_reps_direct`) is pinned on its own shape — a pruned
+    (doc_id, text) scan, the suffix explode, ONE hash exchange and ONE
+    window partitioned on the _T-token prefix block: no range sort, no
+    spark_partition_id seam windows, no eager checkpoint (ExistingRDD),
+    no cartesian or nested-loop join."""
+    from data_ingestion_auto_spark.plans.substring_sa import _T, _reps_direct
 
     df = registry["suffix_repeat_spans"].spark(spark, sf_dir)
     p = _plan(spark, df)
@@ -252,13 +254,25 @@ def test_suffix_repeat_spans_pruned_no_cartesian_no_global_window(
         if "Window" in line and "windowspecdefinition" in line.lower():
             assert "doc_id" in line, line
 
-    cp = _plan(spark, _reps_direct(spark, sf_dir))
+    direct = _reps_direct(spark, sf_dir)
+    cp = _plan(spark, direct)
     assert "CartesianProduct" not in cp
     assert "BroadcastNestedLoopJoin" not in cp
-    # construction consumes the checkpointed suffix adjacency (the pruned
-    # documents scan runs inside the pre-checkpoint stage), not a re-run
-    # of the suffix explode
-    assert "ExistingRDD" in cp
+    # one lazy plan from the pruned scan: no eager cut, no range sort,
+    # no per-partition seam windows
+    for gone in ("ExistingRDD", "RangePartitioning", "spark_partition_id"):
+        assert gone not in cp, gone
+    assert "ReadSchema: struct<doc_id:bigint,text:string>" in cp
+    csimple = _plan(spark, direct, "simple")
+    windows = [ln for ln in csimple.splitlines() if "+- Window " in ln]
+    assert len(windows) == 1, windows
+    # the window partitions on the prefix block slice(suf, 1, _T),
+    # inlined or as the projected alias Spark adds for it
+    key = re.search(r"windowspecdefinition\((.+?), suf#\d+ ASC", windows[0]).group(1)
+    assert key.startswith("slice(suf#") or re.search(
+        rf"slice\(suf#\d+, 1, {_T}\) AS {re.escape(key)}\b", csimple
+    ), key
+    assert sum("Exchange " in ln for ln in csimple.splitlines()) <= 1
 
 
 def test_suffix_unbounded_pruned_no_cartesian_no_global_window(
