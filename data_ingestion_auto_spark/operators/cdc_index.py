@@ -13,16 +13,19 @@ Per-chash doc entries are capped (default 100, rank by doc_id —
 beyond that a chunk is boilerplate, not quotation; the cap bounds both
 storage and probe fan-out per chunk, the `lsh_candidates` argument),
 the cap holds across appends by remaining-capacity admission, and
-append is idempotent on the exact (doc_id, chash) key.
+append is idempotent on the exact (doc_id, chash) key. Retention and
+compaction go through ``operators/layout.py::rewrite_index``: ghost
+owners would poison ``dup_of`` assignments and hold per-chunk capacity.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoints import ckpt, ckpt_local
 from ..sources.tables import spread
+from .layout import write_capped_index
 
 _W = 4  # rolling-window length (tokens) — must match plans/cdc_chunks.py
 _D = 8  # boundary divisor -> expected chunk length (tokens)
@@ -99,9 +102,9 @@ def write_chunk_index(
     bucketed on chash. ``mode='append'`` admits only each chunk hash's
     remaining capacity (earlier ingests win; within a batch, smallest
     doc_id), and drops exact (doc_id, chash) re-ingests before ranking —
-    the same induction + idempotence contract as ``write_band_index``.
-    The capacity aggregate groups on the bucketed table's own key, so it
-    is Exchange-free on the index side.
+    the ``operators/layout.py::write_capped_index`` contract, shared with
+    ``write_band_index``. The capacity aggregate groups on the bucketed
+    table's own key, so it is Exchange-free on the index side.
 
     ``chunks``: pre-chunked (doc_id, chash, n_tokens) rows — the
     streaming loop chunks each micro-batch ONCE and hands the same frame
@@ -111,45 +114,16 @@ def write_chunk_index(
     see cdc_chunk_rows)."""
     if chunks is None:
         chunks = cdc_chunk_rows(docs, durable=(mode == "overwrite"))
-    chunks = chunks.select("doc_id", "chash", "n_tokens").distinct()
-    w = Window.partitionBy("chash").orderBy("doc_id")
-    spark = chunks.sparkSession
-    if mode == "append" and spark.catalog.tableExists(table):
-        existing = (
-            spark.table(table)
-            .groupBy("chash")
-            .agg(
-                F.count(F.lit(1)).alias("n_existing"),
-                F.collect_set("doc_id").alias("stored_ids"),
-            )
-        )
-        fresh = chunks.join(existing, ["chash"], "left").filter(
-            F.col("stored_ids").isNull()
-            | ~F.array_contains("stored_ids", F.col("doc_id"))
-        )
-        capped = (
-            fresh.withColumn("rn", F.row_number().over(w))
-            .filter(
-                F.col("rn")
-                <= max_per_chunk - F.coalesce(F.col("n_existing"), F.lit(0))
-            )
-            .select("doc_id", "chash", "n_tokens")
-        )
-    else:
-        capped = (
-            chunks.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= max_per_chunk)
-            .select("doc_id", "chash", "n_tokens")
-        )
-    writer = (
-        capped.write.format("parquet")
-        .mode(mode)
-        .bucketBy(buckets, "chash")
-        .sortBy("chash", "doc_id")
+    write_capped_index(
+        chunks.select("doc_id", "chash", "n_tokens").distinct(),
+        table,
+        keys=["chash"],
+        id_col="doc_id",
+        cap=max_per_chunk,
+        buckets=buckets,
+        mode=mode,
+        path=path,
     )
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
 
 
 def probe_chunk_index(
@@ -211,29 +185,3 @@ def probe_chunk_index(
         F.coalesce("min_owner", "doc_id").alias("dup_of"),
         (F.col("n_shared") > 0).alias("is_dup"),
     )
-
-
-def retire_from_chunk_index(
-    spark,
-    table: str,
-    retired: DataFrame,
-    buckets: int = 16,
-    path: str | None = None,
-) -> None:
-    """Retention: documents deleted from the corpus leave the chunk
-    index too (ghost owners poison ``dup_of`` assignments and hold
-    per-chunk capacity). Anti-join compaction through a lineage cut,
-    rewriting survivors into the same bucketed layout — the
-    band/IVF retire contract, including honest capacity restoration."""
-    survivors = ckpt(
-        spark.table(table).join(retired.select("doc_id"), ["doc_id"], "left_anti")
-    )
-    writer = (
-        survivors.write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(buckets, "chash")
-        .sortBy("chash", "doc_id")
-    )
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..checkpoints import ckpt, ckpt_local
+from .layout import write_capped_index
 
 
 def content_digest(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -514,21 +515,13 @@ def write_band_index(
     BUCKETED on (band, band_hash) — the physical layout that makes every
     future ingest probe join shuffle-free on the index side.
 
-    Hot-bucket cap applies at write time (same rank-and-cap as
-    `lsh_candidates`, same argument: a bucket beyond ``max_bucket`` is
-    boilerplate, not near-duplication), and it holds ACROSS appends by
-    induction: ``mode='overwrite'`` caps within the write;
-    ``mode='append'`` (the daily-ingest call) first measures each
-    bucket's remaining capacity ``max_bucket - n_existing`` from the
-    stored table and admits only that many incoming rows per bucket, so
-    a stored bucket never exceeds ``max_bucket`` no matter how many
-    daily batches land on it. Admission policy: earlier ingests win;
-    within one batch, smallest id wins (same ordering as the cap
-    itself). Append is IDEMPOTENT: rows whose exact (id, band,
-    band_hash) key is already stored are dropped before ranking, so a
-    re-ingested batch neither duplicates rows nor consumes capacity
-    (round-9 ADVICE). The bucketing spec is preserved across appends
-    (Spark enforces it for saveAsTable).
+    Hot-bucket cap ``max_bucket`` (same rank-and-cap as
+    `lsh_candidates`, same argument: a bucket beyond it is boilerplate,
+    not near-duplication). ``mode='append'`` (the daily-ingest call)
+    admits only each bucket's remaining capacity and drops already
+    stored (id, band, band_hash) rows first, so the cap holds across
+    appends and a re-ingested batch is a no-op (round-9 ADVICE) — the
+    ``operators/layout.py::write_capped_index`` contract.
 
     At 100 TB: the index is shingle-band-sized, NOT pair-sized; writing
     it costs one shuffle into ``buckets`` files per partition, and every
@@ -537,57 +530,18 @@ def write_band_index(
     append-capacity count is a groupBy on exactly the bucket keys of an
     already-bucketed table — one map-side-combined, Exchange-free scan
     of (band, band_hash) pairs per ingest, no rewrite of stored files.
+    Retention and compaction: ``operators/layout.py::rewrite_index``.
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "band_hash").orderBy(id_col)
-    spark = banded.sparkSession
-    if mode == "append" and spark.catalog.tableExists(table):
-        # Remaining per-bucket capacity AND the stored id set per bucket
-        # from one aggregation over the stored table. Grouping keys ==
-        # bucket keys, so it runs on the bucketed scan's own partitioning
-        # with no Exchange; the id set is bounded by ``max_bucket`` (the
-        # cap invariant), so the carried array is fixed-size state, not
-        # data-sized.
-        existing = (
-            spark.table(table)
-            .groupBy("band", "band_hash")
-            .agg(
-                F.count(F.lit(1)).alias("n_existing"),
-                F.collect_set(F.col(id_col)).alias("stored_ids"),
-            )
-        )
-        # Idempotent re-ingest (round-9 ADVICE): an (id, band, band_hash)
-        # row already stored is dropped BEFORE ranking, so re-appending a
-        # batch neither stores duplicate rows nor burns bucket capacity —
-        # genuinely fresh rows rank into the slots the duplicates would
-        # have consumed. Membership is a map-side array_contains against
-        # the bucket's own ≤max_bucket stored ids, NOT a 3-key anti-join
-        # that would re-shuffle the index.
-        fresh = banded.join(existing, ["band", "band_hash"], "left").filter(
-            F.col("stored_ids").isNull()
-            | ~F.array_contains("stored_ids", F.col(id_col))
-        )
-        capped = (
-            fresh.withColumn("rn", F.row_number().over(w))
-            .filter(
-                F.col("rn")
-                <= max_bucket - F.coalesce(F.col("n_existing"), F.lit(0))
-            )
-            .select(id_col, "band", "band_hash")
-        )
-    else:
-        capped = (
-            banded.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= max_bucket)
-            .select(id_col, "band", "band_hash")
-        )
-    writer = capped.write.format("parquet").mode(mode).bucketBy(
-        buckets, "band", "band_hash"
-    ).sortBy("band", "band_hash", id_col)
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
+    write_capped_index(
+        banded.select(id_col, "band", "band_hash"),
+        table,
+        keys=["band", "band_hash"],
+        id_col=id_col,
+        cap=max_bucket,
+        buckets=buckets,
+        mode=mode,
+        path=path,
+    )
 
 
 def probe_band_index(
@@ -648,53 +602,3 @@ def probe_band_index(
         F.coalesce("dup_of_hit", "n_id").alias("dup_of"),
         F.col("dup_of_hit").isNotNull().alias("is_dup"),
     )
-
-
-def retire_from_band_index(
-    spark,
-    table: str,
-    retired: DataFrame,
-    id_col: str = "doc_id",
-    buckets: int = 16,
-    path: str | None = None,
-) -> None:
-    """Retention for the stored band index (round-9 verdict #6): the K8
-    retention analogue (``sinks.py:46``, reference ``utils.py:139-162``)
-    for index state. Documents deleted from the corpus must also leave
-    the index — otherwise probes keep assigning new documents to ghosts,
-    and the retired rows hold bucket capacity forever.
-
-    ``retired`` is a DataFrame carrying the ids to drop in ``id_col``
-    (callers build it from whatever policy applies — explicit ids, or an
-    age predicate joined against the corpus table, mirroring the
-    reference's date-partition retention). Compaction rewrites the
-    survivors into the same bucketed layout, so:
-
-    - a subsequent ``probe_band_index`` no longer returns retired ids;
-    - a subsequent append sees the freed capacity (the capacity count
-      reads stored rows, so it is restored automatically and honestly);
-    - the ``max_bucket`` invariant and the exchange-free probe layout
-      both survive (bucketing spec is re-declared on the rewrite).
-
-    Cost and scale: one anti-join (retired side is retirement-batch
-    sized — broadcastable in any sane policy) plus one index-sized
-    rewrite through a lineage cut (``ckpt`` — reliable checkpoint when a
-    checkpoint dir is configured, so the overwrite never reads the files
-    it is replacing). An index rewrite per retirement batch is the same
-    amortization contract as the reference's nightly retention job:
-    batch retirements daily/weekly, never per-document.
-    """
-    survivors = ckpt(
-        spark.table(table).join(
-            retired.select(F.col(id_col)), [id_col], "left_anti"
-        )
-    )
-    writer = (
-        survivors.write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(buckets, "band", "band_hash")
-        .sortBy("band", "band_hash", id_col)
-    )
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)

@@ -308,7 +308,14 @@ def write_ivf_index(
     At 100 TB: the index is corpus-sized but writing it costs one
     shuffle; probes and appends afterwards never retrain or reshuffle it
     (the IVF contract: centroids are frozen until an explicit rebuild,
-    exactly like Faiss's add-after-train)."""
+    exactly like Faiss's add-after-train).
+
+    Retention: ``operators/layout.py::rewrite_index(..., key=id_col)``.
+    Retired vectors must leave the index or probes keep returning ghosts
+    as nearest neighbors — not wasted space but WRONG answers. The
+    rewrite leaves ``{table}_centroids`` untouched: the quantizer is
+    model state, and retiring vectors does not retrain it, exactly as
+    appending does not."""
     spark = emb.sparkSession
     assigned, cent_rows = kmeans_lite(emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
     writer = (
@@ -368,7 +375,6 @@ def append_to_ivf_index(
     spark,
     batch_emb: DataFrame,
     table: str,
-    buckets: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
@@ -379,7 +385,8 @@ def append_to_ivf_index(
     id column — ids are unique per vector, so this is the whole key).
     Centroid staleness is the standard IVF trade: lists drift as the
     corpus grows until an explicit ``write_ivf_index`` rebuild, which is
-    the Faiss add-vs-retrain contract.
+    the Faiss add-vs-retrain contract. ``insertInto`` writes under the
+    stored bucket spec, so the layout is the table's, not the caller's.
 
     Scale (review r11): the admission anti-join must NOT shuffle the
     corpus-sized stored id column per epoch. Routing is deterministic
@@ -401,57 +408,7 @@ def append_to_ivf_index(
         .select(id_col)
     )
     fresh = routed.join(stored_ids, [id_col], "left_anti")
-    (
-        fresh.write.format("parquet")
-        .mode("append")
-        .bucketBy(buckets, "cluster_id")
-        .sortBy("cluster_id", id_col)
-        .saveAsTable(table)
-    )
-
-
-def retire_from_ivf_index(
-    spark,
-    table: str,
-    retired: DataFrame,
-    id_col: str = "vec_id",
-    buckets: int = 16,
-    path: str | None = None,
-) -> None:
-    """Retention for the stored IVF index — the embedding twin of
-    ``retire_from_band_index`` (operators/dedup.py), completing the
-    index lifecycle symmetry: write / probe / append / retire on both
-    the text tier and the embedding tier. Vectors deleted from the
-    corpus must also leave the index, or probes keep returning ghosts
-    as nearest neighbors forever (an ANN index has no capacity cap to
-    reclaim, but ghost hits are worse than wasted space — they are
-    WRONG answers).
-
-    ``retired`` carries the ids to drop in ``id_col``. Compaction
-    rewrites the survivors into the same cluster_id-bucketed layout, so
-    the exchange-free probe plan and the frozen-centroid contract both
-    survive; ``{table}_centroids`` is deliberately untouched (the
-    quantizer is model state — retiring vectors does not retrain it,
-    exactly as appending does not; rebuild via ``write_ivf_index`` when
-    drift warrants).
-
-    Cost: one anti-join (retirement batch is broadcastable in any sane
-    policy) + one index-sized rewrite through a lineage cut (reliable
-    checkpoint when a dir is configured) so the overwrite never reads
-    the files it replaces. Batch retirements, never per-vector — the
-    same amortization contract as the band-index retire."""
-    survivors = ckpt(
-        spark.table(table).join(retired.select(F.col(id_col)), [id_col], "left_anti")
-    )
-    writer = (
-        survivors.write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(buckets, "cluster_id")
-        .sortBy("cluster_id", id_col)
-    )
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
+    fresh.select(*spark.table(table).columns).write.insertInto(table)
 
 
 def _assign_grouped(vectors: DataFrame, centroids: DataFrame, id_col: str) -> DataFrame:

@@ -14,12 +14,22 @@ min/max row per column (same bounded-model pattern as the IVF
 centroids). At 100 TB: `repartitionByRange` on the z-key does the global
 range shuffle (sampled bounds, no driver sort), and each output task
 writes one locality-tight file.
+
+The stored-index table mechanics live here too, once for the four index
+lifecycles (band, CDC chunk, IVF, postings): ``write_capped_index`` is
+the capped, bucketed writer; ``rewrite_index`` is the one in-place
+rewrite behind both retention and compaction, reading the table's
+layout from the catalog instead of restating it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import re
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..checkpoints import ckpt
 
 
 def zorder_key(df: DataFrame, cols: list[str], bits: int = 12) -> Column:
@@ -85,10 +95,9 @@ def compact_parquet_dir(
     compose with ``zorder_key`` for multi-dimensional layouts), then
     atomically swaps the staged result in via FileSystem rename.
 
-    Not a table-catalog operation: this is the path-level sibling of the
-    bucketed-table writers (write_band_index / write_ivf_index keep
-    their OWN layout through saveAsTable and must not pass through
-    here — compaction would destroy the bucket-file mapping).
+    Not a table-catalog operation: this is the path-level sibling of
+    ``rewrite_index``. The bucketed index tables must not pass through
+    here — compaction would destroy the bucket-file mapping.
 
     Returns {"files_before", "files_after", "bytes"} for observability.
     At scale: one full read + one ``repartition`` shuffle + one write —
@@ -130,79 +139,136 @@ def compact_parquet_dir(
     }
 
 
-def compact_bucketed_table(
-    spark,
+def write_capped_index(
+    rows: DataFrame,
     table: str,
-    bucket_cols: list[str],
-    sort_cols: list[str],
-    buckets: int = 16,
-    path: str | None = None,
-) -> dict:
-    """Small-files compaction for the BUCKETED index tables — the
-    catalog-side sibling of ``compact_parquet_dir`` (which must not
-    touch bucketed layouts). Every ``mode='append'`` ingest into a
-    stored index (band / IVF / CDC chunk) writes its own set of bucket
-    files, so after N daily ingests each bucket holds ~N small files
-    and probe scans go file-count-bound — the same disease compaction
-    cures elsewhere, but here the cure must PRESERVE the bucket-file
-    mapping or every future probe pays an Exchange again.
+    *,
+    keys: list[str],
+    id_col: str,
+    cap: int,
+    buckets: int,
+    mode: str,
+    path: str | None,
+) -> None:
+    """The one writer behind the capped stored indexes (band, CDC chunk):
+    ``rows`` land in ``table`` bucketed on ``keys`` and sorted on
+    ``keys + [id_col]``, at most ``cap`` rows per key, ranked by
+    ``id_col``.
 
-    Rewrite: content through a lineage cut (safe to overwrite the files
-    being replaced), repartitioned on the bucket columns into exactly
-    ``buckets`` partitions — Spark's repartition hash and its bucket
-    hash are both Murmur3 on the same columns, so each task holds
-    exactly one bucket and the rewrite lands ONE file per bucket — then
-    ``saveAsTable`` re-declares the bucketing spec and sort order.
+    The cap holds ACROSS appends by induction: ``mode='overwrite'`` caps
+    within the write; ``mode='append'`` first measures each key's
+    remaining capacity ``cap - n_existing`` from the stored table and
+    admits only that many incoming rows per key, so a stored key never
+    exceeds ``cap`` however many batches land on it. Earlier ingests
+    win; within one batch, the smallest id wins. Append is IDEMPOTENT:
+    a (key, id) row already stored is dropped before ranking, so a
+    re-ingested batch neither duplicates rows nor burns capacity.
 
-    Returns {"files_before", "files_after"} for observability. Cost:
-    one index-sized read + one shuffle + one write — schedule with
-    retention, never per-ingest (the append-capacity design already
-    keeps per-ingest work bounded)."""
-    from ..checkpoints import ckpt
-
-    def _n_files() -> int:
-        loc = None
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect():
-            if r.col_name == "Location":
-                loc = r.data_type
-        if loc is None:
-            raise RuntimeError(
-                f"DESCRIBE TABLE EXTENDED {table} reported no Location row; "
-                "cannot count bucket files for a table without a filesystem "
-                "location"
+    The capacity count and the stored id set come from one aggregation
+    grouped on exactly the bucket keys, so it runs on the bucketed
+    scan's own partitioning with no Exchange; the id set is bounded by
+    ``cap`` (the invariant), fixed-size state rather than data-sized.
+    Membership is a map-side ``array_contains`` against it, not a
+    multi-key anti-join that would re-shuffle the index. ``saveAsTable``
+    re-declares the bucket spec, which Spark checks against the stored
+    one on append."""
+    cols = rows.columns
+    w = Window.partitionBy(*keys).orderBy(id_col)
+    spark = rows.sparkSession
+    room = F.lit(cap)
+    if mode == "append" and spark.catalog.tableExists(table):
+        existing = (
+            spark.table(table)
+            .groupBy(*keys)
+            .agg(
+                F.count(F.lit(1)).alias("n_existing"),
+                F.collect_set(F.col(id_col)).alias("stored_ids"),
             )
-        jvm = spark._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(loc)
-        fs = jpath.getFileSystem(hconf)
-        n = 0
-        it = fs.listFiles(jpath, True)
-        while it.hasNext():
-            f = it.next()
-            name = f.getPath().getName()
-            if not name.startswith("_") and not name.startswith("."):
-                n += 1
-        return n
-
-    files_before = _n_files()
-    cols = spark.table(table).columns
-    survivors = ckpt(spark.table(table))
+        )
+        rows = rows.join(existing, keys, "left").filter(
+            F.col("stored_ids").isNull()
+            | ~F.array_contains("stored_ids", F.col(id_col))
+        )
+        room = cap - F.coalesce(F.col("n_existing"), F.lit(0))
+    capped = (
+        rows.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= room)
+        .select(*cols)
+    )
     writer = (
-        survivors.repartition(buckets, *[survivors[c] for c in bucket_cols])
-        .write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(buckets, bucket_cols[0], *bucket_cols[1:])
-        .sortBy(sort_cols[0], *sort_cols[1:])
+        capped.write.format("parquet")
+        .mode(mode)
+        .bucketBy(buckets, keys[0], *keys[1:])
+        .sortBy(*keys, id_col)
     )
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
-    # explicit check (not assert — must survive python -O): the rewrite
-    # must be schema-preserving or every index reader breaks silently
-    got = spark.table(table).columns
-    if got != cols:
+
+
+def _n_files(spark, loc: str) -> int:
+    jvm = spark._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    jpath = jvm.org.apache.hadoop.fs.Path(loc)
+    it = jpath.getFileSystem(hconf).listFiles(jpath, True)
+    n = 0
+    while it.hasNext():
+        name = it.next().getPath().getName()
+        if not name.startswith("_") and not name.startswith("."):
+            n += 1
+    return n
+
+
+def rewrite_index(
+    spark, table: str, retired: DataFrame | None = None, key: str = "doc_id"
+) -> dict:
+    """Rewrite a stored index IN PLACE: retention and compaction in one
+    pass, for every index table (band, CDC chunk, IVF, postings and its
+    ``_docs`` companion).
+
+    - Retention: rows whose ``key`` appears in ``retired`` leave the
+      table (one anti-join against a retirement batch). Probes stop
+      returning ghosts, and the capped indexes regain the freed
+      capacity, because their append counts stored rows.
+    - Compaction: every append writes its own set of bucket files, so
+      after N ingests each bucket holds ~N small files and probe scans
+      go file-count-bound. The survivors are repartitioned on the bucket
+      columns into exactly the stored bucket count — Spark's repartition
+      hash and its bucket hash are both Murmur3 on the same columns — so
+      each task holds one bucket and the rewrite lands ONE file per
+      bucket. An unbucketed table is rewritten as it is partitioned.
+
+    The layout is the catalog's, never the caller's: location, bucket
+    count and bucket columns come from one ``DESCRIBE TABLE EXTENDED``,
+    and ``insertInto(overwrite=True)`` writes the survivors, re-selected
+    in the stored column order (it matches by position), back under the
+    stored bucket and sort spec at the stored location — so no file
+    holding a retired row survives. The survivors pass through a lineage
+    cut (``ckpt``) first, so the overwrite never reads the files it
+    replaces.
+
+    Returns {"files_before", "files_after"}. Cost: one index-sized read,
+    one shuffle, one write — the amortization contract of the
+    reference's nightly retention job: batch retirements and schedule
+    compaction with them, never per document or per ingest."""
+    info = {
+        r.col_name: r.data_type
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    }
+    loc = info.get("Location")
+    if loc is None:
         raise RuntimeError(
-            f"compact_bucketed_table changed the schema of {table}: "
-            f"{cols} -> {got}"
+            f"DESCRIBE TABLE EXTENDED {table} reported no Location row; "
+            "cannot rewrite a table without a filesystem location"
         )
-    return {"files_before": files_before, "files_after": _n_files()}
+    files_before = _n_files(spark, loc)
+    df = spark.table(table)
+    cols = df.columns
+    if retired is not None:
+        df = df.join(retired.select(key), [key], "left_anti").select(*cols)
+    survivors = ckpt(df)
+    if "Num Buckets" in info:
+        bucket_cols = re.findall(r"`([^`]+)`", info["Bucket Columns"])
+        survivors = survivors.repartition(int(info["Num Buckets"]), *bucket_cols)
+    survivors.write.insertInto(table, overwrite=True)
+    return {"files_before": files_before, "files_after": _n_files(spark, loc)}

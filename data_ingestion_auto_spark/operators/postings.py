@@ -29,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..checkpoints import ckpt, ckpt_local
+from ..checkpoints import ckpt_local
+from .layout import rewrite_index
 
 # the BM25 integer rationalization shared with plans/retrieval.py
 # (k1 = 1.2, b = 0.75; log-free rational idf) — same formula text so the
@@ -145,14 +146,14 @@ def append_to_postings_index(
     spark,
     docs: DataFrame,
     table: str,
-    buckets: int = 16,
     max_postings_per_term: int = 100000,
 ) -> None:
     """Add a batch without a rebuild: idempotent on doc_id (a doc already
-    in `{table}_docs` contributes nothing), postings appended under the
-    same bucketing, `{table}_docs` appended so the NEXT search's corpus
-    scalars and idf see the batch — live statistics, the opposite trade
-    from the IVF tier's frozen centroids. The per-term impact cap is
+    in `{table}_docs` contributes nothing), postings appended through
+    ``insertInto`` under the stored bucketing, `{table}_docs` appended
+    so the NEXT search's corpus scalars and idf see the batch — live
+    statistics, the opposite trade from the IVF tier's frozen
+    centroids. The per-term impact cap is
     honored against remaining capacity (earlier ingests win), the band
     index's induction argument.
 
@@ -195,15 +196,8 @@ def append_to_postings_index(
             F.col("rn")
             <= max_postings_per_term - F.coalesce(F.col("n_existing"), F.lit(0))
         )
-        .select("term", "doc_id", "tf", "dl")
     )
-    (
-        capped.write.format("parquet")
-        .mode("append")
-        .bucketBy(buckets, "term")
-        .sortBy("term", "doc_id")
-        .saveAsTable(table)
-    )
+    capped.select(*stored.columns).write.insertInto(table)
     # docs-side idempotence: recompute the anti-join NOW (not the
     # fresh_docs snapshot taken before the postings append) so a replay
     # that already committed docs appends nothing. No coalesce(1): the
@@ -211,47 +205,14 @@ def append_to_postings_index(
     (
         docs.select("doc_id", F.size(F.split("text", " ")).cast("bigint").alias("dl"))
         .join(spark.table(f"{table}_docs").select("doc_id"), ["doc_id"], "left_anti")
-        .write.format("parquet")
-        .mode("append")
-        .saveAsTable(f"{table}_docs")
+        .write.insertInto(f"{table}_docs")
     )
 
 
-def retire_from_postings_index(
-    spark,
-    table: str,
-    retired: DataFrame,
-    buckets: int = 16,
-    path: str | None = None,
-) -> None:
+def retire_from_postings_index(spark, table: str, retired: DataFrame) -> None:
     """Retention: retired documents leave both the postings and the
-    docs table (ghost postings inflate df and decay ranking quality;
-    ghost doc rows corrupt N/avgdl). Anti-join compaction through a
-    lineage cut, preserving the bucketed layout — the house retire
-    contract, fourth instance."""
-    survivors = ckpt(
-        spark.table(table).join(retired.select("doc_id"), ["doc_id"], "left_anti")
-    )
-    writer = (
-        survivors.write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(buckets, "term")
-        .sortBy("term", "doc_id")
-    )
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-    dsurv = ckpt(
-        spark.table(f"{table}_docs").join(
-            retired.select("doc_id"), ["doc_id"], "left_anti"
-        )
-    )
-    # dsurv went through ckpt (lineage cut), so overwriting the ORIGINAL
-    # `{path}_docs` location is safe — and keeps the path convention
-    # write_postings_index established (a `_docs2` sidecar would leave
-    # ghost data at `_docs` for any path-convention reader and collide
-    # with itself on the next retire).
-    dw = dsurv.write.format("parquet").mode("overwrite")
-    if path is not None:
-        dw = dw.option("path", path + "_docs")
-    dw.saveAsTable(f"{table}_docs")
+    ``{table}_docs`` companion (ghost postings inflate df and decay
+    ranking quality; ghost doc rows corrupt N/avgdl) — two in-place
+    ``rewrite_index`` passes, which also compact the appended files."""
+    rewrite_index(spark, table, retired)
+    rewrite_index(spark, f"{table}_docs", retired)

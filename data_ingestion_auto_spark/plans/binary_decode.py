@@ -19,25 +19,12 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from ..scratch import artifact_root
 from ..sources.gribsim import decode_grid_files, encode_message
 from .helpers import sort_small
 from .registry import query
 from .warp import DENSE_CTES, _dense_grid
 
-
-
-def _scratch_root() -> str:
-    """Built-fixture root: per-process scratch (optimization r13 — built
-    inputs must not persist across invocations; see scratch.py), or the
-    shared memo root when a deployment explicitly configured one."""
-    import os
-
-    root = os.environ.get("SPARK_GRAFT_CC_MEMO_DIR")
-    if root:
-        return root
-    from ..scratch import process_scratch_dir
-
-    return process_scratch_dir()
 
 def _ensure_sgb_fixture(spark, sf_dir: str) -> str:
     """Encode the dense raster into two SGB1 files — file 0 holds
@@ -60,7 +47,7 @@ def _ensure_sgb_fixture(spark, sf_dir: str) -> str:
         stats.append(os.stat(src))
     fp = f"{sum(s.st_size for s in stats)}_{max(int(s.st_mtime) for s in stats)}"
     base = os.path.join(
-        _scratch_root(),
+        artifact_root(),
         f"spark_graft_sgb_v1_{os.path.basename(sf_dir.rstrip('/'))}_{fp}",
     )
     marker = os.path.join(base, "_SUCCESS")
@@ -143,7 +130,7 @@ def _ensure_grib2_fixture(spark, sf_dir: str) -> str:
         stats.append(os.stat(src))
     fp = f"{sum(s.st_size for s in stats)}_{max(int(s.st_mtime) for s in stats)}"
     base = os.path.join(
-        _scratch_root(),
+        artifact_root(),
         f"spark_graft_grib2_v1_{os.path.basename(sf_dir.rstrip('/'))}_{fp}",
     )
     marker = os.path.join(base, "_SUCCESS")
@@ -243,7 +230,7 @@ def _ensure_grib2_bitmap_fixture(spark, sf_dir: str) -> str:
         stats.append(os.stat(src))
     fp = f"{sum(s.st_size for s in stats)}_{max(int(s.st_mtime) for s in stats)}"
     base = os.path.join(
-        _scratch_root(),
+        artifact_root(),
         f"spark_graft_grib2bm_v1_{os.path.basename(sf_dir.rstrip('/'))}_{fp}",
     )
     marker = os.path.join(base, "_SUCCESS")

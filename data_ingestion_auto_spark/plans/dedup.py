@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as D
 from ..checkpoints import ckpt
+from ..scratch import artifact_root
 from .helpers import T, spread
 from .registry import query
 
@@ -75,21 +76,6 @@ def _corpus_entries(sf_dir: str, src_file: str) -> list[tuple[str, int, int]]:
     return sorted(entries)
 
 
-def _memo_root_dir() -> str:
-    """$SPARK_GRAFT_CC_MEMO_DIR (shared storage, a production deployment
-    decision) or the per-PROCESS scratch root — never a dir that outlives
-    the invocation (optimization r13: every bench/oracle run must compute
-    its artifacts from the parquet inputs; see scratch.py)."""
-    import os
-
-    root = os.environ.get("SPARK_GRAFT_CC_MEMO_DIR")
-    if root:
-        return root
-    from ..scratch import process_scratch_dir
-
-    return process_scratch_dir()
-
-
 def _memo_base(sf_dir: str, name: str, entries: list[tuple[str, int, int]]) -> str:
     """Memo dir path for a (name, corpus-version) pair. Fingerprint =
     file count + sha256 over the sorted (relpath, size, mtime_ns)
@@ -105,7 +91,7 @@ def _memo_base(sf_dir: str, name: str, entries: list[tuple[str, int, int]]) -> s
         h.update(f"{relpath}|{size}|{mtime_ns};".encode())
     fp = f"{len(entries)}_{h.hexdigest()[:16]}"
     key = f"{os.path.basename(sf_dir.rstrip('/'))}_{_MEMO_VERSION}_{fp}"
-    return os.path.join(_memo_root_dir(), f"spark_graft_{name}_{key}")
+    return os.path.join(artifact_root(), f"spark_graft_{name}_{key}")
 
 
 def find_appendable_prior(sf_dir: str, name: str, src_file: str = "documents.parquet"):
@@ -138,7 +124,7 @@ def find_appendable_prior(sf_dir: str, name: str, src_file: str = "documents.par
         }
 
     entries = data_files(_corpus_entries(sf_dir, src_file))
-    root_dir = _memo_root_dir()
+    root_dir = artifact_root()
     corpus = os.path.basename(sf_dir.rstrip("/"))
     prefix = f"spark_graft_{name}_{corpus}_{_MEMO_VERSION}_"
     best: tuple[int, str] | None = None

@@ -13,23 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..scratch import artifact_root
 from .helpers import T
 from .registry import query
-
-
-def _scratch_root() -> str:
-    """Built-fixture root: per-process scratch (optimization r13 — built
-    inputs must not persist across invocations; see scratch.py), or the
-    shared memo root when a deployment explicitly configured one."""
-    import os
-
-    root = os.environ.get("SPARK_GRAFT_CC_MEMO_DIR")
-    if root:
-        return root
-    from ..scratch import process_scratch_dir
-
-    return process_scratch_dir()
-
 
 
 @query(
@@ -229,7 +215,7 @@ def _ensure_remote_corpus(spark, sf_dir: str) -> str:
     import tempfile
 
     base = os.path.join(
-        _scratch_root(),
+        artifact_root(),
         f"spark_graft_http_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     marker = os.path.join(base, "remote", "_SUCCESS")
@@ -324,7 +310,7 @@ def _ensure_remote_messages(spark, sf_dir: str) -> str:
     import tempfile
 
     base = os.path.join(
-        _scratch_root(),
+        artifact_root(),
         f"spark_graft_msgs_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     marker = os.path.join(base, "remote", "_SUCCESS")

@@ -24,8 +24,14 @@ import os
 _PROCESS_SCRATCH: list[str] = []
 
 
-def process_scratch_dir() -> str:
-    """The per-process scratch root (created lazily, rmtree'd at exit)."""
+def artifact_root() -> str:
+    """Root for derived artifacts (memo tables, built fixtures):
+    ``$SPARK_GRAFT_CC_MEMO_DIR`` when a deployment configured shared
+    storage, else the per-process scratch dir (created lazily, rmtree'd
+    at exit) — never a dir that outlives the invocation by default."""
+    root = os.environ.get("SPARK_GRAFT_CC_MEMO_DIR")
+    if root:
+        return root
     if not _PROCESS_SCRATCH:
         import atexit
         import shutil

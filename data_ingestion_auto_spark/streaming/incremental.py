@@ -28,6 +28,13 @@ CDC/band bootstrap empty indexes, and each loop's delivery-semantics
 docstring is pinned by its own stream-vs-batch-control test. A shared
 skeleton would trade four readable, individually-pinned contracts for
 one function with four behavior flags.
+
+Bucket layout: a loop's ``buckets`` sizes only the EMPTY index it
+bootstraps on cold start. Once a table exists its bucket spec is the
+catalog's — appends either write through ``insertInto`` (IVF, postings)
+or re-declare a spec that Spark checks against the stored one (band,
+CDC), so ``buckets`` must equal the stored count there; the IVF loop
+never bootstraps and takes no ``buckets`` at all.
 """
 
 from __future__ import annotations
@@ -375,7 +382,6 @@ def start_ann_ingest_stream(
     index_table: str,
     assign_path: str,
     checkpoint: str,
-    buckets: int = 16,
     nprobe: int = 2,
     topk: int = 3,
 ):
@@ -428,7 +434,7 @@ def start_ann_ingest_stream(
             .write.mode("append")
             .parquet(assign_path)
         )
-        V.append_to_ivf_index(spark, batch, index_table, buckets=buckets)
+        V.append_to_ivf_index(spark, batch, index_table)
         spark.catalog.refreshTable(index_table)
 
     return (
@@ -555,7 +561,7 @@ def start_search_ingest_stream(
         spark.catalog.refreshTable(index_table)
         spark.catalog.refreshTable(f"{index_table}_docs")
         batch = batch_df.localCheckpoint()
-        P.append_to_postings_index(spark, batch, index_table, buckets=buckets)
+        P.append_to_postings_index(spark, batch, index_table)
         spark.catalog.refreshTable(index_table)
         spark.catalog.refreshTable(f"{index_table}_docs")
         (

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_ingestion_auto_spark.operators import cdc_index as C
+from data_ingestion_auto_spark.operators.layout import rewrite_index
 
 
 def _plan(df) -> str:
@@ -91,9 +92,7 @@ def test_probe_append_retire_cycle(spark, corpus, tmp_path):
     # owner — which is doc 100 itself once appended, so self-exclusion
     # leaves the passage unclaimed by anyone else
     retired = spark.createDataFrame([(2,)], "doc_id long")
-    C.retire_from_chunk_index(
-        spark, "t_cdc_idx", retired, buckets=4, path=str(tmp_path / "ci2")
-    )
+    rewrite_index(spark, "t_cdc_idx", retired)
     assert spark.table("t_cdc_idx").filter("doc_id = 2").count() == 0
     after = {r.doc_id: r for r in C.probe_chunk_index(spark, batch1, "t_cdc_idx").collect()}
     assert after[100].dup_of != 2
@@ -168,12 +167,10 @@ def test_per_chunk_cap_holds_across_appends(spark, tmp_path):
         .collect()
     )
     assert hot
-    C.retire_from_chunk_index(
+    rewrite_index(
         spark,
         "t_cdc_cap",
         spark.createDataFrame([(hot[0].keeper,)], "doc_id long"),
-        buckets=2,
-        path=str(tmp_path / "cap2"),
     )
     C.write_chunk_index(
         mk((20,)), "t_cdc_cap", buckets=2, max_per_chunk=3, mode="append"

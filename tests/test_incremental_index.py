@@ -22,6 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_ingestion_auto_spark.operators import dedup as D
+from data_ingestion_auto_spark.operators.layout import rewrite_index
 
 
 def _plan(df) -> str:
@@ -312,10 +313,7 @@ def test_retire_forgets_probe_hits_and_restores_capacity(spark, tmp_path):
     assert (r0.dup_of, r0.is_dup) == (0, True)
 
     retired = spark.createDataFrame([(0,), (1,)], "doc_id long")
-    D.retire_from_band_index(
-        spark, "t_band_idx_ret", retired, buckets=4,
-        path=str(tmp_path / "idx_ret"),
-    )
+    rewrite_index(spark, "t_band_idx_ret", retired)
     assert sorted(
         r.doc_id for r in spark.table("t_band_idx_ret").collect()
     ) == [2, 3, 4]
@@ -334,10 +332,9 @@ def test_retire_forgets_probe_hits_and_restores_capacity(spark, tmp_path):
     assert stored == [2, 3, 4, 100, 101]
 
     # retire everything in the bucket: the probe finds no partner at all
-    D.retire_from_band_index(
+    rewrite_index(
         spark, "t_band_idx_ret",
         spark.createDataFrame([(i,) for i in stored], "doc_id long"),
-        buckets=4, path=str(tmp_path / "idx_ret"),
     )
     r2 = D.probe_band_index(spark, probe, "t_band_idx_ret").collect()[0]
     assert (r2.dup_of, r2.is_dup) == (500, False)

@@ -22,6 +22,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from data_ingestion_auto_spark.operators import ivf as V
+from data_ingestion_auto_spark.operators.layout import rewrite_index
 
 
 def _plan(df) -> str:
@@ -142,7 +143,7 @@ def test_append_routes_with_frozen_centroids_and_is_idempotent(
         for r in spark.table("t_ivf_idx_a_centroids").collect()
     )
 
-    V.append_to_ivf_index(spark, batch, "t_ivf_idx_a", buckets=8)
+    V.append_to_ivf_index(spark, batch, "t_ivf_idx_a")
     n1 = spark.table("t_ivf_idx_a").count()
     assert n1 == n0 + batch.count()
     # centroids are FROZEN: append must not touch them, and the appended
@@ -168,7 +169,7 @@ def test_append_routes_with_frozen_centroids_and_is_idempotent(
     assert "Bucketed: true" in p
 
     # re-ingest: exact no-op
-    V.append_to_ivf_index(spark, batch, "t_ivf_idx_a", buckets=8)
+    V.append_to_ivf_index(spark, batch, "t_ivf_idx_a")
     assert spark.table("t_ivf_idx_a").count() == n1
     assert spark.table("t_ivf_idx_a").select("vec_id").distinct().count() == n1
 
@@ -201,9 +202,7 @@ def test_retire_removes_ghosts_and_preserves_layout(spark, emb_split, tmp_path):
     ]
     assert retired_ids
     retired = spark.createDataFrame([(i,) for i in retired_ids], "vec_id bigint")
-    V.retire_from_ivf_index(
-        spark, "t_ivf_idx_r", retired, buckets=8, path=str(tmp_path / "ivf_r2")
-    )
+    rewrite_index(spark, "t_ivf_idx_r", retired, key="vec_id")
 
     # ghosts are gone from storage AND from probe results
     assert spark.table("t_ivf_idx_r").count() == n0 - len(retired_ids)
@@ -221,5 +220,5 @@ def test_retire_removes_ghosts_and_preserves_layout(spark, emb_split, tmp_path):
 
     # a retired id re-appends as fresh, routed by the frozen quantizer
     revived = corpus.filter(F.col("vec_id").isin(retired_ids[:2]))
-    V.append_to_ivf_index(spark, revived, "t_ivf_idx_r", buckets=8)
+    V.append_to_ivf_index(spark, revived, "t_ivf_idx_r")
     assert spark.table("t_ivf_idx_r").count() == n0 - len(retired_ids) + 2

@@ -83,7 +83,7 @@ def test_append_live_stats_and_idempotence(spark, sf_dir, tmp_path):
     before = _rows(P.bm25_search(spark, _BM25_TERMS, "t_post_idx_a", k=10))
     n_docs0 = spark.table("t_post_idx_a_docs").count()
 
-    P.append_to_postings_index(spark, batch, "t_post_idx_a", buckets=8)
+    P.append_to_postings_index(spark, batch, "t_post_idx_a")
     assert spark.table("t_post_idx_a_docs").count() == n_docs0 + batch.count()
     after = _rows(P.bm25_search(spark, _BM25_TERMS, "t_post_idx_a", k=10))
     batch_ids = {r.doc_id for r in batch.collect()}
@@ -96,19 +96,13 @@ def test_append_live_stats_and_idempotence(spark, sf_dir, tmp_path):
     assert after != before  # live stats: the ranking genuinely moved
 
     n_post = spark.table("t_post_idx_a").count()
-    P.append_to_postings_index(spark, batch, "t_post_idx_a", buckets=8)
+    P.append_to_postings_index(spark, batch, "t_post_idx_a")
     assert spark.table("t_post_idx_a").count() == n_post
     assert spark.table("t_post_idx_a_docs").count() == n_docs0 + batch.count()
 
     # retire the appended batch: search returns to the corpus-only
     # ranking (postings, df, N and avgdl all restored)
-    P.retire_from_postings_index(
-        spark,
-        "t_post_idx_a",
-        batch.select("doc_id"),
-        buckets=8,
-        path=str(tmp_path / "pa2"),
-    )
+    P.retire_from_postings_index(spark, "t_post_idx_a", batch.select("doc_id"))
     restored = _rows(P.bm25_search(spark, _BM25_TERMS, "t_post_idx_a", k=10))
     assert restored == before
     assert not batch_ids & {d for d, _, _ in restored}
@@ -129,7 +123,7 @@ def test_crash_between_appends_replays_exactly_once(spark, sf_dir, tmp_path):
     spark.sql("DROP TABLE IF EXISTS t_post_ctl")
     spark.sql("DROP TABLE IF EXISTS t_post_ctl_docs")
     P.write_postings_index(corpus, "t_post_ctl", buckets=8, path=str(tmp_path / "ctl"))
-    P.append_to_postings_index(spark, batch, "t_post_ctl", buckets=8)
+    P.append_to_postings_index(spark, batch, "t_post_ctl")
 
     # crashed run: simulate the first write committing and the second not
     spark.sql("DROP TABLE IF EXISTS t_post_crash")
@@ -146,7 +140,7 @@ def test_crash_between_appends_replays_exactly_once(spark, sf_dir, tmp_path):
         .saveAsTable("t_post_crash")
     )
     # ... crash: t_post_crash_docs never updated. foreachBatch replays:
-    P.append_to_postings_index(spark, batch, "t_post_crash", buckets=8)
+    P.append_to_postings_index(spark, batch, "t_post_crash")
 
     key = lambda t: sorted(
         map(tuple, spark.table(t).select("term", "doc_id", "tf", "dl").collect())

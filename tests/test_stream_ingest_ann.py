@@ -62,7 +62,6 @@ def _run_stream(spark, tmp, corpus, b1, b2, tag):
         idx,
         assign_path=str(tmp / f"aassign_{tag}"),
         checkpoint=str(tmp / f"ackpt_{tag}"),
-        buckets=8,
     )
     q.awaitTermination(300)
     return idx, str(tmp / f"aassign_{tag}")
@@ -78,7 +77,7 @@ def _batch_control(spark, tmp, corpus, batches, tag):
         bdf = spark.createDataFrame(batch, _SCHEMA).localCheckpoint()
         for r in V.probe_ivf_index(spark, bdf, idx).collect():
             out[(r.query_id, r.rank)] = (r.cand_id, r.cosine)
-        V.append_to_ivf_index(spark, bdf, idx, buckets=8)
+        V.append_to_ivf_index(spark, bdf, idx)
     return idx, out
 
 
@@ -128,7 +127,6 @@ def test_replay_keeps_index_and_refines_rankwise(spark, emb_batches, tmp_path):
         idx,
         assign_path=assign_path,
         checkpoint=str(tmp_path / "ackpt_r2"),
-        buckets=8,
     )
     q.awaitTermination(300)
 
