@@ -141,12 +141,6 @@ def _prior_costs() -> dict[str, float]:
         return {}
 
 
-def _memo_root() -> str:
-    import tempfile
-
-    return os.environ.get("SPARK_GRAFT_CC_MEMO_DIR", tempfile.gettempdir())
-
-
 def _clear_memos(sf_dir: str) -> int:
     """--cold: drop the published memos FOR THIS CORPUS so the run pays
     (and records) the one-time per-corpus build cost — the ratchet's view
@@ -157,8 +151,10 @@ def _clear_memos(sf_dir: str) -> int:
     under concurrently-running drivers mid-read."""
     import shutil
 
+    from data_ingestion_auto_spark.scratch import artifact_root
+
     n = 0
-    root = _memo_root()
+    root = artifact_root()
     corpus = os.path.basename(sf_dir.rstrip("/"))
     try:
         entries = os.listdir(root)

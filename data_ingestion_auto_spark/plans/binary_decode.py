@@ -14,70 +14,45 @@ subdatasets modis/convertmodis.py:273-303) the way
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
-from ..scratch import artifact_root
 from ..sources.gribsim import decode_grid_files, encode_message
+from .dedup import publish_once
 from .helpers import sort_small
 from .registry import query
 from .warp import DENSE_CTES, _dense_grid
+
+
+def _dense_arrays(spark, sf_dir: str) -> dict:
+    """The dense raster per variable as ``{variable: (ny, nx, values)}``,
+    values row-major. The toPandas is bounded fixture scaffolding (240
+    rows), same class as the HTTP origin-server build in sources_ops.py."""
+    pdf = _dense_grid(spark, sf_dir).orderBy("variable", "y", "x").toPandas()
+    grids = {}
+    for v, part in pdf.groupby("variable"):
+        grids[v] = (int(part.y.max()) + 1, int(part.x.max()) + 1, part.value.to_numpy())
+    return grids
 
 
 def _ensure_sgb_fixture(spark, sf_dir: str) -> str:
     """Encode the dense raster into two SGB1 files — file 0 holds
     messages 'a' and 'b' (multi-message framing exercised), file 1 holds
     'c' = negated 'a' (exact double negation, so the oracle can replay
-    it). Built once per sf: atomic rename + _SUCCESS marker. The
-    toPandas is bounded fixture scaffolding (240 rows), same class as
-    the HTTP origin-server build in sources_ops.py."""
-    # key = version tag (bump when the dense-grid derivation or message
-    # layout changes) + the EVENTS table's file fingerprint (the raster
-    # derives from events, so a regenerated corpus must rebuild the
-    # fixture instead of serving stale bytes the live oracle no longer
-    # matches — same staleness rule as plans/dedup.py::_corpus_memo)
-    src = os.path.join(sf_dir, "events.parquet")
-    stats = []
-    if os.path.isdir(src):
-        for root, _, files in os.walk(src):
-            stats.extend(os.stat(os.path.join(root, f)) for f in files)
-    else:
-        stats.append(os.stat(src))
-    fp = f"{sum(s.st_size for s in stats)}_{max(int(s.st_mtime) for s in stats)}"
-    base = os.path.join(
-        artifact_root(),
-        f"spark_graft_sgb_v1_{os.path.basename(sf_dir.rstrip('/'))}_{fp}",
-    )
-    marker = os.path.join(base, "_SUCCESS")
-    if not os.path.exists(marker):
-        pdf = _dense_grid(spark, sf_dir).orderBy("variable", "y", "x").toPandas()
-        grids = {}
-        for v in ("a", "b"):
-            part = pdf[pdf.variable == v]
-            ny = int(part.y.max()) + 1
-            nx = int(part.x.max()) + 1
-            grids[v] = (ny, nx, [float(x) for x in part.value.to_numpy()])
-        # private build dir per builder (uuid) so a lost race can never
-        # leak straggler files into the winner's published dir
-        import uuid
+    it). Published once per events-table version through
+    `publish_once` (the raster derives from events)."""
 
-        tmp = f"{base}.building-{uuid.uuid4().hex}"
-        os.makedirs(tmp)
+    def write(tmp: str) -> None:
+        grids = _dense_arrays(spark, sf_dir)
         with open(os.path.join(tmp, "grid-0.sgb"), "wb") as f:
             for v in ("a", "b"):
                 ny, nx, vals = grids[v]
-                f.write(encode_message(v, ny, nx, vals))
+                f.write(encode_message(v, ny, nx, [float(x) for x in vals]))
         with open(os.path.join(tmp, "grid-1.sgb"), "wb") as f:
             ny, nx, vals = grids["a"]
-            f.write(encode_message("c", ny, nx, [-x for x in vals]))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        try:
-            os.rename(tmp, base)
-        except OSError:  # lost a concurrent-build race; winner is identical
-            shutil.rmtree(tmp, ignore_errors=True)
-    return base
+            f.write(encode_message("c", ny, nx, [-float(x) for x in vals]))
+
+    return publish_once(sf_dir, "sgb", write, "events.parquet")
 
 
 @query(
@@ -115,52 +90,25 @@ def _ensure_grib2_fixture(spark, sf_dir: str) -> str:
     (= floor of 'b') as a multi-message file, file 1 holds 'v' =
     negated 't'. Integer fields at E=D=0 round-trip bit-exactly
     (tests/test_grib2.py), which is what makes the oracle hash
-    meaningful. Same per-sf staleness key + atomic publish as the SGB1
-    fixture."""
+    meaningful. Keyed on the events table, like the SGB1 fixture."""
     import math
 
     from ..sources.grib2 import encode_message as encode_grib2
 
-    src = os.path.join(sf_dir, "events.parquet")
-    stats = []
-    if os.path.isdir(src):
-        for root, _, files in os.walk(src):
-            stats.extend(os.stat(os.path.join(root, f)) for f in files)
-    else:
-        stats.append(os.stat(src))
-    fp = f"{sum(s.st_size for s in stats)}_{max(int(s.st_mtime) for s in stats)}"
-    base = os.path.join(
-        artifact_root(),
-        f"spark_graft_grib2_v1_{os.path.basename(sf_dir.rstrip('/'))}_{fp}",
-    )
-    marker = os.path.join(base, "_SUCCESS")
-    if not os.path.exists(marker):
-        pdf = _dense_grid(spark, sf_dir).orderBy("variable", "y", "x").toPandas()
-        grids = {}
+    def write(tmp: str) -> None:
+        grids = _dense_arrays(spark, sf_dir)
+        msgs = {}
         for src_v, out_v, sign in (("a", "t", 1), ("b", "u", 1), ("a", "v", -1)):
-            part = pdf[pdf.variable == src_v]
-            ny = int(part.y.max()) + 1
-            nx = int(part.x.max()) + 1
-            vals = [sign * float(math.floor(x)) for x in part.value.to_numpy()]
+            ny, nx, vals = grids[src_v]
+            vals = [sign * float(math.floor(x)) for x in vals]
             span = int(max(vals) - min(vals))
-            grids[out_v] = (ny, nx, vals, max(1, span.bit_length()))
-        import uuid
-
-        tmp = f"{base}.building-{uuid.uuid4().hex}"
-        os.makedirs(tmp)
+            msgs[out_v] = encode_grib2(out_v, ny, nx, vals, nbits=max(1, span.bit_length()))
         with open(os.path.join(tmp, "grid-0.grib2"), "wb") as f:
-            for v in ("t", "u"):
-                ny, nx, vals, nbits = grids[v]
-                f.write(encode_grib2(v, ny, nx, vals, nbits=nbits))
+            f.write(msgs["t"] + msgs["u"])
         with open(os.path.join(tmp, "grid-1.grib2"), "wb") as f:
-            ny, nx, vals, nbits = grids["v"]
-            f.write(encode_grib2("v", ny, nx, vals, nbits=nbits))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        try:
-            os.rename(tmp, base)
-        except OSError:  # lost a concurrent-build race; winner is identical
-            shutil.rmtree(tmp, ignore_errors=True)
-    return base
+            f.write(msgs["v"])
+
+    return publish_once(sf_dir, "grib2", write, "events.parquet")
 
 
 @query(
@@ -215,47 +163,21 @@ def grib2_decode_roundtrip(spark, sf_dir):
 def _ensure_grib2_bitmap_fixture(spark, sf_dir: str) -> str:
     """One GRIB2 message with a section-6 BITMAP: grid 'a' floor-ints
     with every cell whose value is divisible by 5 masked out (a
-    deterministic predicate both engines replay). Published next to the
-    no-bitmap fixture, same staleness key."""
+    deterministic predicate both engines replay). Keyed on the events
+    table, like the no-bitmap fixture."""
     import math
 
     from ..sources.grib2 import encode_message as encode_grib2
 
-    src = os.path.join(sf_dir, "events.parquet")
-    stats = []
-    if os.path.isdir(src):
-        for root, _, files in os.walk(src):
-            stats.extend(os.stat(os.path.join(root, f)) for f in files)
-    else:
-        stats.append(os.stat(src))
-    fp = f"{sum(s.st_size for s in stats)}_{max(int(s.st_mtime) for s in stats)}"
-    base = os.path.join(
-        artifact_root(),
-        f"spark_graft_grib2bm_v1_{os.path.basename(sf_dir.rstrip('/'))}_{fp}",
-    )
-    marker = os.path.join(base, "_SUCCESS")
-    if not os.path.exists(marker):
-        pdf = _dense_grid(spark, sf_dir).orderBy("variable", "y", "x").toPandas()
-        part = pdf[pdf.variable == "a"]
-        ny = int(part.y.max()) + 1
-        nx = int(part.x.max()) + 1
-        vals = [
-            None if math.floor(x) % 5 == 0 else float(math.floor(x))
-            for x in part.value.to_numpy()
-        ]
-        span = int(max(v for v in vals if v is not None) - min(v for v in vals if v is not None))
-        import uuid
-
-        tmp = f"{base}.building-{uuid.uuid4().hex}"
-        os.makedirs(tmp)
+    def write(tmp: str) -> None:
+        ny, nx, vals = _dense_arrays(spark, sf_dir)["a"]
+        vals = [None if math.floor(x) % 5 == 0 else float(math.floor(x)) for x in vals]
+        present = [v for v in vals if v is not None]
+        span = int(max(present) - min(present))
         with open(os.path.join(tmp, "masked.grib2"), "wb") as f:
             f.write(encode_grib2("t", ny, nx, vals, nbits=max(1, span.bit_length())))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        try:
-            os.rename(tmp, base)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return base
+
+    return publish_once(sf_dir, "grib2bm", write, "events.parquet")
 
 
 @query(

@@ -34,8 +34,9 @@ sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS shingle FROM pos)
 """
 
 
-# bump when the canonical shingle→minhash→LSH→CC pipeline changes so a
-# stale memo can never serve a superseded algorithm's output
+# bump when the canonical shingle→minhash→LSH→CC pipeline (or a built
+# fixture's layout) changes so a stale artifact can never serve a
+# superseded algorithm's output
 _MEMO_VERSION = "v1"
 
 # (memo name, build seconds) for every OUTERMOST memo built in this
@@ -148,6 +149,55 @@ def find_appendable_prior(sf_dir: str, name: str, src_file: str = "documents.par
     return best[1] if best else None
 
 
+def publish_once(sf_dir: str, name: str, write, src_file: str = "documents.parquet") -> str:
+    """Build-once publication of a derived artifact, shared by the memo
+    tables and the built input fixtures: key = sf-dir basename + the
+    ``src_file`` table's file fingerprint (`_memo_base`, so a changed
+    source rebuilds) + _MEMO_VERSION (so a changed ALGORITHM rebuilds).
+    Returns the published dir if its ``_SUCCESS`` exists; otherwise
+    ``write(tmp)`` fills a PRIVATE ``.building-<uuid>`` dir, which gets
+    ``_manifest.json`` + ``_SUCCESS`` and is renamed over the published
+    path, so a lost race can never leak straggler files into the
+    winner's dir. Location: `artifact_root()` ($SPARK_GRAFT_CC_MEMO_DIR
+    MUST be a shared filesystem on a real cluster)."""
+    import json
+    import os
+    import shutil
+    import uuid
+
+    entries = _corpus_entries(sf_dir, src_file)
+    base = _memo_base(sf_dir, name, entries)
+    if os.path.exists(os.path.join(base, "_SUCCESS")):
+        return base
+    tmp = f"{base}.building-{uuid.uuid4().hex}"
+    try:
+        os.makedirs(tmp)
+        write(tmp)
+        # the manifest rides inside the artifact (underscore files are
+        # invisible to Spark's file index): `find_appendable_prior`
+        # needs it to recognize a corpus APPEND and reuse the frozen
+        # model instead of retraining (round-13, verdict #4)
+        with open(os.path.join(tmp, "_manifest.json"), "w") as f:
+            json.dump([list(t) for t in entries], f)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+    except BaseException:
+        # a build that fails (or is watchdog-cancelled) mid-write must
+        # not leak its corpus-sized private dir into the shared root
+        # (ADVICE r12)
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    try:
+        os.rename(tmp, base)
+    except OSError:
+        # lost a concurrent-build race only if the winner actually
+        # published (review r12: a bare OSError swallow could return a
+        # dir that never materialized — e.g. a permissions failure)
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.exists(os.path.join(base, "_SUCCESS")):
+            raise
+    return base
+
+
 def _corpus_memo(
     spark,
     sf_dir: str,
@@ -156,18 +206,12 @@ def _corpus_memo(
     src_file: str = "documents.parquet",
     partitions: int | None = None,
 ):
-    """Shared machinery for the per-corpus-version memo tables: key =
-    sf-dir basename + source-table file fingerprint (count + per-file
-    path/size/mtime_ns hash, so a changed corpus rebuilds) +
-    _MEMO_VERSION (so a changed ALGORITHM rebuilds); atomic publish —
-    each builder writes a PRIVATE `.building-<uuid>` dir and renames it
-    over, so a lost race can never leak straggler files into the
-    winner's published dir; location $SPARK_GRAFT_CC_MEMO_DIR (MUST be
-    a shared filesystem on a real cluster) or the local tempdir.
-    ``build()`` returns the DataFrame to materialize on first call.
-    ``src_file`` picks the fingerprinted source table — documents for
-    the text-dedup memos, embeddings for the ANN/semdedup model tables
-    (plans/ann_memo.py).
+    """A per-corpus-version memo table: ``build()`` returns the
+    DataFrame, written as parquet through `publish_once` (keying,
+    private build dir, manifest and rename live there) on first call
+    and read back thereafter. ``src_file`` picks the fingerprinted
+    source table — documents for the text-dedup memos, embeddings for
+    the ANN/semdedup model tables (plans/ann_memo.py).
     ``partitions`` guarantees the memo comes back with at least that
     READ parallelism (round-12 soak catch): a small memo collapses to a
     handful of read partitions — AQE coalesces the build to 1-3 files,
@@ -181,18 +225,11 @@ def _corpus_memo(
     a no-op at real scale where the memo spans ≥ that many splits, a
     trivial shuffle of small data exactly when small data is the
     problem; content is unchanged either way."""
-    import json
-    import os
-    import shutil
-    import uuid
 
-    entries = _corpus_entries(sf_dir, src_file)
-    base = _memo_base(sf_dir, name, entries)
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
+    def write(tmp: str) -> None:
         import time as _time
 
         t0 = _time.perf_counter()
-        tmp = f"{base}.building-{uuid.uuid4().hex}"
         depth = getattr(_MEMO_TLS, "d", 0)
         _MEMO_TLS.d = depth + 1
         try:
@@ -200,33 +237,12 @@ def _corpus_memo(
             if partitions:
                 df = df.repartition(partitions)
             df.write.mode("overwrite").parquet(tmp)
-            # the manifest rides inside the memo (underscore files are
-            # invisible to Spark's file index): `find_appendable_prior`
-            # needs it to recognize a corpus APPEND and reuse the frozen
-            # model instead of retraining (round-13, verdict #4)
-            with open(os.path.join(tmp, "_manifest.json"), "w") as f:
-                json.dump([list(t) for t in entries], f)
-        except BaseException:
-            # a build that fails (or is watchdog-cancelled) mid-write must
-            # not leak its corpus-sized private dir into the shared memo
-            # root (ADVICE r12) — only the rename-race path cleaned up
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
         finally:
             _MEMO_TLS.d = depth
         if depth == 0:
             MEMO_BUILD_LOG.append((name, _time.perf_counter() - t0))
-        try:
-            os.rename(tmp, base)
-        except OSError:
-            # lost a concurrent-build race only if the winner actually
-            # published (review r12: a bare OSError swallow could read a
-            # base dir that never materialized — e.g. a permissions
-            # failure — and crash later with a misleading read error)
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(os.path.join(base, "_SUCCESS")):
-                raise
-    out = spark.read.parquet(base)
+
+    out = spark.read.parquet(publish_once(sf_dir, name, write, src_file))
     if partitions and out.rdd.getNumPartitions() < partitions:
         out = out.repartition(partitions)
     return out
@@ -296,17 +312,9 @@ def corpus_components(spark, sf_dir: str):
     memoization contract as the climatology normals
     (pipelines.py::run_anomaly_batch).
 
-    Key = sf-dir basename + the documents table's file-level fingerprint
-    (total bytes + max mtime), so a changed corpus rebuilds instead of
-    serving stale labels. Build is atomic (write to a `.building` dir,
-    rename over; Spark's _SUCCESS marks completeness), so concurrent
-    first-callers race safely. Location: $SPARK_GRAFT_CC_MEMO_DIR if set
-    (on a multi-node cluster this MUST be a shared filesystem, same rule
-    as the CC round state), else the local tempdir (local-mode default).
-
     Returns (node, component) — exactly connected_components' output, so
     every consumer's result (and hash) is unchanged. (Keying, atomic
-    publish and location rules live in `_corpus_memo`; the build chains
+    publish and location rules live in `publish_once`; the build chains
     off the memoized pair list, so a cold cache materializes sig → pairs
     → components in one pass each.)"""
     return _corpus_memo(

@@ -6,7 +6,7 @@ path (the sig → pairs → components chain, ~20 s) is a quarter of that.
 The chains are independent of each other, so the guide's §2.6 remedy
 applies directly: submit them from a small thread pool and let Spark's
 FIFO scheduler back-fill executors across jobs. Nothing about any
-single build changes — same plans, same atomic publish (`_corpus_memo`
+single build changes — same plans, same atomic publish (`publish_once`
 already race-safe via private .building dirs + rename), same artifacts,
 same results; only the idle time between independent builds goes away.
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..scratch import artifact_root
+from .dedup import publish_once
 from .helpers import T
 from .registry import query
 
@@ -207,27 +207,18 @@ def tile_listing_filter(spark, sf_dir):
 def _ensure_remote_corpus(spark, sf_dir: str) -> str:
     """Materialize a deterministic local "origin server" for the connector
     round-trip query: the documents table exported as 4 gzipped CSV shards
-    under {base}/remote/data.example.com/corpus/. Built once per sf (atomic
-    rename, _SUCCESS marker) so bench repeats don't re-export."""
+    under {base}/remote/data.example.com/corpus/. Published once per
+    documents-table version through `publish_once`."""
     import gzip
     import os
-    import shutil
-    import tempfile
 
-    base = os.path.join(
-        artifact_root(),
-        f"spark_graft_http_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    marker = os.path.join(base, "remote", "_SUCCESS")
-    if not os.path.exists(marker):
+    def write(tmp: str) -> None:
         docs = (
             T(spark, sf_dir, "documents")
             .select("doc_id", F.length("text").alias("text_len"), F.md5("text").alias("digest"))
             .orderBy("doc_id")
             .toPandas()
         )
-        tmp = base + ".building"
-        shutil.rmtree(tmp, ignore_errors=True)
         corpus = os.path.join(tmp, "remote", "data.example.com", "corpus")
         os.makedirs(corpus)
         for shard in range(4):
@@ -237,13 +228,8 @@ def _ensure_remote_corpus(spark, sf_dir: str) -> str:
             )
             with gzip.open(os.path.join(corpus, f"shard-{shard}.csv.gz"), "wb") as f:
                 f.write(body.encode())
-        open(os.path.join(tmp, "remote", "_SUCCESS"), "w").close()
-        shutil.rmtree(base, ignore_errors=True)
-        try:
-            os.rename(tmp, base)
-        except OSError:  # lost a concurrent-build race; the winner's copy is identical
-            shutil.rmtree(tmp, ignore_errors=True)
-    return base
+
+    return publish_once(sf_dir, "http", write)
 
 
 @query(
@@ -304,25 +290,16 @@ def _ensure_remote_messages(spark, sf_dir: str) -> str:
     query: the nation table serialized as variable-length messages in one
     binary file, with a CSV index of (key, offset, length) beside it —
     the ECMWF .index layout (reference ecmwf_opendata/client.py byte-range
-    reads)."""
+    reads). Published once per nation-table version."""
     import os
-    import shutil
-    import tempfile
 
-    base = os.path.join(
-        artifact_root(),
-        f"spark_graft_msgs_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    marker = os.path.join(base, "remote", "_SUCCESS")
-    if not os.path.exists(marker):
+    def write(tmp: str) -> None:
         rows = (
             T(spark, sf_dir, "nation")
             .select("n_nationkey", "n_name", "n_regionkey")
             .orderBy("n_nationkey")
             .collect()
         )
-        tmp = base + ".building"
-        shutil.rmtree(tmp, ignore_errors=True)
         d = os.path.join(tmp, "remote", "grib.example.com", "data")
         os.makedirs(d)
         blob = bytearray()
@@ -335,15 +312,8 @@ def _ensure_remote_messages(spark, sf_dir: str) -> str:
             f.write(bytes(blob))
         with open(os.path.join(d, "messages.index"), "w") as f:
             f.write("\n".join(index_lines) + "\n")
-        open(os.path.join(tmp, "remote", "_SUCCESS"), "w").close()
-        shutil.rmtree(base, ignore_errors=True)
-        try:
-            import os as _os
 
-            _os.rename(tmp, base)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return base
+    return publish_once(sf_dir, "msgs", write, "nation.parquet")
 
 
 @query(

@@ -8,7 +8,9 @@ precomputed artifacts instead of computing from the parquet inputs.
 Every invocation now derives everything it reads: the default root is a
 fresh per-process temporary directory, removed at exit. Within one run
 the usual amortization still applies (one build, many consumers in the
-same program); across runs nothing persists.
+same program); across runs nothing persists. Memos and built fixtures
+publish here through one function, `plans/dedup.py::publish_once`
+(source-fingerprint key, private build dir, atomic rename).
 
 Durable cross-run sharing remains available — and documented — as a
 DEPLOYMENT decision: set ``$SPARK_GRAFT_CC_MEMO_DIR`` to shared storage

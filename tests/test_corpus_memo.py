@@ -1,5 +1,6 @@
-"""_corpus_memo staleness + publication contract (plans/dedup.py):
-the memo key carries the source table's file fingerprint, so a changed
+"""Staleness + publication contract of `publish_once` (plans/dedup.py)
+and its users, the `_corpus_memo` tables and the built input fixtures:
+the key carries the source table's file fingerprint, so a changed
 corpus REBUILDS instead of serving stale values, and publication is
 atomic via private build dirs."""
 
@@ -7,10 +8,13 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+from urllib.parse import urlparse
 
+import pytest
 from pyspark.sql import functions as F
 
-from data_ingestion_auto_spark.plans.dedup import _corpus_memo
+from data_ingestion_auto_spark.plans.dedup import _corpus_memo, publish_once
 
 
 def _mini_sf(spark, tmp_path, name, rows):
@@ -158,18 +162,144 @@ def test_wide_memo_read_parallelism_guaranteed(spark, tmp_path, monkeypatch):
     assert plain.count() == 100
 
 
-def test_publication_is_rename_atomic(spark, tmp_path, monkeypatch):
-    """The published dir appears only complete (Spark's _SUCCESS inside);
-    no shared '.building' path exists that a second builder could write
-    into after a winner renames."""
+def publish_kind(kind, spark, sf, name, build_hook=lambda: None) -> str:
+    """Publish one artifact through a parquet `_corpus_memo` ("parquet")
+    or a plain-file `publish_once` writer ("files"); ``build_hook`` runs
+    inside the build (for "files", after the files are written). Returns
+    the published dir."""
+    if kind == "parquet":
+
+        def build():
+            build_hook()
+            return spark.read.parquet(f"{sf}/documents.parquet")
+
+        df = _corpus_memo(spark, sf, name, build)
+        (root,) = {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
+        return root
+
+    def write(tmp):
+        for i in range(4):
+            with open(os.path.join(tmp, f"part-{i}.txt"), "w") as f:
+                f.write(f"{i}\n")
+        build_hook()
+
+    return publish_once(sf, name, write)
+
+
+@pytest.mark.parametrize("racers", [1, 2])
+@pytest.mark.parametrize("kind", ["parquet", "files"])
+def test_publication_is_rename_atomic(spark, tmp_path, monkeypatch, kind, racers):
+    """The published dir appears only complete (_SUCCESS inside); no
+    shared '.building' path exists that a second builder could write
+    into after a winner renames. With two racers, both build at once
+    (they meet at a barrier inside the build): both callers get the
+    same complete dir, and the loser's private dir is gone."""
     memo_root = str(tmp_path / "memo2")
     monkeypatch.setenv("SPARK_GRAFT_CC_MEMO_DIR", memo_root)
     os.makedirs(memo_root)
     sf = _mini_sf(spark, tmp_path, "sfB", [(1, "x")])
-    _corpus_memo(
-        spark, sf, "t2", lambda: spark.read.parquet(f"{sf}/documents.parquet")
-    ).collect()
+    barrier = threading.Barrier(racers, timeout=60)
+    got, errors = [], []
+
+    def run():
+        try:
+            got.append(publish_kind(kind, spark, sf, "t2", barrier.wait))
+        except BaseException as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run) for _ in range(racers)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(got) == racers and len(set(got)) == 1
     entries = os.listdir(memo_root)
     assert len(entries) == 1 and entries[0].startswith("spark_graft_t2_")
-    assert "_SUCCESS" in os.listdir(os.path.join(memo_root, entries[0]))
+    assert got[0] == os.path.join(memo_root, entries[0])
+    published = os.listdir(got[0])
+    assert {"_SUCCESS", "_manifest.json"} <= set(published)
+    if kind == "files":
+        assert sorted(e for e in published if e.startswith("part-")) == [
+            f"part-{i}.txt" for i in range(4)
+        ]
     assert not [e for e in entries if ".building" in e]  # no shared tmp left
+
+
+def _write_events(table, path, mtime_ns):
+    """Plain-encoded, uncompressed parquet: adding 1.0 to a double column
+    leaves the file size unchanged."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, path, compression="none", use_dictionary=False)
+    os.utime(path, ns=(mtime_ns, mtime_ns))
+
+
+def _regenerate(table: str, src: str) -> None:
+    """Rewrite a source table in place. events: ``value + 1`` at equal
+    bytes within the same whole second (what the old total-bytes +
+    integer max-mtime key could not tell apart); documents and nation:
+    the first half of the rows."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(src)
+    if table == "events":
+        second = int(os.stat(src).st_mtime)
+        size = os.path.getsize(src)
+        i = t.schema.get_field_index("value")
+        t = t.set_column(i, "value", pc.add(t["value"], 1.0))
+        _write_events(t, src, second * 10**9 + 700_000_000)
+        assert os.path.getsize(src) == size
+        assert int(os.stat(src).st_mtime) == second
+    else:
+        pq.write_table(t.slice(0, t.num_rows // 2), src)
+
+
+@pytest.mark.parametrize(
+    "module, builder, consumer, table",
+    [
+        ("binary_decode", "_ensure_sgb_fixture", "binary_grid_decode_roundtrip", "events"),
+        ("binary_decode", "_ensure_grib2_fixture", "grib2_decode_roundtrip", "events"),
+        ("binary_decode", "_ensure_grib2_bitmap_fixture", "grib2_bitmap_mask_stats", "events"),
+        ("sources_ops", "_ensure_remote_corpus", "http_landing_roundtrip", "documents"),
+        ("sources_ops", "_ensure_remote_messages", "byte_range_message_fetch", "nation"),
+    ],
+    ids=["sgb", "grib2", "grib2_bitmap", "remote_corpus", "remote_messages"],
+)
+def test_fixture_rebuilds_when_source_regenerated(
+    spark, sf_dir, tmp_path, monkeypatch, module, builder, consumer, table
+):
+    """A built input fixture is keyed on its source table's fingerprint:
+    regenerating that table in place must publish a NEW fixture, and the
+    consuming query must then match its DuckDB oracle on the new table."""
+    import importlib
+
+    import pyarrow.parquet as pq
+
+    from data_ingestion_auto_spark.plans import REGISTRY
+    from tools.parity import compare, duck_connection
+
+    ensure = getattr(importlib.import_module(f"data_ingestion_auto_spark.plans.{module}"), builder)
+    monkeypatch.setenv("SPARK_GRAFT_CC_MEMO_DIR", str(tmp_path / "memo"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = str(sf / f"{table}.parquet")
+    orig = os.path.join(sf_dir, f"{table}.parquet")
+    if table == "events":
+        _write_events(pq.read_table(orig), src, int(os.stat(orig).st_mtime) * 10**9 + 100_000_000)
+    else:
+        shutil.copy(orig, src)
+
+    first = ensure(spark, str(sf))
+    _regenerate(table, src)
+    second = ensure(spark, str(sf))
+    assert second != first
+    q = REGISTRY[consumer]
+    errs = compare(
+        consumer,
+        q.spark(spark, str(sf)).toPandas(),
+        duck_connection(str(sf)).execute(q.oracle).fetchdf(),
+    )
+    assert not errs, errs

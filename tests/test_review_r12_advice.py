@@ -7,7 +7,7 @@
 2. bench._clear_memos / tools.soak --cold scope the cold-clear to the
    current corpus key instead of bulk-deleting every spark_graft_* entry
    in the shared memo root.
-3. plans/dedup._corpus_memo removes its private .building-<uuid> dir
+3. plans/dedup.publish_once removes its private .building-<uuid> dir
    when the build raises, not only on the rename-race path.
 4. bench memo_builds sums duplicate memo names instead of
    last-write-wins.
@@ -18,6 +18,8 @@ from __future__ import annotations
 import datetime as dt
 import decimal
 import os
+
+import pytest
 
 from data_ingestion_auto_spark.streaming.incremental import _parse_watermark
 
@@ -75,13 +77,13 @@ def test_clear_memos_scoped_to_corpus(tmp_path, monkeypatch):
     assert unrelated.exists()
 
 
-def test_failed_memo_build_cleans_private_dir(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("kind", ["parquet", "files"])
+def test_failed_memo_build_cleans_private_dir(spark, tmp_path, monkeypatch, kind):
     """A build that raises mid-way must not leak its corpus-sized
     .building-<uuid> dir into the shared memo root; the next attempt
-    builds clean."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_auto_spark.plans.dedup import _corpus_memo
+    builds clean. Covers a parquet `_corpus_memo` and a `publish_once`
+    writer that writes plain files."""
+    from tests.test_corpus_memo import publish_kind
 
     memo_root = tmp_path / "memo"
     memo_root.mkdir()
@@ -92,24 +94,23 @@ def test_failed_memo_build_cleans_private_dir(spark, tmp_path, monkeypatch):
         [(1, "aa")], "doc_id long, text string"
     ).coalesce(1).write.mode("overwrite").parquet(str(sf / "documents.parquet"))
 
-    def bad_build():
+    def fail():
         raise RuntimeError("simulated mid-build failure")
 
-    import pytest
-
     with pytest.raises(RuntimeError):
-        _corpus_memo(spark, str(sf), "tleak", bad_build)
+        publish_kind(kind, spark, str(sf), "tleak", fail)
     leftovers = [e for e in os.listdir(memo_root) if ".building-" in e]
     assert leftovers == []
 
     # recovery: a later good build publishes normally
-    def good_build():
-        return spark.read.parquet(f"{sf}/documents.parquet").select(
-            "doc_id", F.length("text").alias("n")
-        )
-
-    got = _corpus_memo(spark, str(sf), "tleak", good_build)
-    assert [(r.doc_id, r.n) for r in got.collect()] == [(1, 2)]
+    got = publish_kind(kind, spark, str(sf), "tleak")
+    assert os.listdir(memo_root) == [os.path.basename(got)]
+    if kind == "parquet":
+        assert [(r.doc_id, r.text) for r in spark.read.parquet(got).collect()] == [(1, "aa")]
+    else:
+        assert sorted(e for e in os.listdir(got) if e.startswith("part-")) == [
+            f"part-{i}.txt" for i in range(4)
+        ]
 
 
 def test_memo_build_log_sums_duplicate_names():

@@ -236,9 +236,9 @@ def main() -> None:
         # honest cold measurement. Scoped by corpus key (ADVICE r12):
         # the memo root is shared; unrelated corpora's memos must
         # survive a soak's cold-clear.
-        import tempfile
+        from data_ingestion_auto_spark.scratch import artifact_root
 
-        root = os.environ.get("SPARK_GRAFT_CC_MEMO_DIR", tempfile.gettempdir())
+        root = artifact_root()
         corpora = {
             os.path.basename(p.rstrip("/"))
             for p in (target, os.environ.get("SPARK_SOAK_BASE", "/root/testdata/sf0.1"))
