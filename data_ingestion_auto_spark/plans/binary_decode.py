@@ -1,14 +1,15 @@
 """S5/U1 at the query surface: the binary decode boundary, oracled.
 
-A GRIB-shaped fixture (sources/gribsim.py — magic/header/f64-payload/
-CRC/end-marker messages) is encoded once per sf from the SAME dense
-raster the warp queries use, then decoded in-engine from a
-``binaryFile`` scan through mapInPandas. The oracle recomputes the
-raster straight from the events table, so the hash match proves
-encode → binaryFile → Arrow → decode is bit-lossless — closing the
-stubbed S5/U1 seam (reference cdo decode ingest/__init__.py:74-91, HDF4
-subdatasets modis/convertmodis.py:273-303) the way
-`byte_range_message_fetch` closed S3.
+A GRIB-shaped SGB1 fixture (sources/gribsim.py — magic/header/f64-payload/
+CRC/end-marker messages) and real GRIB2 fixtures (sources/grib2.py) are
+encoded once per sf from the SAME dense raster the warp queries use,
+then decoded in-engine from a ``binaryFile`` scan by the one decoder,
+`decode_grid_files`, whose framing loop lets each message's magic pick
+its parser. The oracle recomputes the raster straight from the events
+table, so the hash match proves encode → binaryFile → Arrow → decode is
+bit-lossless — closing the stubbed S5/U1 seam (reference cdo decode
+ingest/__init__.py:74-91, HDF4 subdatasets modis/convertmodis.py:273-303)
+the way `byte_range_message_fetch` closed S3.
 """
 
 from __future__ import annotations
@@ -71,8 +72,8 @@ def binary_grid_decode_roundtrip(spark, sf_dir):
     scanned with ``binaryFile`` and decoded executor-side (CRC + end
     marker verified per message) into the long grid model; the oracle
     recomputes the same raster from events. Hash match = the decode
-    plumbing is bit-lossless; swapping the message parser for
-    cfgrib/GDAL is the documented one-function change."""
+    plumbing is bit-lossless; a new format is one parser plus one magic
+    in sources/gribsim.py::decode_file."""
     base = _ensure_sgb_fixture(spark, sf_dir)
     bins = spark.read.format("binaryFile").option("pathGlobFilter", "*.sgb").load(base)
     # sort_small: orderBy's range sampler would decode every message
@@ -127,35 +128,18 @@ def grib2_decode_roundtrip(spark, sf_dir):
     """S5 on the REAL public wire format (round-13): three GRIB2
     messages — WMO FM-92 edition 2, regular lat/lon template 3.0,
     simple packing, written by sources/grib2.py — scanned with
-    ``binaryFile`` and decoded executor-side by the same pure-python
-    section parser, into the long grid model. The oracle recomputes the
-    floor-integer raster from events, so the hash match proves the
-    GRIB2 encode → binaryFile → Arrow → parse path is bit-lossless for
-    integer fields (the E=D=0 exactness contract). Files any standard
+    ``binaryFile`` and decoded executor-side by `decode_grid_files`, the
+    same decoder the SGB1 query uses (the ``GRIB`` magic routes each
+    message to the GRIB2 section parser), into the long grid model. The
+    oracle recomputes the floor-integer raster from events, so the hash
+    match proves the GRIB2 encode → binaryFile → Arrow → parse path is
+    bit-lossless for integer fields (the E=D=0 exactness contract). Files any standard
     GRIB tool can read; the cdo/eccodes swap stays the argv seam
     (reference cdo decode ingest/__init__.py:74-91)."""
-    from ..sources.grib2 import decode_file as decode_grib2_file
-
     base = _ensure_grib2_fixture(spark, sf_dir)
     bins = spark.read.format("binaryFile").option("pathGlobFilter", "*.grib2").load(base)
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"variable": [], "y": [], "x": [], "value": []}
-            for content in pdf["content"]:
-                for variable, y, x, v in decode_grib2_file(bytes(content)):
-                    out["variable"].append(variable)
-                    out["y"].append(y)
-                    out["x"].append(x)
-                    out["value"].append(v)
-            yield pd.DataFrame(out)
-
     return sort_small(
-        bins.select("content").mapInPandas(
-            decode, "variable string, y long, x long, value double"
-        ),
+        decode_grid_files(bins).select("variable", "y", "x", "value"),
         "variable", "y", "x",
     )
 
@@ -213,38 +197,10 @@ def grib2_bitmap_mask_stats(spark, sf_dir):
     against a DuckDB replay of the same mask. Proves the bitmap path
     end-to-end: population check, NULL restoration, and that masked
     cells never leak into aggregates."""
-    from ..sources.grib2 import decode_file as decode_grib2_file
-
     base = _ensure_grib2_bitmap_fixture(spark, sf_dir)
     bins = spark.read.format("binaryFile").option("pathGlobFilter", "*.grib2").load(base)
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"variable": [], "y": [], "x": [], "value": []}
-            for content in pdf["content"]:
-                for variable, y, x, v in decode_grib2_file(bytes(content)):
-                    out["variable"].append(variable)
-                    out["y"].append(y)
-                    out["x"].append(x)
-                    out["value"].append(v)
-            # dtype=object keeps None as a true NULL through Arrow (a
-            # float64 column would silently turn it into NaN)
-            yield pd.DataFrame(
-                {
-                    "variable": out["variable"],
-                    "y": out["y"],
-                    "x": out["x"],
-                    "value": pd.Series(out["value"], dtype="object"),
-                }
-            )
-
-    rows = bins.select("content").mapInPandas(
-        decode, "variable string, y long, x long, value double"
-    )
     return (
-        rows.groupBy("variable")
+        decode_grid_files(bins).groupBy("variable")
         .agg(
             F.count("*").cast("bigint").alias("n_cells"),
             F.count("value").cast("bigint").alias("n_present"),

@@ -254,10 +254,13 @@ def http_landing_roundtrip(spark, sf_dir):
     chirps_rainfall/__init__.py:332-340). The connector HEAD-probes five
     candidate URLs (one 404s and is skipped — the walk-back probe,
     client.py:25-57), stream-downloads + gunzips the four real shards into
-    the landing dir, scans them back, and re-aggregates. The oracle computes
-    the same statistics straight from the source table, so the hash match
-    proves download -> decompress -> scan is lossless."""
+    a private per-call landing dir (never into the published fixture),
+    scans them back, and re-aggregates. The oracle computes the same
+    statistics straight from the source table, so the hash match proves
+    download -> decompress -> scan is lossless."""
     import os
+    import shutil
+    import tempfile
 
     from ..pipelines import run_download_batch
     from ..sources.http_connector import LocalHttpStore
@@ -265,24 +268,25 @@ def http_landing_roundtrip(spark, sf_dir):
     base = _ensure_remote_corpus(spark, sf_dir)
     store = LocalHttpStore(os.path.join(base, "remote"))
     urls = [f"http://data.example.com/corpus/shard-{i}.csv.gz" for i in range(5)]
-    landed = run_download_batch(
-        spark,
-        store,
-        urls,
-        os.path.join(base, "landing"),
-        "doc_id BIGINT, text_len BIGINT, digest STRING",
-    )
-    return (
-        landed.groupBy((F.col("doc_id") % 4).cast("bigint").alias("shard"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("text_len").cast("bigint").alias("total_chars"),
-            F.countDistinct("digest").alias("n_distinct_digests"),
-            F.min("doc_id").alias("min_doc_id"),
-            F.max("doc_id").alias("max_doc_id"),
+    work = tempfile.mkdtemp(prefix="spark_graft_landing_")
+    try:
+        landed = run_download_batch(
+            spark, store, urls, work, "doc_id BIGINT, text_len BIGINT, digest STRING"
         )
-        .orderBy("shard")
-    )
+        return (
+            landed.groupBy((F.col("doc_id") % 4).cast("bigint").alias("shard"))
+            .agg(
+                F.count("*").alias("n_docs"),
+                F.sum("text_len").cast("bigint").alias("total_chars"),
+                F.countDistinct("digest").alias("n_distinct_digests"),
+                F.min("doc_id").alias("min_doc_id"),
+                F.max("doc_id").alias("max_doc_id"),
+            )
+            .orderBy("shard")
+            .localCheckpoint()  # materialize before the workdir is removed
+        )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def _ensure_remote_messages(spark, sf_dir: str) -> str:

@@ -35,9 +35,12 @@ lambert), other packing (JPEG2000, complex/spatial differencing),
 predefined bitmaps (indicator 1-254), and the full parameter tables are
 out of scope and REJECTED with explicit errors — swapping in eccodes/cdo via the
 `decode_grid_files_subprocess` argv seam remains the documented
-one-argument change for those (tests/test_real_codec.py). But files this
-encoder writes are honest GRIB2: any standard tool can read them, and
-the decoder here reads the same subset written by standard tools.
+one-argument change for those (tests/test_real_codec.py); its default
+decoder already reads this subset, because the one framing loop
+(sources/gribsim.py::decode_file) hands every ``GRIB`` message to
+`_parse_message` here. Files this encoder writes are honest GRIB2: any
+standard tool can read them, and the decoder here reads the same subset
+written by standard tools.
 
 Lossiness note: simple packing quantizes. With D=0, E=0 and
 integer-valued fields the round-trip is BIT-EXACT (X recovers the value
@@ -49,7 +52,6 @@ round-trip to within 2^E/10^D, pinned by tolerance tests.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 _GRIB = b"GRIB"
 _END = b"7777"
@@ -317,47 +319,6 @@ def _parse_message(buf: bytes, off: int):
         values = present
     variable = _PARAMS.get((disc, cat, num), f"d{disc}.c{cat}.p{num}")
     return variable, nj, ni, values, end
-
-
-def decode_file(buf: bytes) -> Iterator[tuple[str, int, int, float]]:
-    """Yield (variable, y, x, value) rows from every message in a file —
-    the grid-model row contract shared with gribsim.decode_file."""
-    if len(buf) == 0:
-        raise ValueError("empty GRIB2 file")
-    off = 0
-    while off < len(buf):
-        variable, nj, ni, values, off = _parse_message(buf, off)
-        for y in range(nj):
-            base = y * ni
-            for x in range(ni):
-                yield variable, y, x, values[base + x]
-
-
-def _subprocess_decode_main() -> None:
-    """OUT-OF-PROCESS decoder entry point for the
-    `decode_grid_files_subprocess` argv seam: GRIB2 bytes on stdin,
-    ``variable,y,x,float.hex(value)`` CSV on stdout, nonzero exit on any
-    parse error — byte-compatible with the SGB1 decoder contract, so the
-    swap really is one argv argument. Bitmap-missing points travel as
-    'nan' (float.fromhex round-trips it); the engine's NaN→NULL
-    normalization (P5, operators/grid.py) restores NULL downstream —
-    the CSV pipe itself stays a pure float channel."""
-    import sys
-
-    buf = sys.stdin.buffer.read()
-    out = sys.stdout
-    for variable, y, x, v in decode_file(buf):
-        out.write(f"{variable},{y},{x},{'nan' if v is None else float(v).hex()}\n")
-
-
-GRIB2_DECODER_ARGV = [
-    "python3",
-    "-c",
-    (
-        "from data_ingestion_auto_spark.sources.grib2 import "
-        "_subprocess_decode_main; _subprocess_decode_main()"
-    ),
-]
 
 
 def encode_grid_files(grid_rows, nbits: int | None = None):

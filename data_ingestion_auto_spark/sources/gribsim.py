@@ -7,10 +7,11 @@ image seam. This module closes the DECODE PLUMBING the same way
 `byte_range_message_fetch` closed S3: a deterministic GRIB-shaped binary
 format ("SGB1") is encoded driver-side into fixture files and decoded
 EXECUTOR-SIDE from a ``binaryFile`` scan through mapInPandas — real
-bytes, real Arrow batches, real integrity checks. Swapping `_decode_message`
-for cfgrib/GDAL is the only change a real-format user makes; every
+bytes, real Arrow batches, real integrity checks. The same boundary
+decodes real GRIB2 (sources/grib2.py): each message's 4-byte magic picks
+its parser, so a new format is one parser plus one magic; every
 Spark-side piece (schema, batching, multi-message framing, error
-surface) is exercised and oracled.
+surface) is shared, exercised and oracled.
 
 Wire format (big-endian, GRIB-flavoured):
 
@@ -32,10 +33,12 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from .grib2 import _GRIB, _parse_message as _parse_grib2
 
 _MAGIC = b"SGB1"
 _END = b"7777"
@@ -86,13 +89,18 @@ def _decode_message(buf: bytes, off: int) -> tuple[str, int, int, tuple, int]:
     return variable, ny, nx, values, off + 4
 
 
-def decode_file(buf: bytes) -> Iterator[tuple[str, int, int, float]]:
-    """Yield (variable, y, x, value) rows from every message in a file."""
+def decode_file(buf: bytes) -> Iterator[tuple[str, int, int, float | None]]:
+    """Yield (variable, y, x, value) rows from every message in a file.
+    Each message's 4-byte magic picks its parser: ``GRIB`` goes to the
+    GRIB2 codec (sources/grib2.py), anything else to `_decode_message`,
+    which rejects a foreign magic as ``bad magic``. Bitmap-missing GRIB2
+    cells yield None."""
     off = 0
     if len(buf) == 0:
-        raise ValueError("empty SGB1 file")
+        raise ValueError("empty grid file")
     while off < len(buf):
-        variable, ny, nx, values, off = _decode_message(buf, off)
+        parse = _parse_grib2 if buf[off : off + 4] == _GRIB else _decode_message
+        variable, ny, nx, values, off = parse(buf, off)
         for y in range(ny):
             base = y * nx
             for x in range(nx):
@@ -100,18 +108,44 @@ def decode_file(buf: bytes) -> Iterator[tuple[str, int, int, float]]:
 
 
 def _subprocess_decode_main() -> None:
-    """Entry point for the OUT-OF-PROCESS decoder: read one SGB1 file
+    """Entry point for the OUT-OF-PROCESS decoder: read one grid file
     from stdin, write CSV rows (variable,y,x,value-hex) to stdout.
     Values travel as IEEE-754 hex (float.hex) so the pipe is bit-exact —
-    a decimal print would round. Exit code != 0 on any integrity error,
-    which `decode_grid_files_subprocess` converts into a task failure
+    a decimal print would round; missing cells travel as 'nan'. Exit
+    code != 0 on any integrity error, which `decode_grid_files_subprocess`
+    converts into a task failure
     (subprocess.run(check=True), the reference's contract)."""
     import sys
 
     buf = sys.stdin.buffer.read()
     out = sys.stdout
     for variable, y, x, v in decode_file(buf):
-        out.write(f"{variable},{y},{x},{float(v).hex()}\n")
+        out.write(f"{variable},{y},{x},{'nan' if v is None else float(v).hex()}\n")
+
+
+def _decode(binary_df: DataFrame, rows: Callable[[bytes], Iterator[tuple]]) -> DataFrame:
+    """The one ``binaryFile`` content → long grid rows boundary:
+    ``rows(content)`` yields one file's (variable, y, x, value) cells.
+    mapInPandas keeps the opaque payload inside the Arrow batch and
+    emits only typed rows, so the binary column dies at the decode
+    boundary — nothing downstream shuffles bytes. A missing cell (None
+    or NaN) reaches Spark as NULL."""
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = {"path": [], "variable": [], "y": [], "x": [], "value": []}
+            for path, content in zip(pdf["path"], pdf["content"]):
+                for variable, y, x, v in rows(bytes(content)):
+                    out["path"].append(path)
+                    out["variable"].append(variable)
+                    out["y"].append(y)
+                    out["x"].append(x)
+                    out["value"].append(v)
+            yield pd.DataFrame(out)
+
+    return binary_df.select("path", "content").mapInPandas(
+        decode, "path string, variable string, y long, x long, value double"
+    )
 
 
 def decode_grid_files_subprocess(binary_df: DataFrame, argv: list[str] | None = None) -> DataFrame:
@@ -128,10 +162,11 @@ def decode_grid_files_subprocess(binary_df: DataFrame, argv: list[str] | None = 
     ``argv`` is the decoder-process contract seam: any program that
     reads raw message bytes on stdin and emits
     ``variable,y,x,float.hex(value)`` CSV lines on stdout plugs in —
-    the default is the in-package SGB1 decoder; a real-codec wrapper
-    around ``cdo -f nc copy`` is the documented one-argument swap
-    (exercised by tests/test_real_codec.py whenever cdo IS installed;
-    skip-if-absent in this sandbox). Everything Spark-side stays put."""
+    the default is the in-package decoder, which reads SGB1 and GRIB2
+    alike; a real-codec wrapper around ``cdo -f nc copy`` is the
+    documented one-argument swap (exercised by tests/test_real_codec.py
+    whenever cdo IS installed, skipped otherwise). Everything Spark-side
+    stays put."""
     import os
     import subprocess
     import sys
@@ -141,55 +176,27 @@ def decode_grid_files_subprocess(binary_df: DataFrame, argv: list[str] | None = 
             "from data_ingestion_auto_spark.sources.gribsim import "
             "_subprocess_decode_main; _subprocess_decode_main()"
         )]
-    # the child process must be able to import this package; each task
-    # resolves its OWN package root (on a cluster that's wherever
-    # --py-files unpacked it on that executor) and ships it via PYTHONPATH
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+    def rows(content: bytes) -> Iterator[tuple[str, int, int, float]]:
+        # the child process must be able to import this package; the
+        # executor resolves its OWN package root (on a cluster that's wherever
+        # --py-files unpacked it there) and ships it via PYTHONPATH
         import data_ingestion_auto_spark as _pkg
 
         local_root = os.path.dirname(os.path.dirname(os.path.abspath(_pkg.__file__)))
         env = dict(os.environ)
         env["PYTHONPATH"] = local_root + os.pathsep + env.get("PYTHONPATH", "")
-        for pdf in batches:
-            out = {"path": [], "variable": [], "y": [], "x": [], "value": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                proc = subprocess.run(
-                    argv, input=bytes(content), capture_output=True, check=True, env=env
-                )
-                for line in proc.stdout.decode().splitlines():
-                    variable, y, x, vhex = line.split(",")
-                    out["path"].append(path)
-                    out["variable"].append(variable)
-                    out["y"].append(int(y))
-                    out["x"].append(int(x))
-                    out["value"].append(float.fromhex(vhex))
-            yield pd.DataFrame(out)
+        proc = subprocess.run(argv, input=content, capture_output=True, check=True, env=env)
+        for line in proc.stdout.decode().splitlines():
+            variable, y, x, vhex = line.split(",")
+            yield variable, int(y), int(x), float.fromhex(vhex)
 
-    return binary_df.select("path", "content").mapInPandas(
-        decode, "path string, variable string, y long, x long, value double"
-    )
+    return _decode(binary_df, rows)
 
 
 def decode_grid_files(binary_df: DataFrame) -> DataFrame:
     """The executor-side decode: a ``binaryFile``-sourced DataFrame
-    (columns path, content, ...) → long grid rows. mapInPandas keeps the
-    opaque payload inside the Arrow batch and emits only typed rows, so
-    the binary column dies at the decode boundary — nothing downstream
-    shuffles bytes. One file decodes on one executor; a 1000-file GRIB
+    (columns path, content, ...) → long grid rows, SGB1 and GRIB2
+    messages alike. One file decodes on one executor; a 1000-file GRIB
     drop decodes 1000-wide with zero driver involvement."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"path": [], "variable": [], "y": [], "x": [], "value": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for variable, y, x, v in decode_file(bytes(content)):
-                    out["path"].append(path)
-                    out["variable"].append(variable)
-                    out["y"].append(y)
-                    out["x"].append(x)
-                    out["value"].append(v)
-            yield pd.DataFrame(out)
-
-    return binary_df.select("path", "content").mapInPandas(
-        decode, "path string, variable string, y long, x long, value double"
-    )
+    return _decode(binary_df, decode_file)

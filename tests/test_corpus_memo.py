@@ -273,7 +273,8 @@ def test_fixture_rebuilds_when_source_regenerated(
 ):
     """A built input fixture is keyed on its source table's fingerprint:
     regenerating that table in place must publish a NEW fixture, and the
-    consuming query must then match its DuckDB oracle on the new table."""
+    consuming query must then match its DuckDB oracle on the new table
+    without writing into the published fixture."""
     import importlib
 
     import pyarrow.parquet as pq
@@ -296,6 +297,7 @@ def test_fixture_rebuilds_when_source_regenerated(
     _regenerate(table, src)
     second = ensure(spark, str(sf))
     assert second != first
+    published = sorted(os.walk(second))
     q = REGISTRY[consumer]
     errs = compare(
         consumer,
@@ -303,3 +305,4 @@ def test_fixture_rebuilds_when_source_regenerated(
         duck_connection(str(sf)).execute(q.oracle).fetchdf(),
     )
     assert not errs, errs
+    assert sorted(os.walk(second)) == published

@@ -3,8 +3,9 @@
 section layouts so the encoder is pinned to the SPEC, not to itself;
 round-trips cover the packing edge cases (non-byte-aligned bit widths,
 sign-and-magnitude scale factors, constant fields at nbits=0,
-multi-message files); and the subprocess test proves the argv seam swap
-really is one argument."""
+multi-message files); decoding goes through the shared grid decoder
+(sources/gribsim.py), whose framing loop routes each ``GRIB`` message
+here, so the default subprocess decoder reads GRIB2 too."""
 
 from __future__ import annotations
 
@@ -14,14 +15,13 @@ import struct
 import pytest
 
 from data_ingestion_auto_spark.sources.grib2 import (
-    GRIB2_DECODER_ARGV,
-    decode_file,
     encode_message,
     _pack_bits,
     _rs16,
     _s16,
     _unpack_bits,
 )
+from data_ingestion_auto_spark.sources.gribsim import decode_file
 
 
 def test_golden_message_bytes_match_spec_layout():
@@ -149,10 +149,11 @@ def test_unsupported_corners_rejected():
 
 
 def test_subprocess_argv_seam_decodes_real_grib2(spark, tmp_path):
-    """The documented one-argument real-codec swap, actually RUNNING: a
-    GRIB2 file (the real public format, written by this encoder) routed
-    through decode_grid_files_subprocess with GRIB2_DECODER_ARGV yields
-    the same grid-model rows as the in-process decoder, bit-exactly."""
+    """The out-of-process decoder on the real public format: a GRIB2
+    file (written by this encoder) routed through
+    decode_grid_files_subprocess with its DEFAULT argv — the ``GRIB``
+    magic picks the GRIB2 parser in the child too — yields the same
+    grid-model rows as the in-process decoder, bit-exactly."""
     from data_ingestion_auto_spark.sources.gribsim import (
         decode_grid_files_subprocess,
     )
@@ -165,9 +166,7 @@ def test_subprocess_argv_seam_decodes_real_grib2(spark, tmp_path):
     binary_df = spark.read.format("binaryFile").load(str(p))
     got = sorted(
         (r.variable, r.y, r.x, r.value)
-        for r in decode_grid_files_subprocess(
-            binary_df, argv=GRIB2_DECODER_ARGV
-        ).collect()
+        for r in decode_grid_files_subprocess(binary_df).collect()
     )
     expect = sorted(decode_file(msg))
     assert got == expect
@@ -178,7 +177,7 @@ def test_subprocess_argv_seam_decodes_real_grib2(spark, tmp_path):
     p2.write_bytes(msg[:40])
     with pytest.raises(Exception):
         decode_grid_files_subprocess(
-            spark.read.format("binaryFile").load(str(p2)), argv=GRIB2_DECODER_ARGV
+            spark.read.format("binaryFile").load(str(p2))
         ).collect()
 
 
@@ -222,9 +221,9 @@ def test_bitmap_corrupt_population_rejected():
 
 
 def test_subprocess_seam_transports_missing_as_nan(spark, tmp_path):
-    """Bitmap-missing points travel the CSV pipe as 'nan' (the pipe is a
-    pure float channel); the engine's NaN→NULL fold restores NULL
-    downstream."""
+    """Bitmap-missing points travel the default decoder's CSV pipe as
+    'nan' (the pipe is a pure float channel); the engine's NaN→NULL fold
+    restores NULL downstream."""
     from pyspark.sql import functions as F
 
     from data_ingestion_auto_spark.sources.gribsim import (
@@ -235,9 +234,7 @@ def test_subprocess_seam_transports_missing_as_nan(spark, tmp_path):
     p = tmp_path / "m.grib2"
     p.write_bytes(msg)
     got = (
-        decode_grid_files_subprocess(
-            spark.read.format("binaryFile").load(str(p)), argv=GRIB2_DECODER_ARGV
-        )
+        decode_grid_files_subprocess(spark.read.format("binaryFile").load(str(p)))
         .withColumn("value", F.when(~F.isnan("value"), F.col("value")))
         .orderBy("x")
         .collect()

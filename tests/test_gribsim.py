@@ -119,3 +119,45 @@ def test_executor_side_decode_from_binary_file_scan(spark, tmp_path):
     )
     with pytest.raises(Exception, match="bad magic"):
         G.decode_grid_files(bins2).collect()
+
+
+@pytest.mark.parametrize(
+    "decode",
+    [G.decode_grid_files, G.decode_grid_files_subprocess],
+    ids=["in_process", "subprocess"],
+)
+def test_one_scan_decodes_sgb1_and_grib2(spark, tmp_path, decode):
+    """Each message's magic picks its parser: one binaryFile scan over an
+    SGB1 file, a GRIB2 file with a bitmap hole and a file holding one
+    GRIB2 then one SGB1 message returns every cell with its file, and the
+    hole as NULL — through either decoder."""
+    import os
+
+    from data_ingestion_auto_spark.sources import grib2
+
+    (tmp_path / "s.bin").write_bytes(G.encode_message("a", 1, 2, [1.5, -2.25]))
+    (tmp_path / "g.bin").write_bytes(
+        grib2.encode_message("t", 1, 3, [4.0, None, 6.0], nbits=8)
+    )
+    (tmp_path / "m.bin").write_bytes(
+        grib2.encode_message("u", 1, 2, [7.0, 9.0], nbits=8)
+        + G.encode_message("b", 2, 1, [math.pi, 0.5])
+    )
+    bins = spark.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(
+        str(tmp_path)
+    )
+    got = sorted(
+        (os.path.basename(r.path), r.variable, r.y, r.x, r.value)
+        for r in decode(bins).collect()
+    )
+    assert got == [
+        ("g.bin", "t", 0, 0, 4.0),
+        ("g.bin", "t", 0, 1, None),
+        ("g.bin", "t", 0, 2, 6.0),
+        ("m.bin", "b", 0, 0, math.pi),
+        ("m.bin", "b", 1, 0, 0.5),
+        ("m.bin", "u", 0, 0, 7.0),
+        ("m.bin", "u", 0, 1, 9.0),
+        ("s.bin", "a", 0, 0, 1.5),
+        ("s.bin", "a", 0, 1, -2.25),
+    ]
