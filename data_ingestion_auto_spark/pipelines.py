@@ -11,15 +11,17 @@ were declarative; here the whole pipeline is).
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .functions import convert_data, wind_speed
+from .functions import convert_data
 from .operators.grid import (
     anomaly_join,
     climatology_normal,
+    derived_wide,
     latest_available,
     normalize_nodata,
     time_partition_paths,
@@ -78,22 +80,15 @@ def apply_params(grid: DataFrame, spec: PipelineSpec) -> DataFrame:
     outs = []
     for p in spec.params:
         if p.derived_from:
-            u, v = p.derived_from
-            wide = (
-                grid.filter(F.col("variable").isin(u, v))
-                .groupBy("namespace", "time", "level", "y", "x")
-                .pivot("variable", [u, v])
-                .agg(F.first("value"))
-            )
             outs.append(
-                wide.select(
+                derived_wide(grid, *p.derived_from).select(
                     "namespace",
                     F.lit(p.variable).alias("variable"),
                     "time",
                     "level",
                     "y",
                     "x",
-                    wind_speed(F.col(u), F.col(v)).alias("value"),
+                    F.col("wind_speed").alias("value"),
                     F.lit(p.units).alias("units"),
                 )
             )
@@ -140,7 +135,7 @@ def run_download_batch(
     available = [u for u in urls if store.head(u) is not None]
     if not available:
         return spark.createDataFrame([], schema)
-    paths = land_files(store, available, landing_dir, decompress=True)
+    paths = land_files(store, available, landing_dir)
     return spark.read.schema(schema).csv(paths, header=True)
 
 
@@ -250,9 +245,11 @@ def run_cds_forecast_batch(
     save, cleanup, and ingest all succeeded; our K6/W9 ordering rule).
 
     Mapping, leg by leg:
-    - retrieve: `CdsClient.retrieve` (submit/poll/download; cdsapi :72),
-      date = last_update + 24h; unavailable → {'status': 'skipped'},
-      NOTHING committed, the next run retries the same date (:71-75)
+    - retrieve: `CdsClient.retrieve` (submit/poll/land; cdsapi :72),
+      date = last_update + 24h (first run: ``options["date"]``), landed
+      as ``{dataset}_{date}.bin`` (the partition key in the filename,
+      K1); unavailable → {'status': 'skipped'}, NOTHING committed, the
+      next run retries the same date (:71-75)
     - decode: the reference shells out to cdo + slices per (variable,
       time) (:77-105); here the landed file is scanned with binaryFile
       and gribsim-decoded executor-side — the driver never parses bytes
@@ -269,15 +266,19 @@ def run_cds_forecast_batch(
     """
     import datetime as dt
 
-    from .sources.cds_connector import attempt_next_retrieve
+    from .sources.cds_connector import CdsRetrievalError
     from .sources.gribsim import decode_grid_files
 
-    # the gate + retrieve leg is SHARED with run_cds_batch (one
-    # date-advance rule, one landing convention — they must not diverge)
-    next_date, target = attempt_next_retrieve(
-        client, dataset, options, state, dataset_id, landing_dir
+    last = state.get(dataset_id, "last_update")
+    next_date = (
+        (dt.date.fromisoformat(last) + dt.timedelta(days=1)).isoformat()
+        if last
+        else options["date"]
     )
-    if target is None:
+    target = os.path.join(landing_dir, f"{dataset}_{next_date}.bin")
+    try:
+        client.retrieve(dataset, {**options, "date": next_date}, target)
+    except CdsRetrievalError:
         return {"status": "skipped", "date": next_date}
 
     bins = (

@@ -233,20 +233,22 @@ ORDER BY variable
     tags=("S14", "connector", "binaryFile"),
 )
 def cds_retrieval_roundtrip(spark, sf_dir):
-    """S14 end-to-end (reference cams_forecast/__init__.py:32,:54-75):
-    three state-gated `run_cds_batch` steps against a queued CDS
-    stand-in — day 1 lands messages a+b, day 2 lands c, day 3 is
-    unavailable (task fails at completion; the step returns 'skipped'
-    and COMMITS NOTHING, the reference's try/except-skip). The landed
-    binaries are scanned with binaryFile, gribsim-decoded executor-side,
-    and aggregated per variable; the oracle recomputes the same stats
-    from events. Hash match = submit → poll → download → land → decode
-    is lossless, and the skip left no partial rows behind."""
+    """S14 end-to-end (reference cams_forecast/__init__.py:32,:39-123):
+    three scheduled `pipelines.run_cds_forecast_batch` steps against a
+    queued CDS stand-in — day 1 lands messages a+b, day 2 lands c, day
+    3 is unavailable (task fails at completion; the step returns
+    'skipped' and COMMITS NOTHING, the reference's try/except-skip).
+    Each ingested day is decoded executor-side and published per
+    (date, variable); the published table is aggregated per variable
+    and the oracle recomputes the same stats from events. Hash match =
+    submit → poll → land → decode → publish is lossless, and the skip
+    left no partial rows behind."""
     import os
     import shutil
     import tempfile
 
-    from ..sources.cds_connector import CdsClient, LocalCdsQueue, run_cds_batch
+    from ..pipelines import run_cds_forecast_batch
+    from ..sources.cds_connector import CdsClient, LocalCdsQueue
     from ..state import StateStore
 
     sgb = _ensure_sgb_fixture(spark, sf_dir)
@@ -261,11 +263,11 @@ def cds_retrieval_roundtrip(spark, sf_dir):
 
         client = CdsClient(LocalCdsQueue(os.path.join(work, "origin")))
         state = StateStore(os.path.join(work, "state.json"))
-        landing = os.path.join(work, "landing")
-        os.makedirs(landing)
+        published = os.path.join(work, "published")
         outcomes = [
-            run_cds_batch(
-                client, "sgb-grid", {"date": "2026-01-01"}, state, "cds_demo", landing
+            run_cds_forecast_batch(
+                spark, client, "sgb-grid", {"date": "2026-01-01"}, state, "cds_demo",
+                os.path.join(work, "landing"), published,
             )
             for _ in range(3)
         ]
@@ -279,11 +281,8 @@ def cds_retrieval_roundtrip(spark, sf_dir):
                 f"skip committed state: {state.get('cds_demo')!r}"
             )
 
-        bins = (
-            spark.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(landing)
-        )
         return (
-            decode_grid_files(bins)
+            spark.read.parquet(published)
             .groupBy("variable")
             .agg(
                 F.count("*").cast("bigint").alias("n_cells"),

@@ -7,17 +7,19 @@ the Climate Data Store, queued server-side, polled until completed, then
 the staged result is downloaded — and the reference wraps the whole call
 in try/except-skip (:71-75) so an unavailable date leaves state
 untouched and the next run retries. cdsapi hides the queue inside one
-call; this module makes the protocol explicit (submit / poll / download)
+call; this module makes the protocol explicit (submit / poll / open)
 so each leg is testable, then composes them into the same one-call
-``retrieve`` surface the reference uses.
+``retrieve`` surface the reference uses. The date gate and skip live in
+the one CDS ingest step, `pipelines.run_cds_forecast_batch`.
 
 `LocalCdsQueue` is the origin stand-in (same class of seam as
 LocalHttpStore): datasets live in a local directory, and the task state
 machine advances DETERMINISTICALLY per poll (queued → running →
 completed) instead of on wall-clock — no sleeps in tests, no flakes.
 Pointing at the real CDS is a queue-object swap: submit POSTs the
-request, poll GETs task status, download streams the result URL (e.g.
-via UrllibHttpStore.download_to_file).
+request, poll GETs task status, open streams the result URL (e.g.
+via UrllibHttpStore.open); `retrieve` lands that stream through
+`http_connector.land`, the same atomic copy the HTTP connector uses.
 
 Scale note: retrieval is CONTROL PLANE — a handful of driver-side HTTP
 calls per scheduled batch, exactly like the reference's scheduler. The
@@ -29,6 +31,9 @@ never parses payload bytes.
 from __future__ import annotations
 
 import os
+from typing import BinaryIO
+
+from .http_connector import land
 
 
 class CdsRetrievalError(RuntimeError):
@@ -78,21 +83,10 @@ class LocalCdsQueue:
                 return "failed"
         return state
 
-    def download(self, task_id: str, out_file: str, chunk_size: int = 8192) -> str:
-        """Streamed chunk copy of the staged result, atomic publish —
-        same contract as HttpStore.download_to_file."""
+    def open(self, task_id: str) -> BinaryIO:
+        """Stream the staged result (the result-URL GET)."""
         dataset, date = self._tasks[task_id]
-        src = self._result_file(dataset, date)
-        os.makedirs(os.path.dirname(out_file) or ".", exist_ok=True)
-        tmp = out_file + ".part"
-        with open(src, "rb") as f, open(tmp, "wb") as out:
-            while True:
-                chunk = f.read(chunk_size)
-                if not chunk:
-                    break
-                out.write(chunk)
-        os.replace(tmp, out_file)
-        return out_file
+        return open(self._result_file(dataset, date), "rb")
 
 
 class CdsClient:
@@ -104,73 +98,17 @@ class CdsClient:
         self.max_polls = max_polls
 
     def retrieve(self, dataset: str, options: dict, target: str) -> str:
-        """Submit → poll to completion → download. Raises
-        CdsRetrievalError on a failed task or poll-budget exhaustion
-        (the caller decides whether that's skip or abort)."""
+        """Submit → poll to completion → land the result at ``target``.
+        Raises CdsRetrievalError on a failed task or poll-budget
+        exhaustion (the caller decides whether that's skip or abort)."""
         task_id = self.queue.submit(dataset, options)
         for _ in range(self.max_polls):
             state = self.queue.poll(task_id)
             if state == "completed":
-                return self.queue.download(task_id, target)
+                return land(self.queue.open(task_id), target)
             if state == "failed":
                 raise CdsRetrievalError(
                     f"retrieval failed: {dataset} {options.get('date', '')}"
                 )
         raise CdsRetrievalError(f"poll budget exhausted for {task_id}")
 
-
-def attempt_next_retrieve(
-    client: CdsClient,
-    dataset: str,
-    options: dict,
-    state,
-    dataset_id: str,
-    landing_dir: str,
-) -> tuple[str, str | None]:
-    """The SHARED gate + retrieve leg (reference
-    cams_forecast/__init__.py:54-75), used by both `run_cds_batch` and
-    `pipelines.run_cds_forecast_batch` so the date-advance rule and the
-    landing filename convention can never diverge between entry points:
-    next date = last_update + 24h (first run: caller-provided start),
-    retrieve into the landing dir (filename embeds the date — the
-    partition-key-in-filename convention, K1). Returns (next_date,
-    landed_path) — landed_path None means the date was unavailable and
-    NOTHING may be committed, so the next run retries the same date."""
-    import datetime as dt
-
-    last = state.get(dataset_id, "last_update")
-    if last:
-        next_date = (
-            dt.date.fromisoformat(last) + dt.timedelta(days=1)
-        ).isoformat()
-    else:
-        next_date = options["date"]  # first run: caller-provided start
-    opts = dict(options)
-    opts["date"] = next_date
-    target = os.path.join(landing_dir, f"{dataset}_{next_date}.bin")
-    try:
-        client.retrieve(dataset, opts, target)
-    except CdsRetrievalError:
-        return next_date, None
-    return next_date, target
-
-
-def run_cds_batch(
-    client: CdsClient,
-    dataset: str,
-    options: dict,
-    state,
-    dataset_id: str,
-    landing_dir: str,
-) -> dict:
-    """One scheduled CDS ingest step: the shared gated retrieve, then
-    COMMIT ONLY ON SUCCESS — an unavailable date returns
-    {'status': 'skipped'} with state untouched (reference
-    cams_forecast/__init__.py:71-75)."""
-    next_date, target = attempt_next_retrieve(
-        client, dataset, options, state, dataset_id, landing_dir
-    )
-    if target is None:
-        return {"status": "skipped", "date": next_date}
-    state.commit(dataset_id, {"last_update": next_date})
-    return {"status": "ingested", "date": next_date, "file": target}

@@ -34,11 +34,13 @@ from __future__ import annotations
 import struct
 import zlib
 from collections.abc import Callable, Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from typing import TYPE_CHECKING
 
 from .grib2 import _GRIB, _parse_message as _parse_grib2
+
+if TYPE_CHECKING:
+    import pandas as pd
+    from pyspark.sql import DataFrame
 
 _MAGIC = b"SGB1"
 _END = b"7777"
@@ -132,6 +134,8 @@ def _decode(binary_df: DataFrame, rows: Callable[[bytes], Iterator[tuple]]) -> D
     or NaN) reaches Spark as NULL."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         for pdf in batches:
             out = {"path": [], "variable": [], "y": [], "x": [], "value": []}
             for path, content in zip(pdf["path"], pdf["content"]):

@@ -8,12 +8,14 @@ landing step (reference ingest/chirps_rainfall/__init__.py:332-340) and a
 walk-back HEAD probe for availability (reference
 ingest/ecmwf_opendata/client.py:25-57). The sandbox has no network, so the
 "origin server" here is a local directory tree keyed by URL host+path —
-every connector semantic (status probe, ranged GET, streamed chunks,
+every connector semantic (status probe, ranged GET, streamed copy,
 gunzip-on-land, idempotent re-download) is real; only the socket is
 simulated. `UrllibHttpStore` below is the REAL-socket twin (stdlib
 urllib, same interface) — tested against a live localhost origin — so
 pointing the connector at a real URL is a constructor swap, and nothing
-in the data plane moves.
+in the data plane moves. A store only opens streams (`open`); `land` is
+the one copy from a stream to a published file, shared by both stores
+and by the CDS connector (sources/cds_connector.py).
 
 Scale note: catalogs (file listings) are small and probed driver-side,
 exactly like the reference's scheduler. The *payload* fan-out is the
@@ -30,11 +32,13 @@ from __future__ import annotations
 import gzip
 import os
 import shutil
-import tempfile
+import uuid
 from collections.abc import Iterable, Iterator
+from typing import TYPE_CHECKING, BinaryIO
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 
 class LocalHttpStore:
@@ -60,42 +64,25 @@ class LocalHttpStore:
     def get(self, url: str, start: int | None = None, length: int | None = None) -> bytes:
         """GET, optionally ranged (S3: the reference reads GRIB message
         byte ranges out of .index files rather than whole files)."""
-        with open(self.path_for(url), "rb") as f:
+        with self.open(url) as f:
             if start:
                 f.seek(start)
             return f.read(length) if length is not None else f.read()
 
-    def download_to_file(self, url: str, out_file: str, chunk_size: int = 8192) -> str:
-        """Streamed chunk copy (reference ingest/utils.py:129-136): constant
-        memory regardless of payload size."""
-        os.makedirs(os.path.dirname(out_file) or ".", exist_ok=True)
-        tmp = out_file + ".part"
-        with open(self.path_for(url), "rb") as src, open(tmp, "wb") as out:
-            while True:
-                chunk = src.read(chunk_size)
-                if not chunk:
-                    break
-                out.write(chunk)
-        os.replace(tmp, out_file)  # atomic publish: no torn files on crash
-        return out_file
-
-    def download_file_temp(self, url: str, suffix: str | None = None) -> str:
-        """reference ingest/utils.py:121-127."""
-        tmp = tempfile.NamedTemporaryFile(delete=False, suffix=suffix)
-        tmp.close()
-        return self.download_to_file(url, tmp.name)
+    def open(self, url: str) -> BinaryIO:
+        """Streamed GET (S1): the payload as a readable stream; `land`
+        copies it to disk."""
+        return open(self.path_for(url), "rb")
 
 
 class UrllibHttpStore:
-    """The REAL-network twin of `LocalHttpStore` — same four-method
-    interface (head / get / download_to_file / download_file_temp) over
-    actual sockets via stdlib ``urllib`` (no third-party client), so
-    every consumer in this module (`download_and_decompress`,
-    `land_files`, `fetch_bytes`) accepts either store unchanged. This is
-    the class VERDICT r10 "What's missing" #4 said a real-URL user would
-    have to write; it ships tested against a live localhost origin
+    """The REAL-network twin of `LocalHttpStore` — same three-method
+    interface (head / get / open) over actual sockets via stdlib
+    ``urllib`` (no third-party client), so every consumer in this module
+    (`land_files`, `fetch_bytes`) accepts either store unchanged. It
+    ships tested against a live localhost origin
     (tests/test_http_real_network.py: genuine TCP, HEAD probes, ranged
-    GETs, streamed chunk copies).
+    GETs, streamed landings).
 
     Contract parity with LocalHttpStore: a 404 surfaces as
     ``FileNotFoundError`` (the connector's walk-back probe and
@@ -105,26 +92,34 @@ class UrllibHttpStore:
     def __init__(self, timeout: float = 30.0):
         self.timeout = timeout
 
-    def head(self, url: str) -> int | None:
-        """S4 availability probe: HEAD request; content length, or None
-        for a 404 (reference ecmwf client walk-back, client.py:25-57)."""
+    def _urlopen(self, req):
+        """Every request goes through here: the one 404 →
+        ``FileNotFoundError`` mapping."""
         import urllib.error
         import urllib.request
 
-        req = urllib.request.Request(url, method="HEAD")
         try:
-            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                n = resp.headers.get("Content-Length")
-                return int(n) if n is not None else 0
+            return urllib.request.urlopen(req, timeout=self.timeout)
         except urllib.error.HTTPError as e:
             if e.code == 404:
-                return None
+                raise FileNotFoundError(req.full_url) from e
             raise
+
+    def head(self, url: str) -> int | None:
+        """S4 availability probe: HEAD request; content length, or None
+        for a 404 (reference ecmwf client walk-back, client.py:25-57)."""
+        import urllib.request
+
+        try:
+            with self._urlopen(urllib.request.Request(url, method="HEAD")) as resp:
+                n = resp.headers.get("Content-Length")
+                return int(n) if n is not None else 0
+        except FileNotFoundError:
+            return None
 
     def get(self, url: str, start: int | None = None, length: int | None = None) -> bytes:
         """GET, optionally ranged via the Range header (S3: GRIB message
         byte ranges; the reference requests `bytes=start-end`)."""
-        import urllib.error
         import urllib.request
 
         req = urllib.request.Request(url)
@@ -132,87 +127,60 @@ class UrllibHttpStore:
             s = start or 0
             end = "" if length is None else str(s + length - 1)
             req.add_header("Range", f"bytes={s}-{end}")
-        try:
-            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                return resp.read()
-        except urllib.error.HTTPError as e:
-            if e.code == 404:
-                raise FileNotFoundError(url) from e
-            raise
+        with self._urlopen(req) as resp:
+            return resp.read()
 
-    def download_to_file(self, url: str, out_file: str, chunk_size: int = 8192) -> str:
-        """Streamed chunk copy (reference ingest/utils.py:129-136):
-        constant memory regardless of payload size, atomic publish."""
-        import urllib.error
+    def open(self, url: str) -> BinaryIO:
+        """Streamed GET (reference ingest/utils.py:129 ``stream=True``):
+        the open response; `land` copies it to disk."""
         import urllib.request
 
-        os.makedirs(os.path.dirname(out_file) or ".", exist_ok=True)
-        tmp = out_file + ".part"
-        try:
-            with urllib.request.urlopen(url, timeout=self.timeout) as resp, open(
-                tmp, "wb"
-            ) as out:
-                while True:
-                    chunk = resp.read(chunk_size)
-                    if not chunk:
-                        break
-                    out.write(chunk)
-        except urllib.error.HTTPError as e:
-            if e.code == 404:
-                raise FileNotFoundError(url) from e
-            raise
+        return self._urlopen(urllib.request.Request(url))
+
+
+def land(stream: BinaryIO, out_file: str) -> str:
+    """The one landing copy (S1, reference ingest/utils.py:129-136):
+    stream ``stream`` into a private hidden temp file beside
+    ``out_file``, then publish it with ``os.replace``. Memory stays
+    constant whatever the payload size; a failed copy removes its temp
+    file, so the landing dir never holds a torn or partial file under a
+    visible name (Spark's file scans skip ``.``-prefixed names), and
+    concurrent landings of one name each publish a complete file.
+    Closes ``stream``."""
+    d, name = os.path.split(out_file)
+    os.makedirs(d or ".", exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.part")
+    try:
+        with stream as src, open(tmp, "wb") as out:
+            shutil.copyfileobj(src, out)
         os.replace(tmp, out_file)
-        return out_file
-
-    def download_file_temp(self, url: str, suffix: str | None = None) -> str:
-        tmp = tempfile.NamedTemporaryFile(delete=False, suffix=suffix)
-        tmp.close()
-        return self.download_to_file(url, tmp.name)
-
-
-def gunzip_file(gz_file: str, out_file: str) -> str:
-    """S8: decompress a landed .gz (reference
-    ingest/chirps_rainfall/__init__.py:336-340's gzip.open + copyfileobj)."""
-    tmp = out_file + ".part"
-    with gzip.open(gz_file, "rb") as src, open(tmp, "wb") as out:
-        shutil.copyfileobj(src, out)
-    os.replace(tmp, out_file)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
     return out_file
-
-
-def download_and_decompress(store: LocalHttpStore, url: str, out_file: str) -> str:
-    """Download; gunzip when the URL names a .gz (the CHIRPS tif.gz path,
-    reference ingest/chirps_rainfall/__init__.py:332-340)."""
-    if url.endswith(".gz"):
-        gz = store.download_file_temp(url, suffix=".gz")
-        try:
-            return gunzip_file(gz, out_file)
-        finally:
-            os.unlink(gz)
-    return store.download_to_file(url, out_file)
 
 
 def land_files(
     store: LocalHttpStore,
     urls: Iterable[str],
     landing_dir: str,
-    decompress: bool = True,
 ) -> list[str]:
     """Idempotently land a small catalog of URLs (skip files already
     present — the reference's skip-when-downloaded state gate, P11, at the
-    file granularity). Returns landed paths in url order."""
+    file granularity). A ``.gz`` URL is gunzipped as it lands (S8,
+    reference ingest/chirps_rainfall/__init__.py:332-340) and published
+    without the suffix: one write, no compressed intermediate. Returns
+    landed paths in url order."""
     os.makedirs(landing_dir, exist_ok=True)
     out: list[str] = []
     for url in urls:
         name = os.path.basename(urlparse(url).path)
-        if decompress and name.endswith(".gz"):
-            name = name[: -len(".gz")]
-        dest = os.path.join(landing_dir, name)
+        gz = name.endswith(".gz")
+        dest = os.path.join(landing_dir, name[: -len(".gz")] if gz else name)
         if not os.path.exists(dest):
-            if decompress:
-                download_and_decompress(store, url, dest)
-            else:
-                store.download_to_file(url, dest)
+            with store.open(url) as raw:
+                land(gzip.GzipFile(fileobj=raw) if gz else raw, dest)
         out.append(dest)
     return out
 

@@ -6,7 +6,10 @@ oracled `binary_grid_decode_roundtrip` query rides on."""
 from __future__ import annotations
 
 import math
+import os
 import struct
+import subprocess
+import sys
 
 import pytest
 
@@ -65,6 +68,23 @@ def test_integrity_violations_raise(mutate, err):
 def test_wrong_value_count_rejected_at_encode():
     with pytest.raises(ValueError, match="expected 4 values"):
         G.encode_message("v", 2, 2, [1.0])
+
+
+def test_subprocess_decoder_imports_neither_pandas_nor_pyspark():
+    """The child decoder is spawned once per file, so its import must
+    stay on struct/zlib and the GRIB2 parser: pandas and pyspark cost
+    most of a second before a byte is read."""
+    package_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(G.__file__))))
+    code = (
+        "import sys\n"
+        "from data_ingestion_auto_spark.sources.gribsim import _subprocess_decode_main\n"
+        "print(sorted(m for m in ('pandas', 'pyspark') if m in sys.modules))\n"
+    )
+    env = dict(os.environ, PYTHONPATH=package_root)
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, check=True, text=True, env=env
+    ).stdout
+    assert out.strip() == "[]"
 
 
 def test_subprocess_decode_equals_in_process(spark, tmp_path):

@@ -2,8 +2,8 @@
 real HTTP (VERDICT r10 "What's missing" #4). A threaded stdlib server
 with Range support plays origin; the store must show contract parity
 with LocalHttpStore: HEAD probe (404 → None), GET (404 →
-FileNotFoundError), ranged GET, streamed atomic download, gunzip-on-land
-via the SAME land_files/download_and_decompress code paths, and the
+FileNotFoundError), ranged GET, streamed atomic landing through the SAME
+`land`, gunzip-on-land through the SAME `land_files`, and the
 distributed fetch_bytes mapInPandas fan-out with executor-side clients."""
 
 from __future__ import annotations
@@ -18,6 +18,7 @@ import pytest
 from data_ingestion_auto_spark.sources.http_connector import (
     UrllibHttpStore,
     fetch_bytes,
+    land,
     land_files,
 )
 
@@ -98,10 +99,12 @@ def test_get_full_ranged_and_404(origin_url):
 def test_streamed_download_is_atomic_and_exact(origin_url, tmp_path):
     store = UrllibHttpStore()
     out = str(tmp_path / "landed" / "blob.bin")
-    got = store.download_to_file(f"{origin_url}/data/blob.bin", out, chunk_size=100)
+    got = land(store.open(f"{origin_url}/data/blob.bin"), out)
     assert got == out
     assert open(out, "rb").read() == _PAYLOAD
-    assert not os.path.exists(out + ".part")  # atomic publish
+    assert os.listdir(tmp_path / "landed") == ["blob.bin"]  # exactly the landed file
+    with pytest.raises(FileNotFoundError):
+        store.open(f"{origin_url}/data/nope.bin")
 
 
 def test_land_files_gunzip_and_idempotence(origin_url, tmp_path):

@@ -41,6 +41,25 @@ def test_overwrite_only_touched_partitions(spark, tmp_path):
     assert spark.read.parquet(out).filter(F.col("day") == "2024-01-02").count() == 2
 
 
+
+def test_overwrite_partitions_on_static_session_leaves_conf(spark, tmp_path):
+    """On a session whose conf says STATIC overwrite (Spark's default,
+    e.g. a caller's vanilla session), day 2 still leaves day 1 in place,
+    and the caller's conf is not rewritten."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        out = str(tmp_path / "t")
+        overwrite_partitions(_batch(spark, "2024-01-01", [1, 2, 3]), out, ["day"])
+        overwrite_partitions(_batch(spark, "2024-01-02", [9]), out, ["day"])
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prior)
+    df = spark.read.parquet(out)
+    assert df.filter(F.col("day") == "2024-01-01").count() == 3
+    assert df.filter(F.col("day") == "2024-01-02").count() == 1
+
 def test_retention_hive_escaped_timestamps(spark, tmp_path):
     """Colons in partition values are Hive-escaped (`%3A`) on disk; the
     watermark compare must use the decoded value — raw `%3A` sorts below

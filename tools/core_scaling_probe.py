@@ -6,6 +6,13 @@ sf1 derived fixture and compare: at sf0.1 the bench is overhead-bound
 compute dominates the fixed per-stage floor.
 
 Usage: SPARK_GRAFT_CPUS=N python tools/core_scaling_probe.py <sf_dir> [--reps N] [query ...]
+       SPARK_GRAFT_CPUS=N python tools/core_scaling_probe.py <sf_dir> [--reps N] --all
+
+Times each query as construction (REGISTRY[name].spark(...) — includes any
+eager subtrees / memo builds on first touch) plus a noop-sink write, and
+keeps the best total of N reps. Memo state is whatever the process has
+built so far, so the per-rep construct/exec split on stderr shows build
+vs steady state. ``--all`` runs every registered query.
 
 Prints one JSON line: {"cpus": N, "sf_dir": ..., "queries": {name: best_sec}}.
 """
@@ -53,11 +60,11 @@ def main() -> None:
         i = rest.index("--reps")
         reps = int(rest[i + 1])
         del rest[i : i + 2]
-    names = rest or DEFAULT
 
     from data_ingestion_auto_spark import plans
     from data_ingestion_auto_spark.session import get_session
 
+    names = sorted(plans.REGISTRY) if "--all" in rest else rest or DEFAULT
     spark = get_session("core_scaling_probe")
     cpus = spark.sparkContext.defaultParallelism
     plans.REGISTRY["q1_pricing_summary"].spark(spark, sf_dir).collect()  # warm
@@ -69,10 +76,16 @@ def main() -> None:
             spark.sparkContext.setJobDescription(f"scale:{name}#{rep}")
             t0 = time.perf_counter()
             df = plans.REGISTRY[name].spark(spark, sf_dir)
+            t1 = time.perf_counter()
             df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
+            t2 = time.perf_counter()
+            best = min(best, t2 - t0)
+            print(
+                f"# {name} rep{rep}: construct={t1 - t0:.3f}s exec={t2 - t1:.3f}s",
+                file=sys.stderr,
+                flush=True,
+            )
         out[name] = round(best, 2)
-        print(f"# {name}: {out[name]}", file=sys.stderr, flush=True)
     print(json.dumps({"cpus": cpus, "sf_dir": sf_dir, "queries": out}), flush=True)
 
 
