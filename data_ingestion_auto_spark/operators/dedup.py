@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from ..checkpoints import ckpt, ckpt_local
+from ..checkpoints import ckpt
 from .layout import write_capped_index
 
 
@@ -568,14 +568,15 @@ def probe_band_index(
     unioning raw rows into the index side would discard its bucketed
     output partitioning and force the Exchange this layout exists to
     avoid.
+
+    ``batch_banded`` is read four times (index join, self join twice,
+    distinct ids), so pass a frame that is already cut, as the dedup
+    stream does with one ``localCheckpoint`` shared by probe and append.
     """
     idx = spark.table(table).select(
         F.col(id_col).alias("o_id"), "band", "band_hash"
     )
-    # batch-sized, recomputable, on the streaming hot path -> local cut
-    batch = ckpt_local(batch_banded.select(
-        F.col(id_col).alias("n_id"), "band", "band_hash"
-    ))
+    batch = batch_banded.select(F.col(id_col).alias("n_id"), "band", "band_hash")
     # o_id != n_id: on RE-ingest of an already-indexed batch a document
     # finds its own index rows; self is never a duplicate partner.
     idx_cand = (

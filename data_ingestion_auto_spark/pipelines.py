@@ -259,7 +259,8 @@ def run_cds_forecast_batch(
       exactly the republished partitions, so a replayed batch is
       idempotent
     - retention: `cleanup_old_data` before ingestion (:108) →
-      `retention_delete` below the keep-window watermark
+      `retention_delete` below the keep-window watermark; the landed
+      ``{dataset}_{date}.bin`` payloads below it are removed too
     - state: committed last; a crash ANYWHERE earlier leaves last_update
       untouched and the replayed step re-lands, re-publishes (idempotent
       overwrite), re-retains, then commits.
@@ -275,7 +276,11 @@ def run_cds_forecast_batch(
         if last
         else options["date"]
     )
-    target = os.path.join(landing_dir, f"{dataset}_{next_date}.bin")
+
+    def landed(day: str) -> str:
+        return f"{dataset}_{day}.bin"
+
+    target = os.path.join(landing_dir, landed(next_date))
     try:
         client.retrieve(dataset, {**options, "date": next_date}, target)
     except CdsRetrievalError:
@@ -294,6 +299,16 @@ def run_cds_forecast_batch(
         dt.date.fromisoformat(next_date) - dt.timedelta(days=keep_days)
     ).isoformat()
     deleted = retention_delete(out_path, "date", watermark)
+    # The landed payloads share the watermark, so the landing dir holds at
+    # most keep_days + 1 files instead of one per period forever; ISO
+    # dates order the same inside the name as alone.
+    for name in os.listdir(landing_dir):
+        if (
+            name.startswith(f"{dataset}_")
+            and name.endswith(".bin")
+            and name < landed(watermark)
+        ):
+            os.remove(os.path.join(landing_dir, name))
 
     state.commit(dataset_id, {"last_update": next_date})
     return {

@@ -12,10 +12,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     from data_ingestion_auto_spark.session import get_session
 
-    s = get_session("tests", shuffle_partitions=8)
+    # managed tables land in a per-run directory, not the checkout
+    warehouse = str(tmp_path_factory.mktemp("warehouse"))
+    s = get_session(
+        "tests", shuffle_partitions=8, extra_conf={"spark.sql.warehouse.dir": warehouse}
+    )
     yield s
 
 

@@ -74,9 +74,10 @@ def test_three_days_then_skip_with_retention(spark, env):
     assert r4 == {"status": "skipped", "date": "2026-04-04"}
     assert state.get("cams_fc") == "2026-04-03"
     assert _run(spark, env)["status"] == "skipped"
-    # landed filenames embed the date (K1 partition-in-filename)
+    # landed filenames embed the date (K1 partition-in-filename), and the
+    # payloads follow the published keep window: day 1 is gone with its
+    # partitions, so the dir holds keep_days + 1 files
     assert sorted(os.listdir(landing)) == [
-        "cams_2026-04-01.bin",
         "cams_2026-04-02.bin",
         "cams_2026-04-03.bin",
     ]

@@ -32,7 +32,7 @@ def corpus_and_batches(spark, sf_dir):
     return corpus, new[:half], new[half:]
 
 
-def _run_stream(spark, tmp, corpus, b1, b2, tag):
+def _run_stream(spark, tmp, corpus, batches, tag):
     idx = f"t_stream_idx_{tag}"
     spark.sql(f"DROP TABLE IF EXISTS {idx}")
     D.write_band_index(
@@ -40,7 +40,7 @@ def _run_stream(spark, tmp, corpus, b1, b2, tag):
     )
     src = tmp / f"src_{tag}"
     src.mkdir(exist_ok=True)
-    for i, batch in enumerate((b1, b2)):
+    for i, batch in enumerate(batches):
         f = src / f"b{i}"
         spark.createDataFrame(batch, "doc_id long, text string").coalesce(
             1
@@ -64,7 +64,7 @@ def _run_stream(spark, tmp, corpus, b1, b2, tag):
         buckets=8,
     )
     q.awaitTermination(300)
-    return idx, str(tmp / f"assign_{tag}")
+    return idx, str(tmp / f"assign_{tag}"), q
 
 
 def _batch_control(spark, tmp, corpus, batches, tag):
@@ -87,7 +87,7 @@ def test_stream_matches_sequential_batch_control(
     spark, corpus_and_batches, tmp_path
 ):
     corpus, b1, b2 = corpus_and_batches
-    idx, assign_path = _run_stream(spark, tmp_path, corpus, b1, b2, "a")
+    idx, assign_path, _ = _run_stream(spark, tmp_path, corpus, (b1, b2), "a")
     got = {
         r.doc_id: (r.dup_of, r.is_dup)
         for r in spark.read.parquet(assign_path).collect()
@@ -118,7 +118,7 @@ def test_stream_replay_refines_never_loses(spark, corpus_and_batches, tmp_path):
     documented read contract (per doc_id, min(dup_of)) is deterministic
     under any replay history."""
     corpus, b1, b2 = corpus_and_batches
-    idx, assign_path = _run_stream(spark, tmp_path, corpus, b1, b2, "r")
+    idx, assign_path, _ = _run_stream(spark, tmp_path, corpus, (b1, b2), "r")
     idx_rows = sorted(
         (r.doc_id, r.band, r.band_hash) for r in spark.table(idx).collect()
     )
@@ -175,3 +175,27 @@ def test_stream_replay_refines_never_loses(spark, corpus_and_batches, tmp_path):
     for doc, (d0, i0) in first.items():
         if i0:
             assert final[doc] <= d0
+
+
+def test_epoch_cuts_the_batch_once(spark, corpus_and_batches, tmp_path):
+    """One micro-batch against a stored index: the stream runs its jobs
+    under its runId job group, so the status tracker sees them. The
+    handler cuts the banded batch once for probe and append; the probe
+    reads that cut and must not copy a projection of it again (one more
+    job and one more in-memory copy per epoch). Counted by call site, so
+    the number of query stages AQE splits the epoch into does not
+    matter."""
+    corpus, b1, _ = corpus_and_batches
+    _, assign_path, q = _run_stream(spark, tmp_path, corpus, (b1,), "cut")
+    assert q.exception() is None
+    assert spark.read.parquet(assign_path).count() == len(b1)
+    st = spark.sparkContext.statusTracker()
+    cuts = [
+        j
+        for j in st.getJobIdsForGroup(str(q.runId))
+        if any(
+            st.getStageInfo(s).name.startswith("localCheckpoint at ")
+            for s in st.getJobInfo(j).stageIds
+        )
+    ]
+    assert len(cuts) == 1, cuts
