@@ -160,3 +160,67 @@ def top1(df: DataFrame, keys, order, payload=(), aggs=()) -> DataFrame:
     )
     flags = [f"_null{i}" for i in range(len(order))]
     return best.select(*keys, "_top1.*", *best.columns[len(keys) + 1 :]).drop(*flags)
+
+
+# md5 as the engine's deterministic "random" source: arrival delays,
+# batch splits, folds, sketch and feature hashes are all some md5 hex
+# digits of a row key read as an integer. The two helpers below are the
+# only place that decode is spelled: `md5_hex_int` for Spark plans,
+# `md5_hex_int_sql` for the DuckDB oracles. Both return SQL text; the
+# caller casts a non-string key (``CAST(k AS STRING)`` parses in both
+# engines).
+
+
+def _md5_digits(ndigits: int, start: int) -> None:
+    """Reject a digit range that cannot be decoded exactly: more than 15
+    hex digits overflow a BIGINT, and a range past the 32-digit md5 hex
+    string reads empty substrings — constant bits that look like hash
+    output."""
+    if not 1 <= ndigits <= 15:
+        raise ValueError(f"ndigits={ndigits}: a BIGINT holds 1..15 hex digits")
+    if start < 1 or start + ndigits - 1 > 32:
+        raise ValueError(
+            f"md5 hex digits {start}..{start + ndigits - 1} lie outside 1..32"
+        )
+
+
+def digits_int(text: str, start: int, ndigits: int, base: int = 16) -> str:
+    """Spark SQL text: characters ``start .. start + ndigits - 1``
+    (1-based) of the string ``text``, read as a base-``base`` number,
+    as a BIGINT — one ``conv`` parse."""
+    return f"CAST(conv(substr({text}, {start}, {ndigits}), {base}, 10) AS BIGINT)"
+
+
+def md5_hex_int(expr: str, ndigits: int = 8, start: int = 1) -> str:
+    """Spark SQL text: hex digits ``start .. start + ndigits - 1`` of
+    ``md5(expr)``, most significant first, as a BIGINT (NULL for a NULL
+    ``expr``). One ``conv`` parse: the per-nibble form recomputes md5
+    once per digit wherever Spark evaluates it interpreted, as inside
+    higher-order-function lambdas (no codegen, no common-subexpression
+    elimination), and its expression tree is ``ndigits`` times larger."""
+    _md5_digits(ndigits, start)
+    return digits_int(f"md5({expr})", start, ndigits)
+
+
+def md5_hex_int_sql(expr: str, ndigits: int = 8, start: int = 1) -> str:
+    """Portable SQL text with the value of `md5_hex_int`, for the DuckDB
+    oracles: DuckDB has no ``conv``, so each digit is its position in
+    '0123456789abcdef' less one, times its power of 16. Valid in Spark
+    SQL too; Spark plans use `md5_hex_int`."""
+    _md5_digits(ndigits, start)
+    terms = (
+        f"CAST(instr('0123456789abcdef', substr(md5({expr}), {start + i}, 1)) - 1"
+        f" AS BIGINT) * {16 ** (ndigits - 1 - i)}"
+        for i in range(ndigits)
+    )
+    return "(" + " + ".join(terms) + ")"
+
+
+def md5_quarter(expr: str, oracle: bool = False) -> str:
+    """The house ~25 % split as SQL text: TRUE when the first md5 hex
+    digit of ``expr`` is 0-3. It marks the new batch of the
+    incremental-ingest replays and the stratified sample; a fixed
+    function of the row key, so the same rows in either engine and any
+    partitioning. ``oracle`` picks the `md5_hex_int_sql` spelling."""
+    decode = md5_hex_int_sql if oracle else md5_hex_int
+    return f"({decode(expr, 1)} < 4)"

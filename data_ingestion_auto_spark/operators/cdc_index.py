@@ -24,18 +24,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoints import ckpt, ckpt_local
+from ..functions.scalars import md5_hex_int
 from ..sources.tables import spread
 from .layout import write_capped_index
 
-_W = 4  # rolling-window length (tokens) — must match plans/cdc_chunks.py
+_W = 4  # rolling-window length (tokens); plans/cdc_chunks.py imports both
 _D = 8  # boundary divisor -> expected chunk length (tokens)
-
-# Spark-only operator: decode via one conv() (bit-equal to the instr
-# nibble sum — the plans/sketches.py _HEX8_SPARK idiom). This expression
-# runs inside higher-order-function lambdas, which Spark evaluates
-# interpreted (no codegen, no common-subexpression elimination): the old
-# eight-term form recomputed md5 once per nibble, 8 md5 calls per window.
-_HEX8S = "(CAST(conv(substr(md5({v}), 1, 8), 16, 10) AS BIGINT))"
 
 
 def cdc_chunk_rows(docs: DataFrame, durable: bool = False) -> DataFrame:
@@ -53,7 +47,7 @@ def cdc_chunk_rows(docs: DataFrame, durable: bool = False) -> DataFrame:
     win = f"concat_ws(' ', slice(w, i - {_W - 1}, {_W}))"
     bp = (
         f"CASE WHEN size(w) >= {_W} THEN "
-        f"filter(sequence({_W}, size(w)), i -> ({_HEX8S.format(v=win)} % {_D}) = 0) "
+        f"filter(sequence({_W}, size(w)), i -> ({md5_hex_int(win)} % {_D}) = 0) "
         "ELSE array() END"
     )
     chunk = (

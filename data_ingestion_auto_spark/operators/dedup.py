@@ -243,25 +243,27 @@ def lsh_candidates(
     return pairs.distinct()
 
 
+# Round shape of `connected_components`: neighbour-min hops, then
+# pointer jumps, per materialized round (see its docstring for the sweep).
+_HOPS_PER_ROUND = 5
+_JUMPS_PER_ROUND = 1
+
+
 def connected_components(
     pairs: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
     max_iter: int = 20,
     checkpoint_dir: str | None = None,
-    hops_per_round: int = 5,
-    jumps_per_round: int = 1,
 ) -> DataFrame:
-    """Connected components over a near-dup pair list via min-label
-    propagation with pointer jumping: every node starts labeled with
-    itself; each materialized round takes ``hops_per_round``
-    neighbour-minimum HOPS (edge joins — unconditional frontier advance)
-    followed by ``jumps_per_round`` pointer JUMPS (``label ←
-    label(label)``, labels-only self-joins — chain compression when
-    label chains align, a no-op when they stall on a node that hasn't
-    learned a smaller label yet). The defaults are the measured optimum
-    of the round-14 sweep under the frontier-filtered hop (three
-    tools/cc_probe.py sweeps at sf0.1, label tables verified identical
+    """Connected components over a near-dup pair list (columns ``a``,
+    ``b``) via min-label propagation with pointer jumping: every node
+    starts labeled with itself; each materialized round takes
+    ``_HOPS_PER_ROUND`` neighbour-minimum HOPS (edge joins —
+    unconditional frontier advance) followed by ``_JUMPS_PER_ROUND``
+    pointer JUMPS (``label ← label(label)``, labels-only self-joins —
+    chain compression when label chains align, a no-op when they stall
+    on a node that hasn't learned a smaller label yet). The shape is the
+    measured optimum of the round-14 sweep under the frontier-filtered
+    hop (three sweeps at sf0.1, label tables verified identical
     across 4:2/4:3/5:2/5:3/3:2/6:2/5:1/4:1/6:1/5:0): 5:1 ≈ 5.2 s warm
     vs 7.0 s at r13's 4:2 and 8-16 s at 6 hops — each extra hop doubles
     the references into the round's lazy subtree (the
@@ -354,8 +356,8 @@ def connected_components(
 
     try:
         edges = pairs.select(
-            F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-        ).unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+            F.col("a").alias("src"), F.col("b").alias("dst")
+        ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         edges = materialize(edges.distinct(), "edges")
         labels = materialize(
             edges.select(F.col("src").alias("node")).distinct().withColumn(
@@ -400,7 +402,7 @@ def connected_components(
             # jump changes, at worst re-propagating an already-seen
             # label — redundant, never wrong). Per-round label tables
             # are bit-identical to the unfiltered loop (pinned by
-            # tests/test_opt_r14.py and the cc_probe sweep); late rounds
+            # tests/test_opt_r14.py at four round shapes); late rounds
             # — where only a few labels still move — stop paying a full
             # edges⋈labels join per hop.
             if frontier_true:
@@ -414,7 +416,7 @@ def connected_components(
                     "label",
                     (F.col("label") != F.col("prev")).alias("chg"),
                 ).withColumn("prev", F.col("label"))
-            for _h in range(hops_per_round):
+            for _h in range(_HOPS_PER_ROUND):
                 frontier = cur.filter(F.col("chg")).select(
                     F.col("node").alias("fnode"), F.col("label").alias("flabel")
                 )
@@ -444,9 +446,9 @@ def connected_components(
             # the 8 references scan a small parquet file, not 8
             # re-executions of the edge join. With no jumps there is no
             # multi-reference, so the round needs only the labels write.
-            if jumps_per_round > 0:
+            if _JUMPS_PER_ROUND > 0:
                 hop = materialize(hop, f"hop_{rnd}")
-            for _j in range(jumps_per_round):
+            for _j in range(_JUMPS_PER_ROUND):
                 # ptr side restricted to non-root nodes: label(label)
                 # differs from label only when the label's own label
                 # moved off itself; a root's (pnode == plabel) row maps

@@ -38,11 +38,12 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.scalars import md5_quarter
 from .helpers import T
 from .registry import query
 from .semdedup import _KM_CTES
 
-_NEW = "('0','1','2','3')"  # md5(vec_id) first-nibble batch membership
+_NEW = md5_quarter("CAST(vec_id AS STRING)", oracle=True)  # batch membership
 _NPROBE = 2
 _TOPK = 3
 
@@ -55,12 +56,12 @@ _Q = "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000.0) AS 
 WITH qv AS (
   SELECT vec_id, {_Q} AS qvec
   FROM embeddings
-  WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) NOT IN {_NEW}
+  WHERE NOT {_NEW}
 ),{_KM_CTES},
 nq AS (
   SELECT vec_id AS query_id, {_Q} AS qq
   FROM embeddings
-  WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) IN {_NEW}
+  WHERE {_NEW}
 ),
 pc AS (
   SELECT query_id, qq, cluster_id FROM (
@@ -112,9 +113,7 @@ def incremental_ann_with_k(spark, sf_dir, k: int):
     from .ann_memo import kml_model
 
     emb = T(spark, sf_dir, "embeddings")
-    is_new = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1).isin(
-        "0", "1", "2", "3"
-    )
+    is_new = F.expr(md5_quarter("CAST(vec_id AS STRING)"))
     batch = emb.filter(is_new)
     # corpus-side quantizer: the FROZEN stored model — assignments (the
     # inverted lists) and centroids are MEMOIZED per corpus version
@@ -124,11 +123,7 @@ def incremental_ann_with_k(spark, sf_dir, k: int):
         spark,
         sf_dir,
         "ivfcorpus",
-        lambda: T(spark, sf_dir, "embeddings").filter(
-            ~F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1).isin(
-                "0", "1", "2", "3"
-            )
-        ),
+        lambda: T(spark, sf_dir, "embeddings").filter(~is_new),
         k=k,
     )
     q = quantize(batch).select(

@@ -11,10 +11,11 @@ exact, alignment-free shared-content detector that sits between
 whole-document exact dedup (misses partial overlap) and the
 ExactSubstr/winnowing tiers (which pay per-position work).
 
-Determinism contract: the "rolling" hash is the house portable nibble
-decode of md5 over the W-token window text (same boundary statistics as
-a gear hash — uniform over [0, 2^32) — and bit-identical in both
-engines); expected chunk length is D tokens. W = 4, D = 8.
+Determinism contract: the "rolling" hash is the first 8 md5 hex digits
+of the W-token window text as an integer (`md5_hex_int` /
+`md5_hex_int_sql`: same boundary statistics as a gear hash — uniform
+over [0, 2^32) — and bit-identical in both engines); expected chunk
+length is D tokens. W = 4, D = 8 (operators/cdc_index.py).
 
 Scale: one corpus scan; chunking is a per-row O(tokens·W) projection
 (codegen, no UDF); the chunk frame carries only (doc_id, md5, length) —
@@ -34,31 +35,17 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoints import ckpt
+from ..functions.scalars import md5_hex_int_sql, md5_quarter
+from ..operators.cdc_index import _D, _W, cdc_chunk_rows
 from .helpers import T
 from .registry import query
-
-_W = 4  # rolling-window length (tokens)
-_D = 8  # boundary divisor -> expected chunk length (tokens)
-
-# first 8 hex digits of md5(<string expr>) -> BIGINT in [0, 2^32);
-# portable instr-based nibble decode (same idiom as plans/sketches.py,
-# minus the CAST — the window text is already a string).
-_HEX8S = (
-    "("
-    + " + ".join(
-        f"CAST(instr('0123456789abcdef', substr(md5({{v}}), {i + 1}, 1)) - 1 "
-        f"AS BIGINT) * {16 ** (7 - i)}"
-        for i in range(8)
-    )
-    + ")"
-)
 
 _SQL_CHUNKS = f"""d AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
 bnd AS (
   SELECT doc_id, source, w,
          CASE WHEN len(w) >= {_W} THEN
            list_filter(generate_series({_W}, len(w)),
-                       i -> ({_HEX8S.format(v=f"array_to_string(w[i - {_W - 1} : i], ' ')")} % {_D}) = 0)
+                       i -> ({md5_hex_int_sql(f"array_to_string(w[i - {_W - 1} : i], ' ')")} % {_D}) = 0)
          ELSE [] END AS bp
   FROM d
 ),
@@ -89,7 +76,6 @@ def _chunk_rows(spark, sf_dir):
     pipeline chunks at ingest and stores the chunk table once — the
     stored chunk-index lifecycle in operators/cdc_index.py is exactly
     that contract, this memo is its query-tier analogue."""
-    from ..operators.cdc_index import cdc_chunk_rows
     from .dedup import _corpus_memo
 
     return _corpus_memo(
@@ -299,7 +285,6 @@ def source_overlap_matrix(spark, sf_dir):
     )
 
 
-_NEW_NIB = "('0', '1', '2', '3')"  # the house ~25% md5 batch split
 _CHUNK_CAP = 100
 
 
@@ -310,7 +295,7 @@ WITH {_SQL_CHUNKS},
 cdist AS (SELECT DISTINCT doc_id, chash, n_tokens FROM chunks),
 capped AS (
   SELECT doc_id, chash,
-         substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN {_NEW_NIB} AS is_new
+         {md5_quarter("CAST(doc_id AS STRING)", oracle=True)} AS is_new
   FROM (
     SELECT doc_id, chash,
            row_number() OVER (PARTITION BY chash ORDER BY doc_id) AS rn
@@ -319,7 +304,7 @@ capped AS (
 ),
 nc AS (
   SELECT doc_id, chash, n_tokens FROM cdist
-  WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN {_NEW_NIB}
+  WHERE {md5_quarter("CAST(doc_id AS STRING)", oracle=True)}
 ),
 own AS (
   SELECT n.doc_id AS doc_id, n.chash, n.n_tokens, min(o.doc_id) AS owner
@@ -361,9 +346,7 @@ def incremental_cdc_assign(spark, sf_dir):
     chash-keyed equi-joins only; owner fan-out bounded by the cap."""
     chunks = _chunk_rows(spark, sf_dir)
     cdist = ckpt(chunks.select("doc_id", "chash", "n_tokens").distinct())
-    is_new = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1).isin(
-        "0", "1", "2", "3"
-    )
+    is_new = F.expr(md5_quarter("CAST(doc_id AS STRING)"))
     w = F.row_number().over(W.partitionBy("chash").orderBy("doc_id"))
     capped = (
         cdist.withColumn("rn", w)

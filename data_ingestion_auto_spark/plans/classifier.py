@@ -32,18 +32,17 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.scalars import md5_hex_int, md5_hex_int_sql
 from .helpers import T, spread
 from .registry import query
-from .sketches import _HEX8, _HEX8_SPARK
 
 _BUCKETS = 1024
 _THRESH = 0  # keep documents with non-negative mean feature weight
 
-# hashed bigram -> bucket id (Spark side: conv() twin, bit-equal; the
-# oracle SQL below keeps the portable _HEX8 instr text)
-_BUCKET = f"({_HEX8_SPARK} % {_BUCKETS})"
+# hashed bigram -> bucket id
+_BUCKET = f"({md5_hex_int('bg')} % {_BUCKETS})"
 # bucket id -> deterministic integer weight in [-500, 500] micro-units
-_WEIGHT = f"(({_HEX8_SPARK} % 1001) - 500)"
+_WEIGHT = "((" + md5_hex_int("concat('w|', CAST(bucket AS STRING))") + " % 1001) - 500)"
 
 
 @query(
@@ -54,13 +53,13 @@ WITH w AS (
 ),
 feats AS (
   SELECT doc_id,
-         ({_HEX8.replace("AS STRING", "AS VARCHAR").format(v="s[i] || '_' || s[i + 1]")} % {_BUCKETS}) AS bucket
+         ({md5_hex_int_sql("s[i] || '_' || s[i + 1]")} % {_BUCKETS}) AS bucket
   FROM w, LATERAL (SELECT unnest(generate_series(1, len(s) - 1)) AS i) g
   WHERE len(s) >= 2
 ),
 weights AS (
   SELECT b.bucket,
-         (({_HEX8.replace("AS STRING", "AS VARCHAR").format(v="'w|' || CAST(b.bucket AS VARCHAR)")} % 1001) - 500) AS wt
+         (({md5_hex_int_sql("'w|' || CAST(b.bucket AS VARCHAR)")} % 1001) - 500) AS wt
   FROM (SELECT unnest(generate_series(0, {_BUCKETS - 1})) AS bucket) b
 ),
 scored AS (
@@ -95,14 +94,14 @@ def hashed_linear_classifier_scores(spark, sf_dir):
     feats = docs.select(
         "doc_id", F.expr(pairs).alias("bg")
     ).select(
-        "doc_id", F.expr(_BUCKET.format(v="bg")).cast("bigint").alias("bucket")
+        "doc_id", F.expr(_BUCKET).cast("bigint").alias("bucket")
     )
     weights = (
         spark.range(_BUCKETS)
         .select(F.col("id").alias("bucket"))
         .select(
             "bucket",
-            F.expr(_WEIGHT.format(v="concat('w|', CAST(bucket AS STRING))"))
+            F.expr(_WEIGHT)
             .cast("bigint")
             .alias("wt"),
         )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as D
 from ..checkpoints import ckpt
+from ..functions.scalars import digits_int, md5_hex_int
 from ..scratch import artifact_root
 from .helpers import T, spread
 from .registry import query
@@ -434,16 +435,15 @@ def _simhash_bits_sql(src: str, nbits: int = 16) -> str:
 
 def _simhash_bits_spark(nbits: int) -> str:
     """Spark twin of _simhash_bits_sql/_simhash_bits_sql64 — identical
-    bits via two conv() parses of the md5 prefix plus integer shift/mask
-    sums instead of per-bit string compares (optimization r13, the
-    sketches._HEX8_SPARK idiom). Equivalences: the first 8/16 hex digits
+    bits via two `md5_hex_int` parses of the md5 prefix plus integer
+    shift/mask sums instead of per-bit string compares (optimization
+    r13). Equivalences: the first 8/16 hex digits
     parse MSB-first into two 32-bit lanes, so the old "bit (3 − j%4) of
     nibble (j//4 + 1)" is bit (31 − j) of lane 1 for j < 32 and bit
     (63 − j) of lane 2 otherwise (16-bit form: the nibble HIGH bit =
     bit 31 − 4j); and sign(Σ ±1) > 0 ⇔ 2·Σ bit > count(*) exactly in
     integers. The oracle keeps the portable text."""
-    h1 = "CAST(conv(substr(md5(shingle), 1, 8), 16, 10) AS BIGINT)"
-    h2 = "CAST(conv(substr(md5(shingle), 9, 8), 16, 10) AS BIGINT)"
+    h1, h2 = md5_hex_int("shingle"), md5_hex_int("shingle", start=9)
     bits = []
     for j in range(nbits):
         if nbits == 16:
@@ -1311,7 +1311,8 @@ def source_dedup_burden(spark, sf_dir):
 # unpack FOUR simhash bits per digest nibble: an md5 hex string is only
 # 32 nibbles, so a 64-bit simhash needs more than one bit per nibble —
 # reading substr positions 33..64 of a 32-char digest would silently
-# yield constant bits (caught by the brute-force ground-truth test).
+# yield constant bits (caught by the brute-force ground-truth test;
+# `md5_hex_int` now refuses such a range).
 _NIBBLE_BIT = {
     3: "'8','9','a','b','c','d','e','f'",
     2: "'4','5','6','7','c','d','e','f'",
@@ -1346,15 +1347,15 @@ def _hamming_sql(a: str, b: str, nbits: int = 64) -> str:
 
 
 def _hamming_spark(a: str, b: str) -> str:
-    """Spark twin of the 64-bit `_hamming_sql` (optimization r13, the
-    conv() idiom): each 64-char '0'/'1' signature parses as two 32-bit
-    integer lanes; positional inequality count = popcount of the XOR per
-    lane — bit-identical to the 64 substr CASE terms, evaluated as 4
-    conv parses + 2 xor + 2 bit_count instead of 128 substr calls per
-    candidate. The oracle keeps the portable unrolled text."""
+    """Spark twin of the 64-bit `_hamming_sql` (optimization r13): each
+    64-char '0'/'1' signature parses as two 32-bit integer lanes
+    (`digits_int`, base 2); positional inequality count = popcount of
+    the XOR per lane — bit-identical to the 64 substr CASE terms,
+    evaluated as 4 parses + 2 xor + 2 bit_count instead of 128 substr
+    calls per candidate. The oracle keeps the portable unrolled text."""
 
     def lane(s: str, lo: int) -> str:
-        return f"CAST(conv(substr({s}, {lo}, 32), 2, 10) AS BIGINT)"
+        return digits_int(s, lo, 32, base=2)
 
     return (
         f"(bit_count({lane(a, 1)} ^ {lane(b, 1)})"

@@ -40,27 +40,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.scalars import md5_hex_int, md5_hex_int_sql
 from .helpers import T, spread
 from .registry import query
 
 _N_BUCKETS = 1024
 
-# md5-hex → integer bucket, identical text in both engines modulo the
-# STRING/VARCHAR cast spelling (handled at use sites).
-_BUCKET = (
-    "((instr('0123456789abcdef', substr(md5(concat(w1, ' ', w2)), 1, 1)) - 1) * 256"
-    " + (instr('0123456789abcdef', substr(md5(concat(w1, ' ', w2)), 2, 1)) - 1) * 16"
-    " + (instr('0123456789abcdef', substr(md5(concat(w1, ' ', w2)), 3, 1)) - 1))"
-    f" % {_N_BUCKETS}"
-)
-
-# Spark twin: base-16 parse of the same first 3 md5 hex digits via one
-# conv() (bit-equal — the sketches._HEX8_SPARK idiom); oracle keeps the
-# portable instr text above.
-_BUCKET_SPARK = (
-    "(CAST(conv(substr(md5(concat(w1, ' ', w2)), 1, 3), 16, 10) AS BIGINT)"
-    f" % {_N_BUCKETS})"
-)
+# word bigram -> hashed feature bucket: its first 3 md5 hex digits
+_BIGRAM = "concat(w1, ' ', w2)"
+_BUCKET = f"({md5_hex_int_sql(_BIGRAM, 3)} % {_N_BUCKETS})"
+_BUCKET_SPARK = f"({md5_hex_int(_BIGRAM, 3)} % {_N_BUCKETS})"
 
 
 @query(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import md5_hex_int, md5_hex_int_sql
 from .helpers import T
 from .registry import query
 
@@ -152,10 +153,10 @@ def order_value_deciles(spark, sf_dir):
 
 @query(
     "order_value_deciles_binned",
-    oracle="""
+    oracle=f"""
 WITH samp AS (
   SELECT o_totalprice, o_orderkey FROM (
-    SELECT o_totalprice, o_orderkey, ((CAST(instr('0123456789abcdef', substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1)) - 1 AS BIGINT) * 268435456 + CAST(instr('0123456789abcdef', substr(md5(CAST(o_orderkey AS VARCHAR)), 2, 1)) - 1 AS BIGINT) * 16777216 + CAST(instr('0123456789abcdef', substr(md5(CAST(o_orderkey AS VARCHAR)), 3, 1)) - 1 AS BIGINT) * 1048576 + CAST(instr('0123456789abcdef', substr(md5(CAST(o_orderkey AS VARCHAR)), 4, 1)) - 1 AS BIGINT) * 65536 + CAST(instr('0123456789abcdef', substr(md5(CAST(o_orderkey AS VARCHAR)), 5, 1)) - 1 AS BIGINT) * 4096 + CAST(instr('0123456789abcdef', substr(md5(CAST(o_orderkey AS VARCHAR)), 6, 1)) - 1 AS BIGINT) * 256 + CAST(instr('0123456789abcdef', substr(md5(CAST(o_orderkey AS VARCHAR)), 7, 1)) - 1 AS BIGINT) * 16 + CAST(instr('0123456789abcdef', substr(md5(CAST(o_orderkey AS VARCHAR)), 8, 1)) - 1 AS BIGINT) * 1)) AS h FROM orders
+    SELECT o_totalprice, o_orderkey, {md5_hex_int_sql("CAST(o_orderkey AS STRING)")} AS h FROM orders
   ) WHERE h % 8 = 0
 ),
 r AS (
@@ -204,7 +205,6 @@ def order_value_deciles_binned(spark, sf_dir):
     binning bit-for-bit."""
     from ..checkpoints import ckpt
     from ..operators.suffix import _adaptive_np, _dense_rank
-    from .sketches import _HEX8_SPARK
 
     od = T(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")
     # materialize the sample ONCE (data-sized: n/8 rows -> durable cut):
@@ -214,7 +214,7 @@ def order_value_deciles_binned(spark, sf_dir):
         od.select(
             "o_totalprice",
             "o_orderkey",
-            F.expr(_HEX8_SPARK.format(v="o_orderkey")).alias("h"),
+            F.expr(md5_hex_int("CAST(o_orderkey AS STRING)")).alias("h"),
         )
         .filter(F.expr("h % 8 = 0"))
         .drop("h")
@@ -462,7 +462,7 @@ _PP_B = 32  # target range partitions
 WITH samp AS (
   SELECT DISTINCT l_orderkey, l_linenumber FROM (
     SELECT l_orderkey, l_linenumber,
-           {{hex8}} AS h
+           {md5_hex_int_sql("concat(l_orderkey, '|', l_linenumber)")} AS h
     FROM lineitem
   ) WHERE h % 8 = 0
 ),
@@ -494,14 +494,7 @@ SELECT bucket, n_rows, lo, hi,
        CAST((1000000 * n_rows * {_PP_B}) // total AS BIGINT) AS load_ppm
 FROM agg CROSS JOIN tot
 ORDER BY bucket
-""".format(
-        hex8="("
-        + " + ".join(
-            f"CAST(instr('0123456789abcdef', substr(md5(CAST(concat(l_orderkey, '|', l_linenumber) AS VARCHAR)), {i + 1}, 1)) - 1 AS BIGINT) * {16 ** (7 - i)}"
-            for i in range(8)
-        )
-        + ")"
-    ),
+""",
     tags=("sampling", "partitioning", "planning", "scale-tier"),
 )
 def partition_plan_histogram(spark, sf_dir):

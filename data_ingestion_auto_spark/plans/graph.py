@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.scalars import md5_hex_int, md5_hex_int_sql
 from .dedup import _SQL_CC_LABELS, _SQL_SHINGLES, corpus_lsh_pairs
 from .helpers import T
 from .registry import query
@@ -136,9 +137,7 @@ assign AS (
   SELECT doc_id,
          CASE WHEN h < 13 THEN 'train' WHEN h < 14 THEN 'val' ELSE 'test' END AS split
   FROM (
-    SELECT doc_id,
-           CAST(instr('0123456789abcdef',
-                      substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS BIGINT) AS h
+    SELECT doc_id, {md5_hex_int_sql("CAST(doc_id AS STRING)", 1, start=2)} AS h
     FROM documents
   )
 ),
@@ -180,13 +179,7 @@ def split_leakage_audit(spark, sf_dir):
     # memoized canonical pair list (plans/dedup.py::corpus_lsh_pairs):
     # already a materialized parquet, so no ckpt needed
     pairs = corpus_lsh_pairs(spark, sf_dir)
-    h = (
-        F.instr(
-            F.lit("0123456789abcdef"),
-            F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1),
-        )
-        - 1
-    ).cast("bigint")
+    h = F.expr(md5_hex_int("CAST(doc_id AS STRING)", 1, start=2))
     assign = docs.select(
         "doc_id",
         F.when(h < 13, "train").when(h < 14, "val").otherwise("test").alias("split"),
@@ -234,10 +227,8 @@ grouped AS (
 ),
 hashed AS (
   SELECT doc_id, group_id,
-         CAST(instr('0123456789abcdef',
-                    substr(md5(CAST(group_id AS VARCHAR)), 2, 1)) - 1 AS BIGINT) AS h,
-         CAST(instr('0123456789abcdef',
-                    substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS BIGINT) AS hn
+         {md5_hex_int_sql("CAST(group_id AS STRING)", 1, start=2)} AS h,
+         {md5_hex_int_sql("CAST(doc_id AS STRING)", 1, start=2)} AS hn
   FROM grouped
 )
 SELECT doc_id, group_id,
@@ -279,18 +270,12 @@ def group_aware_split_assign(spark, sf_dir):
     )
 
     def nib(col):
-        return (
-            F.instr(
-                F.lit("0123456789abcdef"),
-                F.substring(F.md5(col.cast("string")), 2, 1),
-            )
-            - 1
-        ).cast("bigint")
+        return F.expr(md5_hex_int(f"CAST({col} AS STRING)", 1, start=2))
 
     def rule(h):
         return F.when(h < 13, "train").when(h < 14, "val").otherwise("test")
 
-    g, n = rule(nib(F.col("group_id"))), rule(nib(F.col("doc_id")))
+    g, n = rule(nib("group_id")), rule(nib("doc_id"))
     return grouped.select(
         "doc_id",
         "group_id",
@@ -496,26 +481,11 @@ def neardup_kcore(spark, sf_dir):
 
 _K_FOLDS = 5
 
-# portable first-8-hex md5 -> BIGINT decode (the cdc/sketches idiom)
-_HEX8 = (
-    "("
-    + " + ".join(
-        f"CAST(instr('0123456789abcdef', substr(md5({{v}}), {i + 1}, 1)) - 1 "
-        f"AS BIGINT) * {16 ** (7 - i)}"
-        for i in range(8)
-    )
-    + ")"
-)
 
-
-def _fold_sql(src: str) -> str:
-    return f"({_HEX8.format(v=src)} % {_K_FOLDS})"
-
-
-def _fold_sql_spark(src: str) -> str:
-    """Spark twin of _fold_sql: same value via one conv() (the
-    plans/sketches.py _HEX8_SPARK idiom) instead of eight instr terms."""
-    return f"((CAST(conv(substr(md5({src}), 1, 8), 16, 10) AS BIGINT)) % {_K_FOLDS})"
+def _fold_sql(src: str, decode=md5_hex_int_sql) -> str:
+    """Fold of key ``src``: its first 8 md5 hex digits mod K. ``decode``
+    picks the spelling: the oracle's by default, `md5_hex_int` in Spark."""
+    return f"({decode(src)} % {_K_FOLDS})"
 
 
 @query(
@@ -528,9 +498,9 @@ grouped AS (
   FROM documents d LEFT JOIN labels l ON d.doc_id = l.node
 )
 SELECT doc_id, group_id,
-       CAST({_fold_sql("CAST(group_id AS VARCHAR)")} AS BIGINT) AS fold,
-       CAST({_fold_sql("CAST(doc_id AS VARCHAR)")} AS BIGINT) AS naive_fold,
-       ({_fold_sql("CAST(group_id AS VARCHAR)")} <> {_fold_sql("CAST(doc_id AS VARCHAR)")}) AS moved
+       CAST({_fold_sql("CAST(group_id AS STRING)")} AS BIGINT) AS fold,
+       CAST({_fold_sql("CAST(doc_id AS STRING)")} AS BIGINT) AS naive_fold,
+       ({_fold_sql("CAST(group_id AS STRING)")} <> {_fold_sql("CAST(doc_id AS STRING)")}) AS moved
 FROM grouped
 ORDER BY doc_id
 """,
@@ -560,8 +530,8 @@ def group_aware_kfold(spark, sf_dir):
         .join(comp, "doc_id", "left")
         .withColumn("group_id", F.coalesce("component", "doc_id"))
     )
-    fold = F.expr(f"CAST({_fold_sql_spark('CAST(group_id AS STRING)')} AS BIGINT)")
-    naive = F.expr(f"CAST({_fold_sql_spark('CAST(doc_id AS STRING)')} AS BIGINT)")
+    fold = F.expr(f"CAST({_fold_sql('CAST(group_id AS STRING)', md5_hex_int)} AS BIGINT)")
+    naive = F.expr(f"CAST({_fold_sql('CAST(doc_id AS STRING)', md5_hex_int)} AS BIGINT)")
     return grouped.select(
         "doc_id",
         "group_id",

@@ -40,12 +40,13 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as D
 from ..checkpoints import ckpt
+from ..functions.scalars import md5_quarter
 from .dedup import _SQL_SHINGLES
 from .helpers import T
 from .registry import query
 
 _MAX_BUCKET = 1000
-_NEW = "('0','1','2','3')"  # md5(doc_id) first-nibble batch membership
+_NEW = md5_quarter("CAST(doc_id AS STRING)", oracle=True)  # batch membership
 
 
 @query(
@@ -64,7 +65,7 @@ banded AS (
 ),
 capped AS (
   SELECT doc_id, band, band_hash,
-         substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN {_NEW} AS is_new
+         {_NEW} AS is_new
   FROM (
     SELECT doc_id, band, band_hash,
            row_number() OVER (PARTITION BY band, band_hash ORDER BY doc_id) AS rn
@@ -83,7 +84,7 @@ SELECT d.doc_id,
        coalesce(c.dup_of, d.doc_id) AS dup_of,
        (c.dup_of IS NOT NULL) AS is_dup
 FROM (SELECT doc_id FROM documents
-      WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN {_NEW}) d
+      WHERE {_NEW}) d
 LEFT JOIN cand c ON d.doc_id = c.doc_id
 ORDER BY d.doc_id
 """,
@@ -103,9 +104,7 @@ def incremental_lsh_dedup_assign(spark, sf_dir):
     from .dedup import corpus_minhash_sig
 
     banded = D.band_signature(corpus_minhash_sig(spark, sf_dir))
-    is_new = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1).isin(
-        "0", "1", "2", "3"
-    )
+    is_new = F.expr(md5_quarter("CAST(doc_id AS STRING)"))
     w = W.partitionBy("band", "band_hash").orderBy("doc_id")
     # The capped banded index — in production a stored bucketed table;
     # checkpointed so the signature DAG runs once for both join sides.
@@ -147,7 +146,7 @@ _NOV_NGRAM = 3
     oracle=f"""
 WITH w AS (
   SELECT doc_id, string_split(text, ' ') AS w,
-         substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN {_NEW} AS is_new
+         {_NEW} AS is_new
   FROM documents
 ),
 g AS (
@@ -182,9 +181,7 @@ def batch_ngram_novelty(spark, sf_dir):
     novelty_ratio = one IEEE divide of two exact BIGINTs — bit-identical
     in both engines."""
     docs = T(spark, sf_dir, "documents")
-    is_new = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1).isin(
-        "0", "1", "2", "3"
-    )
+    is_new = F.expr(md5_quarter("CAST(doc_id AS STRING)"))
     ws = docs.select(
         "doc_id", F.split("text", " ").alias("w"), is_new.alias("is_new")
     )

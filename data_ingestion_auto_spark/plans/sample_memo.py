@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.scalars import md5_hex_int
 from .dedup import _corpus_memo
 from .helpers import T
 
@@ -59,8 +60,6 @@ def lineitem_hash_sample(spark, sf_dir):
     shard order): (l_orderkey, l_linenumber, l_returnflag,
     l_extendedprice, h). The `partitions` read guard applies — the
     sample is corpus-sized/8 and feeds window shuffles downstream."""
-    from .sketches import _HEX8_SPARK
-
     def build():
         from ..sources.tables import spread
 
@@ -70,8 +69,8 @@ def lineitem_hash_sample(spark, sf_dir):
         # `partitions=` repartition only spreads the already-computed
         # rows.
         li = spread(T(spark, sf_dir, "lineitem"))
-        hexpr = _HEX8_SPARK.format(
-            v="concat(CAST(l_orderkey AS STRING), '|', CAST(l_linenumber AS STRING))"
+        hexpr = md5_hex_int(
+            "concat(CAST(l_orderkey AS STRING), '|', CAST(l_linenumber AS STRING))"
         )
         return li.select(
             "l_orderkey",

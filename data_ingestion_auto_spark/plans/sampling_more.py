@@ -33,9 +33,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoints import ckpt
+from ..functions.scalars import md5_hex_int, md5_hex_int_sql
 from .helpers import T
 from .registry import query
-from .sketches import _HEX8, _HEX8_SPARK
 
 _K = 32
 
@@ -50,9 +50,8 @@ _K = 32
 # probability ~1e-7 even for megabyte documents (vs deterministic
 # overflow at 2 KB before). Values are bit-identical to the naive form
 # wherever that form didn't overflow (multiplication commutes).
-_H = f"({_HEX8.format(v='doc_id')} + 1)"
-# Spark twin of _H (conv() decode, bit-equal — sketches._HEX8_SPARK idiom)
-_H_SPARK = f"({_HEX8_SPARK.format(v='doc_id')} + 1)"
+_H = f"({md5_hex_int_sql('CAST(doc_id AS STRING)')} + 1)"
+_H_SPARK = f"({md5_hex_int('CAST(doc_id AS STRING)')} + 1)"
 _Q = (
     f"(((n_chars * 4294967296) div {_H_SPARK}) * 1000000"
     f" + (((n_chars * 4294967296) % {_H_SPARK}) * 1000000) div {_H_SPARK})"
@@ -68,7 +67,7 @@ _Q_SQL = (
     oracle=f"""
 WITH pri AS (
   SELECT doc_id, n_chars,
-         CAST({_Q_SQL.replace("AS STRING", "AS VARCHAR")} AS BIGINT) AS priority_micro
+         CAST({_Q_SQL} AS BIGINT) AS priority_micro
   FROM documents
 ),
 ranked AS (

@@ -21,33 +21,12 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.scalars import md5_hex_int, md5_hex_int_sql
 from .helpers import T, spread
 from ..checkpoints import ckpt
 from .registry import query
 
 _K = 64
-
-# first 8 hex digits of md5 → BIGINT in [0, 2^32), portable to both
-# engines via instr-based nibble decoding (no conv/from_hex dialect
-# differences).
-_HEX8 = "".join(
-    [
-        "(",
-        " + ".join(
-            f"CAST(instr('0123456789abcdef', substr(md5(CAST({{v}} AS STRING)), {i + 1}, 1)) - 1 "
-            f"AS BIGINT) * {16 ** (7 - i)}"
-            for i in range(8)
-        ),
-        ")",
-    ]
-)
-
-# Spark-side twin of _HEX8 — the SAME value (base-16 parse of the first
-# 8 md5 hex digits, MSB first) via one conv() instead of eight
-# instr/substr/multiply terms. The oracle keeps the portable instr text;
-# Spark plans use this to shrink the expression tree ~8x on hash-bound
-# paths (verified bit-equal, ~30% faster on the classifier feature scan).
-_HEX8_SPARK = "CAST(conv(substr(md5(CAST({v} AS STRING)), 1, 8), 16, 10) AS BIGINT)"
 
 
 @query(
@@ -55,7 +34,7 @@ _HEX8_SPARK = "CAST(conv(substr(md5(CAST({v} AS STRING)), 1, 8), 16, 10) AS BIGI
     oracle=f"""
 WITH hashed AS (
   SELECT DISTINCT l_returnflag,
-         ({_HEX8.replace("AS STRING", "AS VARCHAR").format(v="l_partkey")} + 1) AS h
+         ({md5_hex_int_sql("CAST(l_partkey AS STRING)")} + 1) AS h
   FROM lineitem
 ),
 ranked AS (
@@ -92,7 +71,7 @@ def kmv_distinct_estimate(spark, sf_dir):
     # per key) would otherwise divide by zero, with engine-divergent
     # Inf/error behavior.
     hashed = li.select(
-        "l_returnflag", (F.expr(_HEX8_SPARK.format(v="l_partkey")) + 1).alias("h")
+        "l_returnflag", (F.expr(md5_hex_int("CAST(l_partkey AS STRING)")) + 1).alias("h")
     ).distinct()
     w = W.partitionBy("l_returnflag").orderBy("h")
     wc = W.partitionBy("l_returnflag")
@@ -118,11 +97,8 @@ def kmv_distinct_estimate(spark, sf_dir):
 _CMS_W = 32  # sketch width (columns per hash row)
 _CMS_D = 4  # sketch depth (independent hash rows)
 
-_CMS_HASH = "(" + _HEX8.format(v="concat(CAST(r AS STRING), '|', token)") + f") % {_CMS_W}"
-# Spark-side twin (the oracle embeds _CMS_HASH's portable instr text)
-_CMS_HASH_SPARK = (
-    "(" + _HEX8_SPARK.format(v="concat(CAST(r AS STRING), '|', token)") + f") % {_CMS_W}"
-)
+# row r hashes a token to column md5_hex_int(_CMS_KEY) % _CMS_W
+_CMS_KEY = "concat(CAST(r AS STRING), '|', token)"
 
 
 @query(
@@ -135,7 +111,7 @@ WITH tok AS (
 ),
 hashes AS (
   SELECT token, exact_cnt, g.r AS r,
-         {_CMS_HASH.replace("AS STRING", "AS VARCHAR")} AS col
+         ({md5_hex_int_sql(_CMS_KEY)} % {_CMS_W}) AS col
   FROM tok, LATERAL (SELECT unnest(generate_series(0, {_CMS_D - 1})) AS r) g
 ),
 cells AS (SELECT r, col, sum(exact_cnt) AS counter FROM hashes GROUP BY 1, 2),
@@ -185,7 +161,7 @@ def countmin_heavy_hitters(spark, sf_dir):
     )
     hashes = tok.select(
         "token", "exact_cnt", F.explode(F.sequence(F.lit(0), F.lit(_CMS_D - 1))).alias("r")
-    ).withColumn("col", F.expr(_CMS_HASH_SPARK))
+    ).withColumn("col", F.expr(f"{md5_hex_int(_CMS_KEY)} % {_CMS_W}"))
     cells = hashes.groupBy("r", "col").agg(F.sum("exact_cnt").alias("counter"))
     est = (
         hashes.join(cells, ["r", "col"])
@@ -204,9 +180,6 @@ def countmin_heavy_hitters(spark, sf_dir):
     )
 
 
-_KMV_H = "(" + _HEX8 + " + 1)"
-
-
 @query(
     "kmv_set_operations",
     oracle=f"""
@@ -218,8 +191,8 @@ b AS (
   SELECT DISTINCT o_custkey AS k FROM orders
   WHERE year(o_orderdate) = 1996
 ),
-ha AS (SELECT k, ({_HEX8.replace("AS STRING", "AS VARCHAR").format(v="k")} + 1) AS h FROM a),
-hb AS (SELECT k, ({_HEX8.replace("AS STRING", "AS VARCHAR").format(v="k")} + 1) AS h FROM b),
+ha AS (SELECT k, ({md5_hex_int_sql("CAST(k AS STRING)")} + 1) AS h FROM a),
+hb AS (SELECT k, ({md5_hex_int_sql("CAST(k AS STRING)")} + 1) AS h FROM b),
 sa AS (SELECT h FROM ha ORDER BY h LIMIT {_K}),
 sb AS (SELECT h FROM hb ORDER BY h LIMIT {_K}),
 su AS (
@@ -279,7 +252,7 @@ def kmv_set_operations(spark, sf_dir):
             od.filter(F.year("o_orderdate") == year)
             .select(F.col("o_custkey").alias("k"))
             .distinct()
-            .select("k", (F.expr(_HEX8_SPARK.format(v="k")) + 1).alias("h"))
+            .select("k", (F.expr(md5_hex_int("CAST(k AS STRING)")) + 1).alias("h"))
             .localCheckpoint()
         )
 
@@ -330,7 +303,7 @@ def kmv_set_operations(spark, sf_dir):
     oracle=f"""
 WITH rowkey AS (
   SELECT l_returnflag, l_extendedprice,
-         ({_HEX8.replace("AS STRING", "AS VARCHAR").format(v="CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)")}) AS h
+         {md5_hex_int_sql("CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)")} AS h
   FROM lineitem
 ),
 samp AS (

@@ -42,40 +42,24 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.scalars import md5_hex_int, md5_hex_int_sql
 from .helpers import T
 from .registry import query
 from .timeseries import _DELAY_SEC, _DELAY_SEC_SPARK
 
 
-def _md5_int(prefix: str, ndigits: int) -> str:
-    """SQL text (valid in BOTH engines) for an integer built from the
-    first ``ndigits`` md5 hex digits of ``'<prefix>' || event_id`` — the
-    same deterministic-delay trick as ``timeseries._DELAY_SEC``, salted."""
-    terms = [
-        f"(CAST(instr('0123456789abcdef', substr(md5(concat('{prefix}', "
-        f"CAST(event_id AS STRING))), {i + 1}, 1)) - 1 AS BIGINT))"
-        f" * {16 ** (ndigits - 1 - i)}"
-        for i in range(ndigits)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _md5_int_spark(prefix: str, ndigits: int) -> str:
-    """Spark twin of _md5_int: the same value (base-16 parse of the
-    first ``ndigits`` md5 hex digits) via one conv() instead of one
-    instr/substr/multiply term per digit (the sketches._HEX8_SPARK
-    idiom). Oracles keep the portable _md5_int text."""
-    return (
-        f"CAST(conv(substr(md5(concat('{prefix}', CAST(event_id AS STRING))), "
-        f"1, {ndigits}), 16, 10) AS BIGINT)"
-    )
+def _salted(prefix: str) -> str:
+    """The event id salted with ``prefix``: md5 digits of salted keys are
+    the same deterministic-delay trick as ``timeseries._DELAY_SEC``,
+    decorrelated per use."""
+    return f"concat('{prefix}', CAST(event_id AS STRING))"
 
 
 # Replay delay: 1 h .. ~49 h after the event — five hex digits (0..1048575)
 # mod 172800 s, plus the 3600 s floor, so the replay always lands in a
 # LATER micro-batch than the event time itself.
-_REPLAY_DELAY_SEC = f"(3600 + ({_md5_int('r:', 5)} % 172800))"
-_REPLAY_DELAY_SEC_SPARK = f"(3600 + ({_md5_int_spark('r:', 5)} % 172800))"
+_REPLAY_DELAY_SEC = f"(3600 + ({md5_hex_int_sql(_salted('r:'), 5)} % 172800))"
+_REPLAY_DELAY_SEC_SPARK = f"(3600 + ({md5_hex_int(_salted('r:'), 5)} % 172800))"
 
 # The dedup KEY is an md5-scrambled image of the event id, not the id
 # itself: raw event ids are assigned in near-event-time order, so a fresh
@@ -84,8 +68,8 @@ _REPLAY_DELAY_SEC_SPARK = f"(3600 + ({_md5_int_spark('r:', 5)} % 172800))"
 # value from arrival order — measured at sf0.01, 6045 of 20000 arrivals
 # are below-floor fresh firsts, so the BOUNDED-state semantics genuinely
 # bind at the gate. Both engines compute the identical scramble.
-_SCRAMBLED_KEY = _md5_int("k:", 8)
-_SCRAMBLED_KEY_SPARK = _md5_int_spark("k:", 8)
+_SCRAMBLED_KEY = md5_hex_int_sql(_salted("k:"))
+_SCRAMBLED_KEY_SPARK = md5_hex_int(_salted("k:"))
 
 _RETENTION = 8  # small enough that eviction genuinely binds on ~70-id keys
 
@@ -95,15 +79,15 @@ _RETENTION = 8  # small enough that eviction genuinely binds on ~70-id keys
     oracle=f"""
 WITH arr AS (
   SELECT user_id,
-         CAST({_SCRAMBLED_KEY.replace("AS STRING", "AS VARCHAR")} AS BIGINT) AS key,
+         CAST({_SCRAMBLED_KEY} AS BIGINT) AS key,
          date_trunc('hour', ts + to_seconds(CAST(
-           {_DELAY_SEC.replace("AS STRING", "AS VARCHAR")} AS BIGINT))) AS batch_h
+           {_DELAY_SEC} AS BIGINT))) AS batch_h
   FROM events
   UNION ALL
   SELECT user_id,
-         CAST({_SCRAMBLED_KEY.replace("AS STRING", "AS VARCHAR")} AS BIGINT) AS key,
+         CAST({_SCRAMBLED_KEY} AS BIGINT) AS key,
          date_trunc('hour', ts + to_seconds(CAST(
-           {_REPLAY_DELAY_SEC.replace("AS STRING", "AS VARCHAR")} AS BIGINT))) AS batch_h
+           {_REPLAY_DELAY_SEC} AS BIGINT))) AS batch_h
   FROM events
 ),
 occ AS (

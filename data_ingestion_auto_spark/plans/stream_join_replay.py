@@ -46,15 +46,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.scalars import md5_hex_int, md5_hex_int_sql
 from .helpers import T
 from .registry import query
-from .stateful_replay import _md5_int
+from .stateful_replay import _salted
 
 # Arrival delays: 3 md5 hex digits (0..4095) mod 3600 — always strictly
 # inside the 2 h watermark, so no match is ever lost (see module
 # docstring). Distinct salts decorrelate the two streams' arrival order.
-_DELAY_L = f"({_md5_int('jl:', 3)} % 3600)"
-_DELAY_R = f"({_md5_int('jr:', 3)} % 3600)"
+_DELAY_L = f"({md5_hex_int_sql(_salted('jl:'), 3)} % 3600)"
+_DELAY_R = f"({md5_hex_int_sql(_salted('jr:'), 3)} % 3600)"
+_DELAY_L_SPARK = f"({md5_hex_int(_salted('jl:'), 3)} % 3600)"
+_DELAY_R_SPARK = f"({md5_hex_int(_salted('jr:'), 3)} % 3600)"
 
 
 @query(
@@ -63,13 +66,13 @@ _DELAY_R = f"({_md5_int('jr:', 3)} % 3600)"
 WITH l AS (
   SELECT user_id, event_id AS left_id, ts AS left_ts,
          date_trunc('hour', ts + to_seconds(CAST(
-           {_DELAY_L.replace("AS STRING", "AS VARCHAR")} AS BIGINT))) AS lbatch
+           {_DELAY_L} AS BIGINT))) AS lbatch
   FROM events WHERE event_type = 'click'
 ),
 r AS (
   SELECT user_id, event_id AS right_id, ts AS right_ts,
          date_trunc('hour', ts + to_seconds(CAST(
-           {_DELAY_R.replace("AS STRING", "AS VARCHAR")} AS BIGINT))) AS rbatch
+           {_DELAY_R} AS BIGINT))) AS rbatch
   FROM events WHERE event_type = 'purchase'
 )
 SELECT l.user_id, left_id, right_id,
@@ -102,7 +105,7 @@ def stream_stream_join_replay(spark, sf_dir):
             F.col("event_id").alias("left_id"),
             F.col("ts").alias("left_ts"),
             F.date_trunc(
-                "hour", F.expr(f"timestampadd(SECOND, {_DELAY_L}, ts)")
+                "hour", F.expr(f"timestampadd(SECOND, {_DELAY_L_SPARK}, ts)")
             ).alias("lbatch"),
         )
         .withColumn(
@@ -120,7 +123,7 @@ def stream_stream_join_replay(spark, sf_dir):
         F.col("event_id").alias("right_id"),
         F.col("ts").alias("right_ts"),
         F.date_trunc(
-            "hour", F.expr(f"timestampadd(SECOND, {_DELAY_R}, ts)")
+            "hour", F.expr(f"timestampadd(SECOND, {_DELAY_R_SPARK}, ts)")
         ).alias("rbatch"),
         F.date_trunc("hour", "right_ts").alias("bucket"),
     )

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.scalars import md5_quarter
 from .helpers import T
 from .registry import query
 
@@ -203,10 +204,9 @@ def bpe_token_stats(spark, sf_dir):
 
 @query(
     "stratified_sample_documents",
-    oracle="""
+    oracle=f"""
 WITH marked AS (
-  SELECT lang,
-         substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0', '1', '2', '3') AS sampled
+  SELECT lang, {md5_quarter("CAST(doc_id AS STRING)", oracle=True)} AS sampled
   FROM documents
 )
 SELECT lang,
@@ -228,9 +228,7 @@ def stratified_sample_documents(spark, sf_dir):
     (lang) realized rates are reported; at scale this is a map-only
     filter with a small aggregate."""
     docs = T(spark, sf_dir, "documents")
-    sampled = F.expr(
-        "substr(md5(CAST(doc_id AS STRING)), 1, 1) IN ('0', '1', '2', '3')"
-    )
+    sampled = F.expr(md5_quarter("CAST(doc_id AS STRING)"))
     return (
         docs.select("lang", sampled.alias("sampled"))
         .groupBy("lang")

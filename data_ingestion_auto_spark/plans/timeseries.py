@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import md5_hex_int, md5_hex_int_sql
 from .helpers import T, dec_sum, sql_dec_sum
 from .registry import query
 
@@ -81,20 +82,9 @@ def densify_daily_gapfill(spark, sf_dir):
 
 
 # Deterministic per-event network delay, 0..3599 s, from the first three
-# md5 hex digits of the event id — the same instr/substr/md5 text runs in
-# both engines, so arrival order is engine-independent.
-_DELAY_SEC = (
-    "(((instr('0123456789abcdef', substr(md5(CAST(event_id AS STRING)), 1, 1)) - 1) * 256"
-    " + (instr('0123456789abcdef', substr(md5(CAST(event_id AS STRING)), 2, 1)) - 1) * 16"
-    " + (instr('0123456789abcdef', substr(md5(CAST(event_id AS STRING)), 3, 1)) - 1)) % 3600)"
-)
-
-# Spark twin: same value (base-16 parse of the first 3 md5 hex digits)
-# via one conv() — the sketches._HEX8_SPARK idiom; oracles keep the
-# portable instr text above.
-_DELAY_SEC_SPARK = (
-    "(CAST(conv(substr(md5(CAST(event_id AS STRING)), 1, 3), 16, 10) AS BIGINT) % 3600)"
-)
+# md5 hex digits of the event id, so arrival order is engine-independent.
+_DELAY_SEC = f"({md5_hex_int_sql('CAST(event_id AS STRING)', 3)} % 3600)"
+_DELAY_SEC_SPARK = f"({md5_hex_int('CAST(event_id AS STRING)', 3)} % 3600)"
 
 
 @query(
@@ -102,7 +92,7 @@ _DELAY_SEC_SPARK = (
     oracle=f"""
 WITH arr AS (
   SELECT event_id, ts,
-         ts + to_seconds(CAST({_DELAY_SEC.replace("AS STRING", "AS VARCHAR")} AS BIGINT))
+         ts + to_seconds(CAST({_DELAY_SEC} AS BIGINT))
            AS arrival_ts
   FROM events
 ),

@@ -3,10 +3,9 @@
 Local testing runs ``local[N]`` (one JVM); the configs below are the ones
 that matter at cluster scale too: AQE for runtime re-planning (join strategy
 switch, shuffle-partition coalescing, skew-join splitting), Arrow for any
-pandas-UDF exchange, UTC session timezone (oracle comparability), and
-dynamic partition overwrite for idempotent per-partition sinks (the Spark
-analogue of the reference's delete-then-insert upsert,
-reference raster_vector.py:146-164).
+pandas-UDF exchange, and UTC session timezone (oracle comparability).
+Dynamic partition overwrite is not a session setting: the one partitioned
+overwrite, ``sinks.overwrite_partitions``, passes it as a write option.
 """
 
 from __future__ import annotations
@@ -61,7 +60,6 @@ def get_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.parquet.filterPushdown", "true")
         # Stragglers: re-launch slow tasks (this host shows intermittent
         # multi-second thread stalls; on a real cluster this guards against
@@ -105,7 +103,6 @@ def get_session(
         # events.parquet stores TIMESTAMP(NANOS); Spark's reader has no
         # nanos timestamp type — read as long, normalized in sources.tables.
         "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.sources.partitionOverwriteMode": "dynamic",
     }.items():
         spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("WARN")

@@ -137,15 +137,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             ),
         )
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (idempotent).
-
-    Lets operators be written in either DataFrame or SQL form against the
-    same names DuckDB's oracle uses.
-    """
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -101,3 +101,63 @@ def test_hmac_sha256_matches_stdlib_and_rfc4231(spark):
         )
         expect = pyhmac.new(key.encode(), msg.encode(), hashlib.sha256).hexdigest()
         assert got == expect, (key, msg)
+
+
+_MD5_INPUTS = ["spark-graft", "", "naïve ☃ 日本語", None]
+
+
+@pytest.mark.parametrize("start, ndigits", [(1, 1), (2, 1), (1, 3), (1, 5), (1, 8), (9, 8)])
+def test_md5_hex_int_pair_matches_python(spark, start, ndigits):
+    """The Spark decode (`md5_hex_int`, one conv) and the oracle decode
+    (`md5_hex_int_sql`, a nibble sum run in DuckDB) both equal Python's
+    int() of the same md5 hex digits; NULL in gives NULL out. The house
+    25 % split follows the first digit in both engines."""
+    import hashlib
+
+    import duckdb
+
+    from data_ingestion_auto_spark.functions.scalars import (
+        md5_hex_int,
+        md5_hex_int_sql,
+        md5_quarter,
+    )
+
+    def want(s):
+        if s is None:
+            return None, None
+        hx = hashlib.md5(s.encode()).hexdigest()
+        return int(hx[start - 1 : start - 1 + ndigits], 16), int(hx[0], 16) < 4
+
+    expect = {s: want(s) for s in _MD5_INPUTS}
+    got_spark = {
+        r.s: (r.h, r.q)
+        for r in spark.createDataFrame([(s,) for s in _MD5_INPUTS], "s string")
+        .select(
+            "s",
+            F.expr(md5_hex_int("s", ndigits, start)).alias("h"),
+            F.expr(md5_quarter("s")).alias("q"),
+        )
+        .collect()
+    }
+    values = ", ".join("(NULL)" if s is None else "('" + s + "')" for s in _MD5_INPUTS)
+    got_duck = dict(
+        (s, (h, q))
+        for s, h, q in duckdb.sql(
+            f"SELECT s, {md5_hex_int_sql('s', ndigits, start)},"
+            f" {md5_quarter('s', oracle=True)} FROM (VALUES {values}) t(s)"
+        ).fetchall()
+    )
+    assert got_spark == expect
+    assert got_duck == expect
+
+
+@pytest.mark.parametrize("start, ndigits", [(1, 16), (1, 0), (25, 9), (32, 2), (0, 4)])
+def test_md5_hex_int_rejects_inexact_ranges(start, ndigits):
+    """More than 15 digits overflow a BIGINT; digits past the 32-digit
+    md5 string read as empty substrings (constant bits). Both spellings
+    refuse to generate either."""
+    from data_ingestion_auto_spark.functions.scalars import md5_hex_int, md5_hex_int_sql
+
+    for decode in (md5_hex_int, md5_hex_int_sql):
+        with pytest.raises(ValueError):
+            decode("s", ndigits, start)

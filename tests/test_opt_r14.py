@@ -124,7 +124,7 @@ def test_update_wide_matches_explode(spark):
     assert got == [(0, (16666, 30000, 70000)), (1, (None, None))]
 
 
-def test_cc_frontier_shapes_identical(spark):
+def test_cc_frontier_shapes_identical(spark, monkeypatch):
     """Frontier-filtered connected components must return the identical
     label table at every (hops, jumps) round shape — semi-naive
     evaluation of the monotone min recursion is exact, not a heuristic.
@@ -140,11 +140,11 @@ def test_cc_frontier_shapes_identical(spark):
     pairs = spark.createDataFrame(edges, "a long, b long")
     ref = None
     for h, j in ((5, 1), (3, 3), (1, 0), (4, 2)):
+        monkeypatch.setattr(D, "_HOPS_PER_ROUND", h)
+        monkeypatch.setattr(D, "_JUMPS_PER_ROUND", j)
         out = sorted(
             (r["node"], r["component"])
-            for r in D.connected_components(
-                pairs, hops_per_round=h, jumps_per_round=j, max_iter=40
-            ).collect()
+            for r in D.connected_components(pairs, max_iter=40).collect()
         )
         if ref is None:
             ref = out

@@ -59,11 +59,11 @@ def test_memoized_frames_match_live_derivation(spark, tmp_path, monkeypatch):
     ]
     sf = _mini_sf(spark, tmp_path, rows)
 
-    from data_ingestion_auto_spark.plans.sketches import _HEX8
+    from data_ingestion_auto_spark.functions.scalars import md5_hex_int_sql
 
     li = spark.read.parquet(f"{sf}/lineitem.parquet")
-    hexpr = _HEX8.format(
-        v="concat(CAST(l_orderkey AS STRING), '|', CAST(l_linenumber AS STRING))"
+    hexpr = md5_hex_int_sql(
+        "concat(CAST(l_orderkey AS STRING), '|', CAST(l_linenumber AS STRING))"
     )
     live_samp = sorted(
         (r.l_orderkey, r.l_linenumber, r.l_returnflag, r.l_extendedprice, r.h)
