@@ -12,10 +12,12 @@ join against arriving batch chunks is Exchange-free on the index side.
 Per-chash doc entries are capped (default 100, rank by doc_id —
 beyond that a chunk is boilerplate, not quotation; the cap bounds both
 storage and probe fan-out per chunk, the `lsh_candidates` argument),
-the cap holds across appends by remaining-capacity admission, and
-append is idempotent on the exact (doc_id, chash) key. Retention and
-compaction go through ``operators/layout.py::rewrite_index``: ghost
-owners would poison ``dup_of`` assignments and hold per-chunk capacity.
+the cap holds across appends by remaining-capacity admission counted
+from the stored rows of the batch's own chunk hashes, and every write
+stores each exact (doc_id, chash) key once, so a re-ingest is a no-op.
+Retention and compaction go through ``operators/layout.py::rewrite_index``:
+ghost owners would poison ``dup_of`` assignments and hold per-chunk
+capacity.
 """
 
 from __future__ import annotations
@@ -95,10 +97,11 @@ def write_chunk_index(
     """Materialize the capped (doc_id, chash, n_tokens) CDC index,
     bucketed on chash. ``mode='append'`` admits only each chunk hash's
     remaining capacity (earlier ingests win; within a batch, smallest
-    doc_id), and drops exact (doc_id, chash) re-ingests before ranking —
-    the ``operators/layout.py::write_capped_index`` contract, shared with
-    ``write_band_index``. The capacity aggregate groups on the bucketed
-    table's own key, so it is Exchange-free on the index side.
+    doc_id), and drops exact (doc_id, chash) re-ingests and repeats
+    before ranking — the ``operators/layout.py::write_capped_index``
+    contract, shared with ``write_band_index``. Only the stored rows of
+    the batch's own chunk hashes take part, read from the bucketed table
+    with no Exchange and no aggregate on the index side.
 
     ``chunks``: pre-chunked (doc_id, chash, n_tokens) rows — the
     streaming loop chunks each micro-batch ONCE and hands the same frame
@@ -109,7 +112,7 @@ def write_chunk_index(
     if chunks is None:
         chunks = cdc_chunk_rows(docs, durable=(mode == "overwrite"))
     write_capped_index(
-        chunks.select("doc_id", "chash", "n_tokens").distinct(),
+        chunks.select("doc_id", "chash", "n_tokens"),
         table,
         keys=["chash"],
         id_col="doc_id",

@@ -522,16 +522,18 @@ def write_band_index(
     not near-duplication). ``mode='append'`` (the daily-ingest call)
     admits only each bucket's remaining capacity and drops already
     stored (id, band, band_hash) rows first, so the cap holds across
-    appends and a re-ingested batch is a no-op (round-9 ADVICE) — the
+    appends and a re-ingested batch is a no-op (round-9 ADVICE); a row
+    repeated within one batch is stored once — the
     ``operators/layout.py::write_capped_index`` contract.
 
     At 100 TB: the index is shingle-band-sized, NOT pair-sized; writing
     it costs one shuffle into ``buckets`` files per partition, and every
     subsequent probe reads only the matching buckets with zero Exchange
-    on this side (pinned by tests/test_incremental_index.py). The
-    append-capacity count is a groupBy on exactly the bucket keys of an
-    already-bucketed table — one map-side-combined, Exchange-free scan
-    of (band, band_hash) pairs per ingest, no rewrite of stored files.
+    on this side (pinned by tests/test_incremental_index.py). An append
+    scans the index once and keeps only the stored rows of the batch's
+    own (band, band_hash) keys (a semi-join against a broadcast of
+    them), with no Exchange and no aggregate on the index side and no
+    rewrite of stored files; only those rows and the batch are sorted.
     Retention and compaction: ``operators/layout.py::rewrite_index``.
     """
     write_capped_index(

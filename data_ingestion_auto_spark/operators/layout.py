@@ -152,47 +152,55 @@ def write_capped_index(
 ) -> None:
     """The one writer behind the capped stored indexes (band, CDC chunk):
     ``rows`` land in ``table`` bucketed on ``keys`` and sorted on
-    ``keys + [id_col]``, at most ``cap`` rows per key, ranked by
-    ``id_col``.
+    ``keys + [id_col]``, each (key, id) at most once and at most ``cap``
+    rows per key, ranked by ``id_col``.
 
     The cap holds ACROSS appends by induction: ``mode='overwrite'`` caps
-    within the write; ``mode='append'`` first measures each key's
-    remaining capacity ``cap - n_existing`` from the stored table and
-    admits only that many incoming rows per key, so a stored key never
-    exceeds ``cap`` however many batches land on it. Earlier ingests
-    win; within one batch, the smallest id wins. Append is IDEMPOTENT:
-    a (key, id) row already stored is dropped before ranking, so a
-    re-ingested batch neither duplicates rows nor burns capacity.
+    within the write; ``mode='append'`` admits only ``cap - n_existing``
+    incoming rows per key, ``n_existing`` being the key's stored rows, so
+    a stored key never exceeds ``cap`` however many batches land on it.
+    Earlier ingests win; within one batch, the smallest id wins. Both
+    modes are IDEMPOTENT on (key, id): a row already stored, or repeated
+    within the batch (a re-delivered source file), is dropped before
+    ranking, so it neither lands twice nor burns capacity.
 
-    The capacity count and the stored id set come from one aggregation
-    grouped on exactly the bucket keys, so it runs on the bucketed
-    scan's own partitioning with no Exchange; the id set is bounded by
-    ``cap`` (the invariant), fixed-size state rather than data-sized.
-    Membership is a map-side ``array_contains`` against it, not a
-    multi-key anti-join that would re-shuffle the index. ``saveAsTable``
-    re-declares the bucket spec, which Spark checks against the stored
-    one on append."""
+    Append admits from the stored rows of the batch's own keys only:
+    one scan of the stored table is semi-joined against a broadcast of
+    the batch keys and unioned with the batch, which is hash-partitioned exactly as the
+    table is bucketed (Murmur3 on ``keys``, ``buckets`` ways), so the
+    union keeps the bucketed scan's partitioning and the batch is the
+    only side that shuffles. One sort on ``(keys, id)`` then serves two
+    window passes: ``lag`` drops every repeat of a (key, id), stored
+    rows first, and running sums give each fresh row its rank and its
+    key's stored count. No aggregate runs over the stored index, so
+    neither its size nor its number of keys sets the append's memory.
+    ``saveAsTable`` re-declares the bucket spec, which Spark checks
+    against the stored one on append."""
     cols = rows.columns
-    w = Window.partitionBy(*keys).orderBy(id_col)
+    rest = [c for c in cols if c not in keys and c != id_col]
     spark = rows.sparkSession
-    room = F.lit(cap)
+    rows = rows.withColumn("_new", F.lit(1))
     if mode == "append" and spark.catalog.tableExists(table):
-        existing = (
+        stored = (
             spark.table(table)
-            .groupBy(*keys)
-            .agg(
-                F.count(F.lit(1)).alias("n_existing"),
-                F.collect_set(F.col(id_col)).alias("stored_ids"),
-            )
+            .join(F.broadcast(rows.select(*keys)), keys, "left_semi")
+            .select(*cols)
+            .withColumn("_new", F.lit(0))
         )
-        rows = rows.join(existing, keys, "left").filter(
-            F.col("stored_ids").isNull()
-            | ~F.array_contains("stored_ids", F.col(id_col))
-        )
-        room = cap - F.coalesce(F.col("n_existing"), F.lit(0))
+        # the batch goes first: a union keeps its sides' partitioning
+        # only when the later sides' map exactly onto the first side's
+        # columns, and the semi-join's not-null filter leaves the stored
+        # side's columns unequal to its own scan's partitioning
+        rows = rows.repartition(buckets, *keys).unionByName(stored)
+    w = Window.partitionBy(*keys).orderBy(id_col, "_new", *rest)
+    upto_here = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    whole_key = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     capped = (
-        rows.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= room)
+        rows.withColumn("_prev", F.lag(id_col).over(w))
+        .filter(F.coalesce(F.col("_prev") != F.col(id_col), F.lit(True)))
+        .withColumn("_rank", F.sum("_new").over(upto_here))
+        .withColumn("_stored", F.sum(1 - F.col("_new")).over(whole_key))
+        .filter((F.col("_new") == 1) & (F.col("_rank") <= cap - F.col("_stored")))
         .select(*cols)
     )
     writer = (

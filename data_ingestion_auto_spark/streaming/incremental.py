@@ -320,9 +320,12 @@ def start_dedup_ingest_stream(
       is what makes re-probing an already-appended batch safe at all.
 
     Scale: per micro-batch cost is O(batch shingles) + one bucket-keyed
-    probe with ZERO Exchange on the index side + one capped append —
-    corpus-size-independent, which is the entire point of carrying the
-    index instead of re-deduplicating history every trigger."""
+    probe with ZERO Exchange on the index side + one capped append whose
+    shuffle, sort and window see only the batch and the stored rows of
+    the batch's own band keys (at most ``max_bucket`` per key). The
+    index is scanned, never shuffled or aggregated, so the epoch's
+    working memory is batch-sized, which is the entire point of carrying
+    the index instead of re-deduplicating history every trigger."""
     from ..operators import dedup as D
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:

@@ -20,7 +20,9 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
+from data_ingestion_auto_spark.operators import cdc_index as C
 from data_ingestion_auto_spark.operators import dedup as D
 from data_ingestion_auto_spark.operators.layout import rewrite_index
 
@@ -215,23 +217,92 @@ def test_append_mode_enforces_cap_against_stored_contents(spark, tmp_path):
     assert hot_ids == [0, 1, 2, 3, 4]
 
 
-def test_append_capacity_count_is_exchange_free(spark, tmp_path):
-    """The append-capacity aggregation groups on exactly the bucket
-    keys of the bucketed table — pin that it carries no Exchange."""
-    spark.sql("DROP TABLE IF EXISTS t_band_idx_cf")
-    df = spark.createDataFrame(
-        [(i, i % 3, f"h{i % 3}") for i in range(30)],
-        "doc_id long, band int, band_hash string",
-    )
+def _written_plans(monkeypatch) -> list:
+    """Record the physical plan of every frame handed to
+    ``DataFrameWriter.saveAsTable`` — the plan the writer really runs,
+    planned under the session conf at the moment of the write."""
+    seen = []
+    save = DataFrameWriter.saveAsTable
+
+    def spy(self, *args, **kwargs):
+        seen.append(self._df._jdf.queryExecution().executedPlan())
+        return save(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", spy)
+    return seen
+
+
+def _path_to_scan(node, table: str) -> list[str] | None:
+    """Node names from ``node`` down to the FileScan of ``table``."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        return _path_to_scan(node.executedPlan(), table)
+    if node.nodeName().startswith("Scan parquet") and node.nodeName().endswith(
+        f".{table}"
+    ):
+        return [node.nodeName()]
+    children = node.children()
+    for i in range(children.size()):
+        below = _path_to_scan(children.apply(i), table)
+        if below is not None:
+            return [node.nodeName()] + below
+    return None
+
+
+def _write_band(spark, table, ids, mode, path):
     D.write_band_index(
-        df, "t_band_idx_cf", buckets=4, path=str(tmp_path / "idx_cf")
+        spark.createDataFrame(
+            [(i, i % 3, f"h{i % 3}") for i in ids],
+            "doc_id long, band int, band_hash string",
+        ),
+        table, buckets=4, max_bucket=5, mode=mode, path=path,
     )
-    counts = (
-        spark.table("t_band_idx_cf")
-        .groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n_existing"))
+
+
+def _write_chunks(spark, table, ids, mode, path):
+    C.write_chunk_index(
+        None, table, buckets=4, max_per_chunk=5, mode=mode, path=path,
+        chunks=spark.createDataFrame(
+            [(i, f"c{i % 3}", i % 3 + 1) for i in ids],
+            "doc_id long, chash string, n_tokens long",
+        ),
     )
-    assert "Exchange" not in _plan(counts)
+
+
+@pytest.mark.parametrize("broadcast", ["broadcast_on", "broadcast_off"])
+@pytest.mark.parametrize("write", [_write_band, _write_chunks], ids=["band", "cdc"])
+def test_append_plan_is_exchange_free_on_index_side(
+    spark, tmp_path, monkeypatch, write, broadcast
+):
+    """The append plan the capped writer hands to ``saveAsTable``:
+    fixed-width work only (no object or sort-based aggregate, no
+    ``collect_set``), and the batch is the only side that shuffles —
+    one hash Exchange in both broadcast regimes (the aggregate-based
+    append needed one for the band index and two for the chunk index).
+    With broadcast off, the scale shape, the stored table is read as a
+    bucketed scan with no Exchange between it and its join."""
+    table = f"t_append_plan{write.__name__[6:]}_{broadcast}"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    loc = str(tmp_path / table)
+    write(spark, table, range(30), "overwrite", loc)
+    plans = _written_plans(monkeypatch)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    if broadcast == "broadcast_off":
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        write(spark, table, range(25, 40), "append", loc)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    (plan,) = plans
+    text = plan.toString()
+    for banned in ("ObjectHashAggregate", "SortAggregate", "collect_set"):
+        assert banned not in text, text
+    assert sum("Exchange hashpartitioning" in ln for ln in text.splitlines()) == 1, text
+    if broadcast == "broadcast_off":
+        scan = next(ln for ln in text.splitlines() if f".{table}[" in ln)
+        assert "Bucketed: true" in scan, text
+        path = _path_to_scan(plan, table)
+        below_join = path[max(i for i, n in enumerate(path) if "Join" in n):]
+        assert not any("Exchange" in n for n in below_join), path
 
 
 def test_reingest_never_self_matches(spark, banded_split, tmp_path):
@@ -290,6 +361,27 @@ def test_append_reingest_is_idempotent(spark, tmp_path):
     )
     assert spark.table("t_band_idx_idem").count() == 5
     assert spark.table("t_band_idx_idem").distinct().count() == 5
+
+
+def test_duplicate_input_rows_store_once_and_burn_no_capacity(spark, tmp_path):
+    """A batch that carries one document twice (a re-delivered source
+    file) stores its rows once: the repeat neither lands nor takes a
+    slot, so the next append still finds the key's free capacity."""
+
+    def banded(ids):
+        return spark.createDataFrame(
+            [(i, 0, "h") for i in ids], "doc_id long, band int, band_hash string"
+        )
+
+    spark.sql("DROP TABLE IF EXISTS t_band_idx_dup")
+    loc = str(tmp_path / "idx_dup")
+    D.write_band_index(banded([1, 1, 2]), "t_band_idx_dup", buckets=4, max_bucket=3, path=loc)
+    assert sorted(r.doc_id for r in spark.table("t_band_idx_dup").collect()) == [1, 2]
+    D.write_band_index(
+        banded([6, 5, 5]), "t_band_idx_dup", buckets=4, max_bucket=3,
+        mode="append", path=loc,
+    )
+    assert sorted(r.doc_id for r in spark.table("t_band_idx_dup").collect()) == [1, 2, 5]
 
 
 def test_retire_forgets_probe_hits_and_restores_capacity(spark, tmp_path):

@@ -84,6 +84,11 @@ def run(sf_dir: str, only: list[str] | None = None) -> int:
     from data_ingestion_auto_spark import plans
     from data_ingestion_auto_spark.session import get_session
 
+    # Python workers start in Spark's own working directory; they find
+    # the package only through PYTHONPATH, which the JVM passes down.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_session("parity")
     con = duck_connection(sf_dir)
     failures = 0
