@@ -37,7 +37,7 @@ Design (round-4 rework, per VERDICT r3 "Next round" #1/#3 + ADVICE):
   baseline.
 
 * **Memo cost is visible, not hidden** (round-12): the per-corpus memo
-  tables (CC/CDC/SSJoin/k-means models — plans/dedup.py, plans/ann_memo.py)
+  tables (CC/CDC/SSJoin/k-means models — memo.py, plans/ann_memo.py)
   amortize one build across many queries, which is the correct production
   accounting but could hide a build-time regression. Every run emits
   "memo_cold" (did this run build any memo) and "memo_build_sec" /
@@ -46,7 +46,7 @@ Design (round-4 rework, per VERDICT r3 "Next round" #1/#3 + ADVICE):
   measure the build path deliberately.
 
 * **Every run is memo-cold** (optimization r13): the default memo root is
-  now a per-PROCESS scratch dir (data_ingestion_auto_spark/scratch.py) —
+  now a per-PROCESS scratch dir (data_ingestion_auto_spark/memo.py) —
   nothing derived from the input tables persists across invocations, so
   each bench run computes every artifact it consumes from the parquet
   inputs and the one-time builds land inside this run's timings
@@ -144,29 +144,12 @@ def _prior_costs() -> dict[str, float]:
 def _clear_memos(sf_dir: str) -> int:
     """--cold: drop the published memos FOR THIS CORPUS so the run pays
     (and records) the one-time per-corpus build cost — the ratchet's view
-    of a memo build-time regression (round-12). Scoped to entries whose
-    name embeds this sf_dir's corpus key (ADVICE r12): the memo root is
-    a SHARED filesystem on the documented deployment, and bulk-deleting
-    every `spark_graft_*` entry would yank other corpora's memos out from
-    under concurrently-running drivers mid-read."""
-    import shutil
+    of a memo build-time regression (round-12). Scoped by the memo key's
+    corpus field (`memo.clear_corpus`): other corpora's memos in a
+    shared root survive."""
+    from data_ingestion_auto_spark.memo import clear_corpus
 
-    from data_ingestion_auto_spark.scratch import artifact_root
-
-    n = 0
-    root = artifact_root()
-    corpus = os.path.basename(sf_dir.rstrip("/"))
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return 0
-    for e in entries:
-        if e.startswith("spark_graft_") and (
-            f"_{corpus}_" in e or e.endswith(f"_{corpus}")
-        ):
-            shutil.rmtree(os.path.join(root, e), ignore_errors=True)
-            n += 1
-    return n
+    return clear_corpus(sf_dir)
 
 
 def _merge_record(prior: dict, new: dict) -> dict:
@@ -208,7 +191,7 @@ def _merge_record(prior: dict, new: dict) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from data_ingestion_auto_spark import plans
-    from data_ingestion_auto_spark.plans.dedup import MEMO_BUILD_LOG
+    from data_ingestion_auto_spark.memo import build_seconds
     from data_ingestion_auto_spark.session import get_session
 
     cold = "--cold" in sys.argv or os.environ.get("SPARK_GRAFT_BENCH_COLD") == "1"
@@ -368,9 +351,7 @@ def main() -> None:
         # (ADVICE r12): a memo rebuilt after a mid-run clear, or built
         # once per corpus under the same name, must report BOTH builds —
         # a last-write-wins dict silently under-reported memo_build_sec.
-        memo_builds: dict = {}
-        for n, t in MEMO_BUILD_LOG:
-            memo_builds[n] = round(memo_builds.get(n, 0.0) + t, 3)
+        memo_builds = build_seconds()
         detail = {
             "sf": sf_val,
             "repeats": repeats,
@@ -409,7 +390,7 @@ def main() -> None:
             and len(timings) >= len(plans.REGISTRY)
             and sf_val == 0.1
         )
-        # Optimization r13: the memo root is per-process (scratch.py), so
+        # Optimization r13: the memo root is per-process (memo.py), so
         # EVERY run is memo-cold — cross-run memo reuse is gone by design
         # (no precomputation across runs; every invocation computes from
         # the parquet inputs). The committed record is therefore cold-run

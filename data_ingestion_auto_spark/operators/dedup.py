@@ -565,9 +565,10 @@ def probe_band_index(
 
     Plan shape (machine-pinned): the probe side shuffles once into the
     index's bucket count; the index side is a bare bucketed scan with NO
-    Exchange — per-ingest cost is O(batch shingles) + O(bucket overlap),
-    independent of corpus size. The batch-internal earlier-id partners
-    come from a SEPARATE batch-vs-batch join (batch-sized on both sides)
+    Exchange, so shuffle and working memory are batch-sized. The scan
+    still reads every bucket (no bucket pruning on the batch's keys), so
+    per-ingest I/O grows with the index. The batch-internal earlier-id
+    partners come from a SEPARATE batch-vs-batch join (batch-sized on both sides)
     whose candidate hits union with the index hits AFTER the joins —
     unioning raw rows into the index side would discard its bucketed
     output partitioning and force the Exchange this layout exists to

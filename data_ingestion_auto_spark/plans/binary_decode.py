@@ -18,8 +18,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from ..memo import publish_once
 from ..sources.gribsim import decode_grid_files, encode_message
-from .dedup import publish_once
 from .helpers import sort_small
 from .registry import query
 from .warp import DENSE_CTES, _dense_grid

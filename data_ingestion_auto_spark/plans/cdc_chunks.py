@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoints import ckpt
 from ..functions.scalars import md5_hex_int_sql, md5_quarter
+from ..memo import corpus_memo
 from ..operators.cdc_index import _D, _W, cdc_chunk_rows
 from .helpers import T
 from .registry import query
@@ -69,16 +70,14 @@ def _chunk_rows(spark, sf_dir):
     Spark-side chunker lives in operators/cdc_index.py::cdc_chunk_rows
     (shared with the stored chunk-index lifecycle).
 
-    MEMOIZED per corpus version (plans/dedup.py::_corpus_memo — same
+    MEMOIZED per corpus version (`memo.corpus_memo` — same
     fingerprint/atomic-publish rules as the sig/pair/CC tables): FOUR
     registered queries consume the identical deterministic chunking of
     the identical corpus (~5 s apiece at sf0.1 recomputed); a 100 TB
     pipeline chunks at ingest and stores the chunk table once — the
     stored chunk-index lifecycle in operators/cdc_index.py is exactly
     that contract, this memo is its query-tier analogue."""
-    from .dedup import _corpus_memo
-
-    return _corpus_memo(
+    return corpus_memo(
         spark,
         sf_dir,
         "cdc_chunks",

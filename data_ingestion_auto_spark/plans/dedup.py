@@ -21,7 +21,9 @@ from pyspark.sql import functions as F
 from ..operators import dedup as D
 from ..checkpoints import ckpt
 from ..functions.scalars import digits_int, md5_hex_int
-from ..scratch import artifact_root
+from ..memo import corpus_memo
+# perfbench/ reads the build log under this name: bind the tier's list itself, never a copy
+from ..memo import MEMO_BUILD_LOG  # noqa: F401
 from .helpers import T, spread
 from .registry import query
 
@@ -35,226 +37,12 @@ sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS shingle FROM pos)
 """
 
 
-# bump when the canonical shingle→minhash→LSH→CC pipeline (or a built
-# fixture's layout) changes so a stale artifact can never serve a
-# superseded algorithm's output
-_MEMO_VERSION = "v1"
-
-# (memo name, build seconds) for every OUTERMOST memo built in this
-# process — bench.py/tools/soak.py read it to surface cold-build cost
-# (round-12: the committed bench medians measure warm-memo reads, which
-# is the right production accounting, but a build-time regression must
-# not be invisible to the ratchet). Builds NEST (components → pairs →
-# sig), so only the outermost frame logs — its wall time already
-# contains the chain, and summing nested frames would double-count
-# (first soak run showed memo_build_sec > total wall time).
-MEMO_BUILD_LOG: list[tuple[str, float]] = []
-
-# Nesting depth is PER-THREAD (optimization r13): the bench prebuilds
-# independent memo chains from a thread pool (guide §2.6 — overlap
-# independent jobs), and a process-global counter would see another
-# thread's build as "nested" and skip logging it.
-import threading as _threading
-
-_MEMO_TLS = _threading.local()
-
-
-def _corpus_entries(sf_dir: str, src_file: str) -> list[tuple[str, int, int]]:
-    """The fingerprinted file set of a source table: sorted (relpath,
-    size, mtime_ns) triples — no corpus bytes read (100 TB-safe)."""
-    import os
-
-    src = os.path.join(sf_dir, src_file)
-    entries = []
-    if os.path.isdir(src):
-        for root, _, files in os.walk(src):
-            for f in files:
-                p = os.path.join(root, f)
-                s = os.stat(p)
-                entries.append((os.path.relpath(p, src), s.st_size, s.st_mtime_ns))
-    else:
-        s = os.stat(src)
-        entries.append((os.path.basename(src), s.st_size, s.st_mtime_ns))
-    return sorted(entries)
-
-
-def _memo_base(sf_dir: str, name: str, entries: list[tuple[str, int, int]]) -> str:
-    """Memo dir path for a (name, corpus-version) pair. Fingerprint =
-    file count + sha256 over the sorted (relpath, size, mtime_ns)
-    triples (review r12): total-bytes + integer max-mtime let a corpus
-    regenerated in place within the same second with equal total size
-    serve stale memos; per-file paths + nanosecond mtimes close that
-    hole without reading corpus bytes."""
-    import hashlib
-    import os
-
-    h = hashlib.sha256()
-    for relpath, size, mtime_ns in entries:
-        h.update(f"{relpath}|{size}|{mtime_ns};".encode())
-    fp = f"{len(entries)}_{h.hexdigest()[:16]}"
-    key = f"{os.path.basename(sf_dir.rstrip('/'))}_{_MEMO_VERSION}_{fp}"
-    return os.path.join(artifact_root(), f"spark_graft_{name}_{key}")
-
-
-def find_appendable_prior(sf_dir: str, name: str, src_file: str = "documents.parquet"):
-    """Locate a PUBLISHED sibling memo of ``name`` built from an earlier
-    version of this corpus whose file manifest is a STRICT SUBSET of the
-    current file set — i.e. the corpus was APPENDED to (every old file
-    byte-identical by (path, size, mtime_ns), new files added). Returns
-    the prior memo's path, or None when no such prior exists (including
-    any in-place regeneration, which changes old files' stats and
-    correctly forces a full rebuild). The largest subset wins — the most
-    recent link of an append chain.
-
-    This is the memo tier's analogue of `append_to_ivf_index`'s
-    frozen-model contract (round-13, verdict #4): an append must not
-    force a full retrain of every per-corpus model table. Pre-r13 memos
-    carry no _manifest.json and are skipped (their corpora re-train once
-    on first append, then chain)."""
-    import json
-    import os
-
-    def data_files(ents):
-        # marker/hidden files (_SUCCESS, .crc) are rewritten by an
-        # append commit even though no old DATA file changed — they
-        # stay in the fingerprint (any change still rebuilds) but must
-        # not veto append detection
-        return {
-            t
-            for t in map(tuple, ents)
-            if not os.path.basename(t[0]).startswith(("_", "."))
-        }
-
-    entries = data_files(_corpus_entries(sf_dir, src_file))
-    root_dir = artifact_root()
-    corpus = os.path.basename(sf_dir.rstrip("/"))
-    prefix = f"spark_graft_{name}_{corpus}_{_MEMO_VERSION}_"
-    best: tuple[int, str] | None = None
-    try:
-        names = os.listdir(root_dir)
-    except OSError:
-        return None
-    for e in names:
-        if not e.startswith(prefix) or ".building-" in e:
-            continue
-        p = os.path.join(root_dir, e)
-        if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            continue
-        try:
-            with open(os.path.join(p, "_manifest.json")) as f:
-                prior = data_files(json.load(f))
-        except (OSError, ValueError):
-            continue
-        if prior and prior < entries and (best is None or len(prior) > best[0]):
-            best = (len(prior), p)
-    return best[1] if best else None
-
-
-def publish_once(sf_dir: str, name: str, write, src_file: str = "documents.parquet") -> str:
-    """Build-once publication of a derived artifact, shared by the memo
-    tables and the built input fixtures: key = sf-dir basename + the
-    ``src_file`` table's file fingerprint (`_memo_base`, so a changed
-    source rebuilds) + _MEMO_VERSION (so a changed ALGORITHM rebuilds).
-    Returns the published dir if its ``_SUCCESS`` exists; otherwise
-    ``write(tmp)`` fills a PRIVATE ``.building-<uuid>`` dir, which gets
-    ``_manifest.json`` + ``_SUCCESS`` and is renamed over the published
-    path, so a lost race can never leak straggler files into the
-    winner's dir. Location: `artifact_root()` ($SPARK_GRAFT_CC_MEMO_DIR
-    MUST be a shared filesystem on a real cluster)."""
-    import json
-    import os
-    import shutil
-    import uuid
-
-    entries = _corpus_entries(sf_dir, src_file)
-    base = _memo_base(sf_dir, name, entries)
-    if os.path.exists(os.path.join(base, "_SUCCESS")):
-        return base
-    tmp = f"{base}.building-{uuid.uuid4().hex}"
-    try:
-        os.makedirs(tmp)
-        write(tmp)
-        # the manifest rides inside the artifact (underscore files are
-        # invisible to Spark's file index): `find_appendable_prior`
-        # needs it to recognize a corpus APPEND and reuse the frozen
-        # model instead of retraining (round-13, verdict #4)
-        with open(os.path.join(tmp, "_manifest.json"), "w") as f:
-            json.dump([list(t) for t in entries], f)
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    except BaseException:
-        # a build that fails (or is watchdog-cancelled) mid-write must
-        # not leak its corpus-sized private dir into the shared root
-        # (ADVICE r12)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    try:
-        os.rename(tmp, base)
-    except OSError:
-        # lost a concurrent-build race only if the winner actually
-        # published (review r12: a bare OSError swallow could return a
-        # dir that never materialized — e.g. a permissions failure)
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(base, "_SUCCESS")):
-            raise
-    return base
-
-
-def _corpus_memo(
-    spark,
-    sf_dir: str,
-    name: str,
-    build,
-    src_file: str = "documents.parquet",
-    partitions: int | None = None,
-):
-    """A per-corpus-version memo table: ``build()`` returns the
-    DataFrame, written as parquet through `publish_once` (keying,
-    private build dir, manifest and rename live there) on first call
-    and read back thereafter. ``src_file`` picks the fingerprinted
-    source table — documents for the text-dedup memos, embeddings for
-    the ANN/semdedup model tables (plans/ann_memo.py).
-    ``partitions`` guarantees the memo comes back with at least that
-    READ parallelism (round-12 soak catch): a small memo collapses to a
-    handful of read partitions — AQE coalesces the build to 1-3 files,
-    and even a many-file layout is PACKED back into one split by
-    maxPartitionBytes — and a consumer whose join EXPANDS the memoized
-    rows (the ANN probe joins multiply each list row by its probing
-    queries) then runs the whole expansion in 1-3 tasks: the zipf-10×
-    soak sat a single 100%-one-core task for >10 min. The build writes
-    ``partitions`` files, and the read applies an EXPLICIT repartition
-    (which AQE never coalesces) only when the scan came back narrower —
-    a no-op at real scale where the memo spans ≥ that many splits, a
-    trivial shuffle of small data exactly when small data is the
-    problem; content is unchanged either way."""
-
-    def write(tmp: str) -> None:
-        import time as _time
-
-        t0 = _time.perf_counter()
-        depth = getattr(_MEMO_TLS, "d", 0)
-        _MEMO_TLS.d = depth + 1
-        try:
-            df = build()
-            if partitions:
-                df = df.repartition(partitions)
-            df.write.mode("overwrite").parquet(tmp)
-        finally:
-            _MEMO_TLS.d = depth
-        if depth == 0:
-            MEMO_BUILD_LOG.append((name, _time.perf_counter() - t0))
-
-    out = spark.read.parquet(publish_once(sf_dir, name, write, src_file))
-    if partitions and out.rdd.getNumPartitions() < partitions:
-        out = out.repartition(partitions)
-    return out
-
-
 def corpus_minhash_sig(spark, sf_dir: str):
     """MEMOIZED canonical MinHash signature table — (doc_id, mh0..mh15),
     16 perms over character-5-gram shingles. The signature is a
     per-corpus-version artifact every near-dup consumer shares; a 100 TB
     pipeline computes it once at ingest and joins it thereafter."""
-    return _corpus_memo(
+    return corpus_memo(
         spark,
         sf_dir,
         "sig",
@@ -271,7 +59,7 @@ def corpus_lsh_pairs(spark, sf_dir: str):
     coefficient, assortativity, dup-source attribution) and by the CC
     build below; the registered `minhash_lsh_candidates` query still
     computes the pipeline LIVE — it's the definition this memo caches."""
-    return _corpus_memo(
+    return corpus_memo(
         spark,
         sf_dir,
         "pairs",
@@ -286,7 +74,7 @@ def corpus_lsh_pairs_banded(spark, sf_dir: str):
     count_bands variant of `corpus_lsh_pairs` (shared-band count is the
     signature-agreement rank the verify tier budgets by). Consumed by
     `neardup_levenshtein_confirm` and `lsh_scurve_calibration`."""
-    return _corpus_memo(
+    return corpus_memo(
         spark,
         sf_dir,
         "pairs_banded",
@@ -315,10 +103,10 @@ def corpus_components(spark, sf_dir: str):
 
     Returns (node, component) — exactly connected_components' output, so
     every consumer's result (and hash) is unchanged. (Keying, atomic
-    publish and location rules live in `publish_once`; the build chains
+    publish and location rules live in `memo.publish_once`; the build chains
     off the memoized pair list, so a cold cache materializes sig → pairs
     → components in one pass each.)"""
-    return _corpus_memo(
+    return corpus_memo(
         spark,
         sf_dir,
         "cc",

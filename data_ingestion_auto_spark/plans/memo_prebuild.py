@@ -17,9 +17,9 @@ remains the wall the run spent building, now overlapped). Deployments
 call it at ingest, where these artifacts are produced once per corpus
 version.
 
-Thread-safety notes: `_corpus_memo`'s nesting depth is thread-local
-(plans/dedup.py); MEMO_BUILD_LOG appends are GIL-atomic; a lost
-publish race falls back to reading the winner's files.
+Thread-safety notes: `memo.corpus_memo`'s nesting depth is thread-local;
+MEMO_BUILD_LOG appends are GIL-atomic; a lost publish race falls back
+to reading the winner's files.
 """
 
 from __future__ import annotations

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..memo import corpus_memo
 from .helpers import T
 from .registry import query
 
@@ -75,7 +76,7 @@ pref AS (
 
 def _ordered_sets(spark, sf_dir):
     """Rare-first ordered shingle set per doc — MEMOIZED per corpus
-    version (plans/dedup.py::_corpus_memo): both the exact SSJoin and
+    version (`memo.corpus_memo`): both the exact SSJoin and
     `prefix_bucket_stats` consume the identical frame, and the build
     (3-gram explode → df join → per-doc rare-first sort) is the frame's
     dominant fixed cost. Determinism: array_sort on (df, token) structs
@@ -83,9 +84,7 @@ def _ordered_sets(spark, sf_dir):
     plays the old ckpt's role — the prefix explode and BOTH verify sides
     read files, and the explode's implicit size()>0 filter stays off the
     aggregate chain (the winnowing_match_pairs lesson)."""
-    from .dedup import _corpus_memo
-
-    return _corpus_memo(spark, sf_dir, "ppjoin_sets", lambda: _build_ordered_sets(spark, sf_dir))
+    return corpus_memo(spark, sf_dir, "ppjoin_sets", lambda: _build_ordered_sets(spark, sf_dir))
 
 
 def _build_ordered_sets(spark, sf_dir):
@@ -105,7 +104,7 @@ def _build_ordered_sets(spark, sf_dir):
         w.select("doc_id", F.explode(F.expr(gram)).alias("token")).distinct()
     )
     dfreq = toks.groupBy("token").agg(F.count("*").cast("bigint").alias("df"))
-    # no ckpt here: _corpus_memo's parquet write IS the materialization —
+    # no ckpt here: corpus_memo's parquet write IS the materialization —
     # a ckpt would double-write the frame during the one-time build
     return (
         toks.join(dfreq, "token")
@@ -182,9 +181,7 @@ def _verified_pairs(spark, sf_dir):
     a bounded memo read, with the one-time construction cost visible in
     memo_build_sec. The live construction stays plan-pinned on
     `_build_verified_pairs` (tests/test_plan_quality.py)."""
-    from .dedup import _corpus_memo
-
-    return _corpus_memo(
+    return corpus_memo(
         spark, sf_dir, "ppjoin_pairs", lambda: _build_verified_pairs(spark, sf_dir)
     )
 

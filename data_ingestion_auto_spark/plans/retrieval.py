@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..checkpoints import ckpt
+from ..memo import corpus_memo
 from .helpers import T, spread
 from .registry import query
 
@@ -187,7 +188,6 @@ def corpus_winnowing_fpp(spark, sf_dir):
     The ckpt-before-explode rule is inherited structurally: consumers
     explode a PARQUET scan, so the winnowing lambdas can never be
     re-evaluated under a Generate (the round-9 O(grams²) pathology)."""
-    from .dedup import _corpus_memo
 
     def build():
         cols = _win_spark_cols()
@@ -205,7 +205,7 @@ def corpus_winnowing_fpp(spark, sf_dir):
             ).alias("fpp"),
         )
 
-    return _corpus_memo(spark, sf_dir, "winfp", build)
+    return corpus_memo(spark, sf_dir, "winfp", build)
 
 
 def _win_cte() -> str:

@@ -9,8 +9,8 @@ This is the production shape, same as the ANN model tier
 ingest, materializes the boundary/rank table, and every
 repartitionByRange / skew-audit / quantile-estimate query thereafter
 reads the stored frame. The memo key is the LINEITEM table's file
-fingerprint (count + per-file path/size/mtime_ns hash, plans/dedup.py
-`_corpus_memo`), so a regenerated corpus rebuilds; results are
+fingerprint (count + per-file path/size/mtime_ns hash,
+`memo.corpus_memo`), so a regenerated corpus rebuilds; results are
 bit-identical to the live derivation (the sample predicate is a pure
 md5 function of the row key; doubles roundtrip parquet exactly), so
 every consumer's oracle hash is unchanged.
@@ -44,12 +44,12 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.scalars import md5_hex_int
-from .dedup import _corpus_memo
+from ..memo import corpus_memo
 from .helpers import T
 
 
 def _li_memo(spark, sf_dir, name, build, partitions=None):
-    return _corpus_memo(
+    return corpus_memo(
         spark, sf_dir, name, build, src_file="lineitem.parquet", partitions=partitions
     )
 
@@ -90,7 +90,7 @@ def lineitem_sample_ranked(spark, sf_dir):
     l_linenumber) tuples of the h % 8 sample, dense-ranked 1..n —
     the table equi-depth partition planning filters for its edge
     ranks. Builds ON TOP of the `lisamp` memo (nested builds log only
-    the outermost frame, plans/dedup.py MEMO_BUILD_LOG)."""
+    the outermost frame, `memo.MEMO_BUILD_LOG`)."""
     from ..operators.suffix import _adaptive_np, _dense_rank
 
     def build():

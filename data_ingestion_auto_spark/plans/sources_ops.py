@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .dedup import publish_once
+from ..memo import publish_once
 from .helpers import T
 from .registry import query
 

@@ -77,6 +77,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..memo import corpus_memo
 from .helpers import T
 from .registry import query
 
@@ -241,9 +242,7 @@ def suffix_repeat_spans(spark, sf_dir):
     the paper's own deployment, so production computes the spans at
     ingest and every consumer joins the artifact — bit-identical to the
     live construction (exact integer spans), oracle hash unchanged."""
-    from .dedup import _corpus_memo
-
-    reps = _corpus_memo(
+    reps = corpus_memo(
         spark,
         sf_dir,
         f"sareps_direct_t{_T}",
@@ -335,9 +334,7 @@ def suffix_repeat_spans_unbounded(spark, sf_dir):
     (the construction-independent logical spec). The repeat-span table
     is MEMOIZED per corpus version under its OWN key (round-12) — each
     construction still runs, once, at build time."""
-    from .dedup import _corpus_memo
-
-    reps = _corpus_memo(
+    reps = corpus_memo(
         spark,
         sf_dir,
         f"sareps_pd_t{_T}",

@@ -31,8 +31,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .helpers import T, spread
 from ..checkpoints import ckpt
+from ..memo import corpus_memo
+from .helpers import T, spread
 from .registry import query
 
 _R = 6  # merge rounds learned (fixed so the oracle can unroll)
@@ -303,14 +304,12 @@ ORDER BY lang
 def corpus_bpe_vocab(spark, sf_dir):
     """MEMOIZED trained-tokenizer vocab — (word, n_sym) after the _R
     BPE merges are applied to the word-frequency frame, keyed on the
-    documents fingerprint (plans/dedup.py::_corpus_memo). This is the
+    documents fingerprint (`memo.corpus_memo`). This is the
     artifact a deployment ships with the tokenizer: trained once per
     corpus version at ingest, joined by every encode-side consumer.
     Content is exactly the live derivation (the training loop below is
     the one `bpe_merge_steps` replays), so consumer hashes are
     unchanged."""
-    from .dedup import _corpus_memo
-
     def build():
         docs = spread(T(spark, sf_dir, "documents"))
         words = (
@@ -347,7 +346,7 @@ def corpus_bpe_vocab(spark, sf_dir):
             "word", F.size(F.split("sym", " ")).cast("bigint").alias("n_sym")
         )
 
-    return _corpus_memo(spark, sf_dir, f"bpevocab_r{_R}", build)
+    return corpus_memo(spark, sf_dir, f"bpevocab_r{_R}", build)
 
 
 @query(

@@ -477,7 +477,9 @@ def start_cdc_ingest_stream(
 
     Scale: per micro-batch cost is O(batch tokens) chunking + one
     chash-keyed probe with zero Exchange on the index side + one capped
-    append — corpus-size-independent, like the other two loops."""
+    append: shuffle and working memory are batch-sized, but the probe
+    and the append each scan every bucket of the index, so per-epoch
+    I/O grows with the index."""
     from ..operators import cdc_index as CI
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
@@ -551,7 +553,7 @@ def start_search_ingest_stream(
     index built on everything).
 
     Per-epoch cost: batch postings + one bucket-pruned probe over
-    |terms| lists — corpus-size-independent, like the other loops."""
+    |terms| lists — corpus-size-independent."""
     from ..operators import postings as P
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:

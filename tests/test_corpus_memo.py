@@ -1,5 +1,5 @@
-"""Staleness + publication contract of `publish_once` (plans/dedup.py)
-and its users, the `_corpus_memo` tables and the built input fixtures:
+"""Staleness + publication contract of `publish_once` (memo.py)
+and its users, the `corpus_memo` tables and the built input fixtures:
 the key carries the source table's file fingerprint, so a changed
 corpus REBUILDS instead of serving stale values, and publication is
 atomic via private build dirs."""
@@ -14,7 +14,7 @@ from urllib.parse import urlparse
 import pytest
 from pyspark.sql import functions as F
 
-from data_ingestion_auto_spark.plans.dedup import _corpus_memo, publish_once
+from data_ingestion_auto_spark.memo import corpus_memo, publish_once
 
 
 def _mini_sf(spark, tmp_path, name, rows):
@@ -39,11 +39,11 @@ def test_changed_corpus_rebuilds_unchanged_corpus_reuses(spark, tmp_path, monkey
             "doc_id", F.length("text").alias("n")
         )
 
-    got = _corpus_memo(spark, sf, "t1", build)
+    got = corpus_memo(spark, sf, "t1", build)
     assert sorted((r.doc_id, r.n) for r in got.collect()) == [(1, 2), (2, 2)]
     assert builds == [1]
     # unchanged corpus: second call reuses the published memo (no rebuild)
-    _corpus_memo(spark, sf, "t1", build).collect()
+    corpus_memo(spark, sf, "t1", build).collect()
     assert builds == [1]
 
     # changed corpus (same directory name, new content → new fingerprint):
@@ -54,7 +54,7 @@ def test_changed_corpus_rebuilds_unchanged_corpus_reuses(spark, tmp_path, monkey
     ).coalesce(1).write.mode("overwrite").parquet(src + ".new")
     shutil.rmtree(src)
     os.rename(src + ".new", src)
-    got2 = _corpus_memo(spark, sf, "t1", build)
+    got2 = corpus_memo(spark, sf, "t1", build)
     assert builds == [1, 1]
     assert sorted((r.doc_id, r.n) for r in got2.collect()) == [(1, 4), (2, 2), (3, 1)]
 
@@ -75,7 +75,7 @@ def test_same_second_same_size_regeneration_rebuilds(spark, tmp_path, monkeypatc
         builds.append(1)
         return spark.read.parquet(src).select("doc_id", "text")
 
-    first = {(r.doc_id, r.text) for r in _corpus_memo(spark, sf, "t3", build).collect()}
+    first = {(r.doc_id, r.text) for r in corpus_memo(spark, sf, "t3", build).collect()}
     assert first == {(1, "ab"), (2, "cd")}
     # regenerate with the same row widths (≈ same bytes) and force every
     # file's mtime to a FIXED whole second so the old bytes+max-int-mtime
@@ -90,7 +90,7 @@ def test_same_second_same_size_regeneration_rebuilds(spark, tmp_path, monkeypatc
         for f in files:
             os.utime(os.path.join(root, f), (stamp, stamp))
     os.utime(src, (stamp, stamp))
-    got2 = {(r.doc_id, r.text) for r in _corpus_memo(spark, sf, "t3", build).collect()}
+    got2 = {(r.doc_id, r.text) for r in corpus_memo(spark, sf, "t3", build).collect()}
     assert builds == [1, 1]
     assert got2 == {(1, "xy"), (2, "zw")}
 
@@ -151,19 +151,19 @@ def test_wide_memo_read_parallelism_guaranteed(spark, tmp_path, monkeypatch):
     def build():
         return spark.read.parquet(f"{sf}/documents.parquet")
 
-    got = _corpus_memo(spark, sf, "t5", build, partitions=n)
+    got = corpus_memo(spark, sf, "t5", build, partitions=n)
     assert got.rdd.getNumPartitions() >= n
     assert got.count() == 100
     # warm read honors the same guarantee
-    again = _corpus_memo(spark, sf, "t5", build, partitions=n)
+    again = corpus_memo(spark, sf, "t5", build, partitions=n)
     assert again.rdd.getNumPartitions() >= n
     # and a no-partitions memo keeps its natural (packed) layout
-    plain = _corpus_memo(spark, sf, "t5b", build)
+    plain = corpus_memo(spark, sf, "t5b", build)
     assert plain.count() == 100
 
 
 def publish_kind(kind, spark, sf, name, build_hook=lambda: None) -> str:
-    """Publish one artifact through a parquet `_corpus_memo` ("parquet")
+    """Publish one artifact through a parquet `corpus_memo` ("parquet")
     or a plain-file `publish_once` writer ("files"); ``build_hook`` runs
     inside the build (for "files", after the files are written). Returns
     the published dir."""
@@ -173,7 +173,7 @@ def publish_kind(kind, spark, sf, name, build_hook=lambda: None) -> str:
             build_hook()
             return spark.read.parquet(f"{sf}/documents.parquet")
 
-        df = _corpus_memo(spark, sf, name, build)
+        df = corpus_memo(spark, sf, name, build)
         (root,) = {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
         return root
 

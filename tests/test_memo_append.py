@@ -1,6 +1,6 @@
 """Frozen-model memo lifecycle under corpus APPENDS (round-13, verdict
 #4): appending files to the embeddings corpus changes every
-`_corpus_memo` fingerprint, but must NOT retrain the k-means/PQ models —
+`corpus_memo` fingerprint, but must NOT retrain the k-means/PQ models —
 the quantizer freezes at its trained version (the `append_to_ivf_index`
 contract, operators/ivf.py:277) and only the new rows are assigned.
 A full retrain is forced exactly when the corpus is regenerated in place
@@ -22,7 +22,7 @@ from data_ingestion_auto_spark.plans.ann_memo import (
     kml_model,
     kmg_model,
 )
-from data_ingestion_auto_spark.plans.dedup import _corpus_memo, find_appendable_prior
+from data_ingestion_auto_spark.memo import corpus_memo, find_appendable_prior
 
 
 def _write_corpus(spark, sf, rows, mode="overwrite"):
@@ -51,7 +51,7 @@ def test_find_appendable_prior_detects_append_not_regeneration(
 ):
     sf = _fresh(tmp_path, monkeypatch, "sfP")
     _write_corpus(spark, sf, _rows(range(10)))
-    got = _corpus_memo(
+    got = corpus_memo(
         spark,
         sf,
         "probe",

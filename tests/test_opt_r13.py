@@ -1,6 +1,5 @@
 """Focused tests for round-13 optimization internals: the integer-lane
-Hamming twin, the presentation-sort helpers (order equivalence), and the
-thread-local memo build logging that the concurrent prebuild relies on.
+Hamming twin and the presentation-sort helpers (order equivalence).
 """
 
 from __future__ import annotations
@@ -51,57 +50,3 @@ def test_sort_small_and_sort_cut_preserve_global_order(spark):
     assert [tuple(r) for r in sort_small(df, "k", "v").collect()] == want
     assert [tuple(r) for r in sort_cut(df, "k", "v").collect()] == want
     assert sort_small(df, "k", "v").rdd.getNumPartitions() == 1
-
-
-def test_memo_build_log_is_per_thread(spark, tmp_path):
-    """Two threads building DISTINCT memos concurrently must BOTH log as
-    outermost builds (the old process-global depth counter would treat
-    the second thread's build as nested and skip it), and a nested build
-    inside one thread must still log only the outer frame."""
-    import threading
-
-    from data_ingestion_auto_spark.plans import dedup as PD
-
-    sf_dir = str(tmp_path / "sf")
-    (tmp_path / "sf").mkdir()
-    src = tmp_path / "sf" / "documents.parquet"
-    spark.range(5).selectExpr("id AS doc_id", "'x' AS text").coalesce(1).write.parquet(
-        str(src)
-    )
-
-    import os
-
-    # save/restore rather than unconditional del (ADVICE r13): a
-    # surrounding environment that set the memo dir must get its value
-    # back, and later tests in this process must not see ours
-    prior_memo_dir = os.environ.get("SPARK_GRAFT_CC_MEMO_DIR")
-    os.environ["SPARK_GRAFT_CC_MEMO_DIR"] = str(tmp_path / "memos")
-    before = len(PD.MEMO_BUILD_LOG)
-    try:
-        barrier = threading.Barrier(2)
-
-        def build(name):
-            def inner():
-                barrier.wait(timeout=30)
-                if name == "t13b_outer":
-                    # nested build inside this thread: only the OUTER
-                    # frame may log
-                    PD._corpus_memo(
-                        spark, sf_dir, "t13b_inner",
-                        lambda: spark.range(2).toDF("v"),
-                    )
-                return spark.range(3).toDF("v")
-
-            PD._corpus_memo(spark, sf_dir, name, inner)
-
-        t1 = threading.Thread(target=build, args=("t13a",))
-        t2 = threading.Thread(target=build, args=("t13b_outer",))
-        t1.start(); t2.start(); t1.join(30); t2.join(30)
-    finally:
-        if prior_memo_dir is None:
-            del os.environ["SPARK_GRAFT_CC_MEMO_DIR"]
-        else:
-            os.environ["SPARK_GRAFT_CC_MEMO_DIR"] = prior_memo_dir
-    logged = dict(PD.MEMO_BUILD_LOG[before:])
-    assert "t13a" in logged and "t13b_outer" in logged
-    assert "t13b_inner" not in logged

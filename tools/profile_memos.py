@@ -1,5 +1,6 @@
-"""Time each per-corpus memo build individually (fresh process = all
-cold). Prints one line per build phase; MEMO_BUILD_LOG rows at the end.
+"""Time each memo chain of `plans.memo_prebuild.prebuild_chains` serially
+(fresh process = all cold). Prints one line per chain, then the per-memo
+build log.
 
 Usage: python tools/profile_memos.py [sf_dir]
 """
@@ -15,70 +16,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    from data_ingestion_auto_spark import plans  # noqa: F401 — registers queries
-    from data_ingestion_auto_spark.plans import dedup as PD
+    from data_ingestion_auto_spark.memo import MEMO_BUILD_LOG
+    from data_ingestion_auto_spark.plans.memo_prebuild import prebuild_chains
     from data_ingestion_auto_spark.session import get_session
 
     spark = get_session("profile_memos")
     spark.sql("select 1").collect()  # JVM warmup
 
-    steps = []
-
-    def t(name, fn):
+    for name, thunks in prebuild_chains(spark, sf_dir):
         t0 = time.perf_counter()
         spark.sparkContext.setJobDescription(f"memo:{name}")
-        out = fn()
-        dt = time.perf_counter() - t0
-        steps.append((name, dt))
-        print(f"{name}: {dt:.2f}s", flush=True)
-        return out
-
-    # dedup chain (nested: sig -> pairs -> cc)
-    t("sig", lambda: PD.corpus_minhash_sig(spark, sf_dir))
-    t("pairs", lambda: PD.corpus_lsh_pairs(spark, sf_dir))
-    t("pairs_banded", lambda: PD.corpus_lsh_pairs_banded(spark, sf_dir))
-    t("cc", lambda: PD.corpus_components(spark, sf_dir))
-
-    # ppjoin
-    from data_ingestion_auto_spark.plans import ppjoin as PPJ
-
-    t("ppjoin_sets", lambda: PPJ._ordered_sets(spark, sf_dir))
-    t("ppjoin_pairs", lambda: PPJ._verified_pairs(spark, sf_dir))
-
-    # suffix-array span tables
-    from data_ingestion_auto_spark.plans import substring_sa as SA
-
-    t("sareps_direct", lambda: plans.REGISTRY["suffix_repeat_spans"].spark(spark, sf_dir))
-    t("sareps_pd", lambda: plans.REGISTRY["suffix_repeat_spans_unbounded"].spark(spark, sf_dir))
-
-    # sampling tier
-    from data_ingestion_auto_spark.plans import sample_memo as SM
-
-    t("lisamp", lambda: SM.lineitem_hash_sample(spark, sf_dir))
-    t("lisampr", lambda: SM.lineitem_sample_ranked(spark, sf_dir))
-    t("liedges32", lambda: SM.lineitem_plan_edges(spark, sf_dir, 32))
-    t("liexq", lambda: SM.lineitem_exact_group_quantiles(spark, sf_dir))
-    t("construct:partition_plan_histogram", lambda: plans.REGISTRY["partition_plan_histogram"].spark(spark, sf_dir))
-
-    # cdc chunks
-    t("cdc_chunks", lambda: plans.REGISTRY["cdc_chunk_dedup"].spark(spark, sf_dir))
-
-    # ann model tables — constructing the consumer queries builds them
-    for q in (
-        "semdedup_clusters",
-        "semdedup_hier",
-        "hierarchical_kmeans_assign",
-        "incremental_ann_assign",
-        "pq_adc_topk",
-        "ivfpq_adc_topk",
-        "ann_ivf_probe",
-    ):
-        t(f"construct:{q}", lambda q=q: plans.REGISTRY[q].spark(spark, sf_dir))
+        for th in thunks:
+            th()
+        print(f"{name}: {time.perf_counter() - t0:.2f}s", flush=True)
 
     print("\nMEMO_BUILD_LOG:")
-    for n, dt in PD.MEMO_BUILD_LOG:
+    for n, dt in MEMO_BUILD_LOG:
         print(f"  {n}: {dt:.2f}s")
-    print(f"total build: {sum(t for _, t in PD.MEMO_BUILD_LOG):.2f}s")
+    print(f"total build: {sum(t for _, t in MEMO_BUILD_LOG):.2f}s")
 
 
 if __name__ == "__main__":

@@ -173,7 +173,7 @@ def _run_once(spark, name: str, sf_dir: str) -> tuple[float, float]:
     ratio must be computed on the WARM portion, and the build cost
     reported on its own line (it has its own, separately-read scaling)."""
     from data_ingestion_auto_spark import plans
-    from data_ingestion_auto_spark.plans.dedup import MEMO_BUILD_LOG
+    from data_ingestion_auto_spark.memo import MEMO_BUILD_LOG
 
     n0 = len(MEMO_BUILD_LOG)
     t0 = time.perf_counter()
@@ -236,18 +236,10 @@ def main() -> None:
         # honest cold measurement. Scoped by corpus key (ADVICE r12):
         # the memo root is shared; unrelated corpora's memos must
         # survive a soak's cold-clear.
-        from data_ingestion_auto_spark.scratch import artifact_root
+        from data_ingestion_auto_spark.memo import clear_corpus
 
-        root = artifact_root()
-        corpora = {
-            os.path.basename(p.rstrip("/"))
-            for p in (target, os.environ.get("SPARK_SOAK_BASE", "/root/testdata/sf0.1"))
-        }
-        for e in os.listdir(root) if os.path.isdir(root) else []:
-            if e.startswith("spark_graft_") and any(
-                f"_{c}_" in e or e.endswith(f"_{c}") for c in corpora
-            ):
-                shutil.rmtree(os.path.join(root, e), ignore_errors=True)
+        for corpus in {target, os.environ.get("SPARK_SOAK_BASE", "/root/testdata/sf0.1")}:
+            clear_corpus(corpus)
     queries = args[1:] or LADDER
     from data_ingestion_auto_spark.session import get_session
 
