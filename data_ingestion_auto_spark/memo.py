@@ -16,7 +16,7 @@ One module owns the whole tier:
   where ``corpus`` is the sf-dir basename, ``version`` is
   `_MEMO_VERSION` and ``fp`` is the source table's file fingerprint;
 - publication (`publish_once`): private build dir, ``_manifest.json``,
-  ``_SUCCESS``, atomic rename;
+  the ``_corpus`` path record, ``_SUCCESS``, atomic rename;
 - parquet memo tables (`corpus_memo`) with the per-thread nesting rule
   behind `MEMO_BUILD_LOG`;
 - corpus appends: `find_appendable_prior` and the frozen-model memo
@@ -60,6 +60,11 @@ MEMO_BUILD_LOG: list[tuple[str, float]] = []
 _MEMO_TLS = threading.local()
 
 _PROCESS_SCRATCH: list[str] = []
+
+# the resolved corpus path, recorded in every published memo for
+# `clear_corpus`
+_CORPUS_RECORD = "_corpus"
+
 
 def artifact_root() -> str:
     """Root for derived artifacts (memo tables, built fixtures):
@@ -137,18 +142,35 @@ def match_key(entry: str, sf_dir: str, name: str | None = None) -> str | None:
     return m.group(1) if m else None
 
 
+def _recorded_corpus(memo_dir: str) -> str | None:
+    """The resolved corpus path `publish_once` recorded in a published
+    memo, or None for a memo published before the record existed."""
+    try:
+        with open(os.path.join(memo_dir, _CORPUS_RECORD)) as f:
+            return f.read()
+    except OSError:
+        return None
+
+
 def clear_corpus(sf_dir: str) -> int:
     """Drop the published memos of corpus ``sf_dir`` from the memo
     root; returns how many. Scoped by the key's corpus field (ADVICE
     r12): the root is a SHARED filesystem on the documented deployment,
     and other corpora's memos must survive under concurrently-running
-    drivers."""
+    drivers. The key alone cannot split name from corpus (`match_key`),
+    so a memo that records its corpus path is dropped only when that
+    path is ``sf_dir``'s: corpus ``sf0.1`` keeps ``run_sf0.1``'s memos.
+    A memo without the record falls back to the key match."""
     root = artifact_root()
     try:
         entries = os.listdir(root)
     except OSError:
         return 0
-    gone = [e for e in entries if match_key(e, sf_dir)]
+    path = os.path.realpath(sf_dir)
+    gone = [
+        e for e in entries
+        if match_key(e, sf_dir) and _recorded_corpus(os.path.join(root, e)) in (None, path)
+    ]
     for e in gone:
         shutil.rmtree(os.path.join(root, e), ignore_errors=True)
     return len(gone)
@@ -208,7 +230,8 @@ def publish_once(sf_dir: str, name: str, write, src_file: str = "documents.parqu
     ``src_file`` table rebuilds, and a changed _MEMO_VERSION — a changed
     ALGORITHM — rebuilds). Returns the published dir if its ``_SUCCESS``
     exists; otherwise ``write(tmp)`` fills a PRIVATE ``.building-<uuid>``
-    dir, which gets ``_manifest.json`` + ``_SUCCESS`` and is renamed over
+    dir, which gets ``_manifest.json``, the resolved corpus path
+    (``_corpus``, read by `clear_corpus`) and ``_SUCCESS``, and is renamed over
     the published path, so a lost race can never leak straggler files
     into the winner's dir. Location: `artifact_root()`."""
     entries = _corpus_entries(sf_dir, src_file)
@@ -225,6 +248,8 @@ def publish_once(sf_dir: str, name: str, write, src_file: str = "documents.parqu
         # model instead of retraining (round-13, verdict #4)
         with open(os.path.join(tmp, "_manifest.json"), "w") as f:
             json.dump([list(t) for t in entries], f)
+        with open(os.path.join(tmp, _CORPUS_RECORD), "w") as f:
+            f.write(os.path.realpath(sf_dir))
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
     except BaseException:
         # a build that fails (or is watchdog-cancelled) mid-write must

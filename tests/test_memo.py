@@ -58,6 +58,28 @@ def test_clear_memos_scoped_to_corpus(tmp_path, monkeypatch, corpus):
     assert unrelated.exists()
 
 
+def test_clear_keeps_a_corpus_whose_name_ends_with_this_one(tmp_path, monkeypatch):
+    """Corpora ``sf0.1`` and ``run_sf0.1`` share one memo root. The key
+    of ``run_sf0.1``'s memo ``sig`` also parses as memo ``sig_run`` of
+    ``sf0.1``, so the cold-clear of ``sf0.1`` goes by the corpus path
+    each memo recorded at publication; a memo with no record (published
+    before it existed) keeps the key match."""
+    monkeypatch.setenv("SPARK_GRAFT_CC_MEMO_DIR", str(tmp_path / "memo"))
+    corpora = [tmp_path / "d" / "sf0.1", tmp_path / "e" / "run_sf0.1"]
+    for sf in corpora:
+        sf.mkdir(parents=True)
+        (sf / "documents.parquet").write_bytes(b"x")
+    mine, theirs = (memo.publish_once(str(sf), "sig", lambda tmp: None) for sf in corpora)
+    assert memo.match_key(os.path.basename(theirs), str(corpora[0])) is not None
+    unrecorded = tmp_path / "memo" / memo.memo_key("sig", str(corpora[1]), _ENTRIES)
+    unrecorded.mkdir()
+
+    assert memo.clear_corpus(f"{corpora[0]}/") == 2
+    assert not os.path.exists(mine) and not unrecorded.exists()
+    assert os.path.exists(os.path.join(theirs, "_SUCCESS"))
+    assert memo.clear_corpus(str(corpora[1])) == 1
+
+
 @pytest.mark.parametrize("kind", ["parquet", "files"])
 def test_failed_memo_build_cleans_private_dir(spark, tmp_path, monkeypatch, kind):
     """A build that raises mid-way must not leak its corpus-sized
